@@ -18,7 +18,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import threading
 import uuid
 from math import ceil
 from typing import Any
@@ -31,22 +30,66 @@ from demo_iceberg_permanent_delete_spark.lake.metadata import (
     CONTENT_POSITION_DELETES,
     ManifestEntry,
 )
+from demo_iceberg_permanent_delete_spark.session import SessionConfOverride
 
 TARGET_FILE_SIZE_BYTES = 134_217_728  # 128 MiB — the reference's compaction
 # target (notebooks/iceberg_pii_deletion_demo.py:428,443)
+
+# The lake layer's one driver-collect policy. A Spark frame of at most
+# DRIVER_MAX_ROWS rows may be collected to the driver as one Arrow batch
+# and written or folded there with pyarrow, skipping a Spark write job
+# (~0.25 s of commit-protocol fixed cost at any size, measured); past it
+# the executor path runs, which is the only one that keeps driver memory
+# bounded on large inputs. Sites that already hold a metadata row count
+# (manifest record counts) compare it against the same budget with
+# fits_driver(); every driver-or-executor choice on a Spark frame goes
+# through collect_if_small().
+DRIVER_MAX_ROWS = 100_000
+# Without a row bound, a plan made only of _ROW_PRESERVING shapes has at
+# most the rows of its inputs, so the optimizer's size estimate (file
+# sizes: metadata only, no job) bounds what a bare collect brings back.
+# Up to this estimate such a plan is collected bare (no CollectLimit
+# stage); past it the frame is large and no collect starts, so a big
+# ingest never pays a discarded probe before its executor write.
+DRIVER_MAX_PLAN_BYTES = 32 * 1024 * 1024
+
+# Optimized-plan nodes whose output has at most the rows of their input,
+# and leaves. Everything else (joins, generators, Python map operators,
+# aggregates, windows, unions) gets the bounded limit(N+1) probe.
+# Aggregate is left out: its estimate is that of its input, so a large
+# estimate says nothing about how many groups come back. A leaf without
+# size statistics (LogicalRDD: a pandas- or RDD-backed frame) estimates
+# as Long.MaxValue, so a row-preserving plan over it is never collected.
+_ROW_PRESERVING = frozenset(
+    {
+        "Project",
+        "Filter",
+        "Sort",
+        "Repartition",
+        "RepartitionByExpression",
+        "RebalancePartitions",
+        "GlobalLimit",
+        "LocalLimit",
+        "LogicalRelation",
+        "LogicalRDD",
+        "LocalRelation",
+        "Range",
+        "DataSourceV2Relation",
+        "DataSourceV2ScanRelation",
+        "InMemoryRelation",
+    }
+)
 
 # Position-delete manifest entries record the DISTINCT data-file paths the
 # delete file references when at most this many (Iceberg v3's
 # referenced_data_file role, generalized to a small set) — the exact basis
 # for delete-file scoping in partition-scoped scans. Beyond the cap the
 # list stays empty (unknown): the entry is then always planned, sound. The
-# harvest reads ONE string column of the file just written (for DVs that's
-# one row per target file — metadata-sized).
+# harvest reads ONE string column of the file just written, and only when
+# its row count fits the driver budget (plain tombstone layouts can run
+# to millions of rows; DV files — one row per target file — never come
+# close).
 _MAX_REFERENCED_FILES = 64
-# …and the harvest itself is skipped when the delete file's physical row
-# count exceeds this (plain tombstone layouts can run to millions of rows;
-# DV files — one row per target file — never come close)
-_REFERENCED_HARVEST_MAX_ROWS = 100_000
 
 # Physical column-name harvest cap: above this many top-level columns the
 # manifest entry records None (unknown) and initial-default resolution
@@ -61,75 +104,68 @@ _COLUMNS_HARVEST_MAX = 64
 # and increments its last code point (≥ every value) — pruning stays sound.
 _STRING_BOUND_CHARS = 16
 
-
-class _MicrosTimestampGuard:
-    """Reentrant, refcounted session-conf override: holds
-    ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS`` while any
-    writer is inside it, restoring (or unsetting — ``conf.get(key, None)``
-    is None when the key was never explicitly set, and leaking the
-    override would change what the USER's own ``df.write.parquet()``
-    emits) only when the LAST writer leaves. The refcount is what makes
-    concurrent driver-thread writes safe: the old per-write set/restore
-    raced — thread B could capture thread A's override as "previous",
-    or A's restore could strip the conf mid-write for B, silently
-    producing INT96 files whose timestamp columns carry no usable footer
-    stats. Sessions that already run with TIMESTAMP_MICROS (the tuned
-    session) skip the py4j set/restore entirely."""
-
-    def __init__(self) -> None:
-        import weakref
-
-        self._lock = threading.Lock()
-        # Depth and saved prev are PER SESSION (round-11 advisor finding:
-        # process-global state meant a second concurrent SparkSession saw
-        # depth>0 and never set the conf on ITS OWN session — silently
-        # emitting INT96 statless files, the exact failure the guard
-        # exists to prevent). Weak keys: a stopped session's entry GCs.
-        self._state: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-    _KEY = "spark.sql.parquet.outputTimestampType"
-
-    def __call__(self, spark):
-        return _MicrosTimestampScope(self, spark)
-
-    def enter(self, spark) -> None:
-        with self._lock:
-            st = self._state.get(spark)
-            if st is None:
-                prev = spark.conf.get(self._KEY, None)
-                if prev != "TIMESTAMP_MICROS":
-                    spark.conf.set(self._KEY, "TIMESTAMP_MICROS")
-                st = self._state[spark] = [0, prev]
-            st[0] += 1
-
-    def leave(self, spark) -> None:
-        with self._lock:
-            st = self._state[spark]
-            st[0] -= 1
-            if st[0] == 0:
-                del self._state[spark]
-                if st[1] != "TIMESTAMP_MICROS":
-                    if st[1] is not None:
-                        spark.conf.set(self._KEY, st[1])
-                    else:
-                        spark.conf.unset(self._KEY)
+# Spark's default parquet timestamp is INT96 (Hive-era compat), which
+# carries NO usable footer statistics — every timestamp column was
+# invisible to min/max pruning, manifest bounds and aggregate pushdown.
+# Engine writes hold TIMESTAMP_MICROS (INT64, Iceberg's own physical
+# type) instead; readers handle both, so tables with pre-switch INT96
+# files just keep their statless entries.
+_parquet_timestamp_type = SessionConfOverride(
+    "spark.sql.parquet.outputTimestampType"
+)
 
 
-class _MicrosTimestampScope:
-    def __init__(self, guard: _MicrosTimestampGuard, spark) -> None:
-        self._guard = guard
-        self._spark = spark
-
-    def __enter__(self):
-        self._guard.enter(self._spark)
-        return self
-
-    def __exit__(self, *exc):
-        self._guard.leave(self._spark)
-        return False
+def _micros_timestamps(spark):
+    return _parquet_timestamp_type(spark, "TIMESTAMP_MICROS")
 
 
-_micros_timestamps = _MicrosTimestampGuard()
+def fits_driver(rows: int) -> bool:
+    """Whether ``rows`` rows are within the driver-collect budget."""
+    return rows <= DRIVER_MAX_ROWS
+
+
+def _row_preserving(plan) -> bool:
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() not in _ROW_PRESERVING:
+            return False
+        it = node.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+    return True
+
+
+def collect_if_small(df: DataFrame, row_bound: int | None = None):
+    """``df`` as one pyarrow Table when it has at most DRIVER_MAX_ROWS
+    rows, else None: the caller then takes its executor path.
+
+    ``row_bound`` is a trusted metadata upper bound on the frame's rows
+    (e.g. the candidate files' manifest record counts). Over the budget,
+    no collect starts at all; within it, the frame is collected bare.
+    Without one, a plan of row-preserving shapes is collected bare when
+    its size estimate is within DRIVER_MAX_PLAN_BYTES and not collected
+    past it; any other plan gets a ``limit(N+1)`` probe, which brings at
+    most DRIVER_MAX_ROWS + 1 rows to the driver. The collected batch
+    is the result: on overflow it is discarded whole, so a
+    non-deterministic source cannot split its rows across the two
+    paths. Any Spark or Arrow error also returns None."""
+    try:
+        if row_bound is not None:
+            if not fits_driver(row_bound):
+                return None
+            table = df.toArrow()
+        else:
+            plan = df._jdf.queryExecution().optimizedPlan()
+            if not _row_preserving(plan):
+                table = df.limit(DRIVER_MAX_ROWS + 1).toArrow()
+            elif int(str(plan.stats().sizeInBytes())) <= DRIVER_MAX_PLAN_BYTES:
+                table = df.toArrow()
+            else:
+                return None
+    except Exception:
+        return None
+    return table if fits_driver(table.num_rows) else None
 
 
 def _truncate_lower(s: str) -> str:
@@ -266,20 +302,11 @@ def write_data_files(
     os.makedirs(target_dir, exist_ok=True)
     scratch = os.path.join(target_dir, f"_tmp-{uuid.uuid4().hex}")
 
-    def _write(frame: DataFrame) -> None:
-        # Spark's default parquet timestamp is INT96 (Hive-era compat),
-        # which carries NO usable footer statistics — every timestamp
-        # column was invisible to min/max pruning, manifest bounds and
-        # aggregate pushdown. Write TIMESTAMP_MICROS (INT64) instead,
-        # Iceberg's own physical type; readers handle both, so tables
-        # with pre-switch INT96 files just keep their statless entries.
-        with _micros_timestamps(frame.sparkSession):
-            w = frame.write.mode("overwrite")
-            for k, v in (write_options or {}).items():
-                w = w.option(k, v)
-            w.parquet(scratch)
-
-    _write(df)
+    with _micros_timestamps(df.sparkSession):
+        w = df.write.mode("overwrite")
+        for k, v in (write_options or {}).items():
+            w = w.option(k, v)
+        w.parquet(scratch)
     parts = sorted(glob.glob(os.path.join(scratch, "part-*.parquet")))
 
     if target_file_size_bytes and parts:
@@ -315,95 +342,90 @@ def write_data_files(
     for part in parts:
         final = os.path.join(target_dir, f"{prefix}-{uuid.uuid4().hex}.parquet")
         shutil.move(part, final)
-        n_rows, mins, maxs, nulls = _footer_stats(final)
-        if n_rows == 0:
-            os.remove(final)
-            continue
-        # referenced-path harvest (content=1 only): the DV record count is
-        # SEMANTIC and read unprotected (a failure must fail the write),
-        # while the harvest is advisory and degrades to [] on any error
-        # (review catch: one shared try made a harvest-only failure abort
-        # a DV write that used to succeed). Skipped for row-heavy plain
-        # tombstone files — reading a multi-million-row string column back
-        # on the write path costs real time; DV files (one row per TARGET
-        # file) are the layout that matters, and a skipped harvest just
-        # leaves the entry always planned (sound).
-        referenced: list[str] = []
-        want_refs = (
-            content == CONTENT_POSITION_DELETES
-            and n_rows <= _REFERENCED_HARVEST_MAX_ROWS
-        )
-        if record_count_from is not None:
-            col = pq.read_table(final, columns=[record_count_from])
-            n_rows = sum(v.as_py() or 0 for v in col.column(0))
-        if want_refs:
-            try:
-                import pyarrow.compute as pc
-
-                uniq = pc.unique(
-                    pq.read_table(final, columns=["file_path"]).column(0)
-                )
-                if len(uniq) <= _MAX_REFERENCED_FILES:
-                    referenced = sorted(
-                        v for v in uniq.to_pylist() if v is not None
-                    )
-            except Exception:
-                referenced = []  # unknown → the entry is always planned
-        # physical column-name harvest (initial-default resolution uses
-        # presence, like Iceberg's field ids): footer-only, capped so a
-        # very wide schema doesn't bloat every manifest row — None falls
-        # back to the sequence-watermark rule
-        try:
-            names = [f.name for f in pq.read_schema(final)]
-            phys_cols = names if len(names) <= _COLUMNS_HARVEST_MAX else None
-        except Exception:
-            phys_cols = None
-        entries.append(
-            ManifestEntry(
-                file_path=final,
-                content=content,
-                record_count=n_rows,
-                file_size_in_bytes=os.path.getsize(final),
-                min_values={k: _jsonable(v) for k, v in mins.items()},
-                max_values={k: _jsonable(v) for k, v in maxs.items()},
-                null_counts=dict(nulls),
-                referenced_files=referenced,
-                columns=phys_cols,
-            )
-        )
+        entry = _manifest_entry(final, content, record_count_from)
+        if entry is not None:
+            entries.append(entry)
     shutil.rmtree(scratch, ignore_errors=True)
     return entries
 
 
 def write_arrow_file(
-    table, target_dir: str, *, content: int = CONTENT_DATA, prefix: str = "data"
+    table,
+    target_dir: str,
+    *,
+    content: int = CONTENT_DATA,
+    prefix: str = "data",
+    record_count_from: str | None = None,
 ) -> list[ManifestEntry]:
     """Write one pyarrow Table as ONE managed parquet file, driver-side —
-    no Spark job. For metadata-sized sidecar files (the streaming
-    upsert's equality-delete key file: O(batch-keys) rows) where a Spark
-    write costs a job launch per micro-batch. Footer stats are harvested
-    exactly like write_data_files'. Returns [] for empty input (parity
-    with the zero-row file drop there)."""
+    no Spark job. For frames collect_if_small() brought to the driver and
+    for metadata-sized sidecar files (the streaming upsert's
+    equality-delete key file: O(batch-keys) rows) where a Spark write
+    costs a job launch per micro-batch. The manifest entry is built
+    exactly like write_data_files' (``record_count_from`` included).
+    Returns [] for empty input (parity with the zero-row file drop
+    there)."""
     if table.num_rows == 0:
         return []
     os.makedirs(target_dir, exist_ok=True)
     final = os.path.join(target_dir, f"{prefix}-{uuid.uuid4().hex}.parquet")
     pq.write_table(table, final)
-    n_rows, mins, maxs, nulls = _footer_stats(final)
-    names = table.schema.names
-    return [
-        ManifestEntry(
-            file_path=final,
-            content=content,
-            record_count=n_rows,
-            file_size_in_bytes=os.path.getsize(final),
-            min_values={k: _jsonable(v) for k, v in mins.items()},
-            max_values={k: _jsonable(v) for k, v in maxs.items()},
-            null_counts=dict(nulls),
-            referenced_files=[],
-            columns=list(names) if len(names) <= _COLUMNS_HARVEST_MAX else None,
-        )
-    ]
+    entry = _manifest_entry(final, content, record_count_from)
+    return [entry] if entry is not None else []
+
+
+def _manifest_entry(
+    path: str, content: int, record_count_from: str | None
+) -> ManifestEntry | None:
+    """The manifest entry of the parquet file just written at ``path``,
+    from its footer; a zero-row file is removed and yields None."""
+    n_rows, mins, maxs, nulls = _footer_stats(path)
+    if n_rows == 0:
+        os.remove(path)
+        return None
+    # referenced-path harvest (content=1 only): the DV record count is
+    # SEMANTIC and read unprotected (a failure must fail the write),
+    # while the harvest is advisory and degrades to [] on any error
+    # (review catch: one shared try made a harvest-only failure abort
+    # a DV write that used to succeed). Skipped for row-heavy plain
+    # tombstone files — reading a multi-million-row string column back
+    # on the write path costs real time; DV files (one row per TARGET
+    # file) are the layout that matters, and a skipped harvest just
+    # leaves the entry always planned (sound).
+    referenced: list[str] = []
+    want_refs = content == CONTENT_POSITION_DELETES and fits_driver(n_rows)
+    if record_count_from is not None:
+        col = pq.read_table(path, columns=[record_count_from])
+        n_rows = sum(v.as_py() or 0 for v in col.column(0))
+    if want_refs:
+        try:
+            import pyarrow.compute as pc
+
+            uniq = pc.unique(pq.read_table(path, columns=["file_path"]).column(0))
+            if len(uniq) <= _MAX_REFERENCED_FILES:
+                referenced = sorted(v for v in uniq.to_pylist() if v is not None)
+        except Exception:
+            referenced = []  # unknown → the entry is always planned
+    # physical column-name harvest (initial-default resolution uses
+    # presence, like Iceberg's field ids): footer-only, capped so a
+    # very wide schema doesn't bloat every manifest row — None falls
+    # back to the sequence-watermark rule
+    try:
+        names = [f.name for f in pq.read_schema(path)]
+        phys_cols = names if len(names) <= _COLUMNS_HARVEST_MAX else None
+    except Exception:
+        phys_cols = None
+    return ManifestEntry(
+        file_path=path,
+        content=content,
+        record_count=n_rows,
+        file_size_in_bytes=os.path.getsize(path),
+        min_values={k: _jsonable(v) for k, v in mins.items()},
+        max_values={k: _jsonable(v) for k, v in maxs.items()},
+        null_counts=dict(nulls),
+        referenced_files=referenced,
+        columns=phys_cols,
+    )
 
 
 def _jsonable(v: Any) -> Any:

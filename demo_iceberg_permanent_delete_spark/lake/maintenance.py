@@ -11,9 +11,9 @@ The reference drives these as Iceberg SQL procedures / JVM actions:
 - examine_delete_files audit           (cleanup_utils.py:133-202)
 
 All are reimplemented natively over the JSON-manifest lake:
-reachability = DataFrame union/distinct + anti-join (never a driver loop
-over file contents), physical deletion only after the metadata commit that
-stops referencing the files.
+reachability = set differences of the path lists the metadata already
+holds (never a loop over file contents), physical deletion only after the
+metadata commit that stops referencing the files.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ from demo_iceberg_permanent_delete_spark.lake.metadata import (
     CONTENT_POSITION_DELETES,
     now_ms,
 )
-from demo_iceberg_permanent_delete_spark.sources.listing import list_files
+from demo_iceberg_permanent_delete_spark.sources.listing import list_file_rows
 
 # Iceberg's default orphan-file protection window (reference README.md:97,108:
 # files younger than 3 days are protected).
@@ -81,8 +81,8 @@ _PARALLEL_DELETE_SLICE = 1024  # paths per delete task
 
 def _delete_paths(spark, paths: list[str]) -> int:
     """Physically unlink ``paths``; returns how many existed and were
-    removed. Detection is always DataFrame set algebra (anti-joins) in
-    the callers — this is only the final unlink, executor-parallel above
+    removed. Detection is the callers' path-set difference — this is
+    only the final unlink, executor-parallel above
     ``PARALLEL_DELETE_MIN`` (storage is shared by every node on a real
     cluster, exactly like Iceberg's deleteWith executor callbacks).
     Already-missing paths are skipped silently: a concurrent maintenance
@@ -312,27 +312,21 @@ def expire_snapshots(
         if int(e["snapshot-id"]) not in expired_ids
     ]
 
-    # Reachability via DataFrame set algebra (union + distinct + anti-join):
-    # scales with file *count*, runs in Spark, matches the M1 plan in
-    # SURVEY.md §2.3. Resolved BEFORE snapshot removal — the expired
+    # Reachability as a set difference of the path lists the driver
+    # already holds (both walk the manifests in memory): file-count
+    # sized, no Spark job. Resolved BEFORE snapshot removal — the expired
     # snapshots' delta manifests are still walkable here.
-    spark = table.spark
-    surv_paths = [(e.file_path,) for s in survivors for e in s.manifest]
-    exp_paths = [(e.file_path,) for s in expired for e in s.manifest]
-    surv_df = _local_frame(
-        spark, surv_paths or [("",)], "file_path string"
-    ).distinct()
-    exp_df = _local_frame(
-        spark, exp_paths or [("",)], "file_path string"
-    ).distinct()
-    doomed = [r["file_path"] for r in exp_df.join(surv_df, "file_path", "left_anti").collect()]
+    surv_paths = {e.file_path for s in survivors for e in s.manifest}
+    doomed = sorted(
+        {e.file_path for s in expired for e in s.manifest} - surv_paths
+    )
 
     # Drops headers + expired delta files; survivors whose ancestry crossed
     # an expired snapshot get a materialized base delta first.
     meta.remove_snapshots(expired_ids)
     _commit_or_refresh(table)
 
-    deleted = _delete_paths(spark, doomed)
+    deleted = _delete_paths(table.spark, doomed)
     for e in doomed_pstats:
         try:
             os.unlink(e["statistics-path"])
@@ -376,21 +370,17 @@ def remove_orphan_files(
     # referenced-file set since this handle was loaded.
     table.refresh()
     spark = table.spark
-    listing = list_files(spark, os.path.join(table.location, "data"), suffix=".parquet")
-    referenced = _local_frame(
-        spark,
-        [(p,) for p in table.metadata.all_referenced_files()] or [("",)],
-        "file_path string",
-    )
+    # listing minus the referenced set, on the driver: both are
+    # file-count sized and already held in Python, so a set difference
+    # costs no Spark job
+    referenced = table.metadata.all_referenced_files()
     cutoff_ts = dt.datetime.fromtimestamp(cutoff_ms / 1000, dt.timezone.utc).replace(tzinfo=None)
     orphans = [
-        r["file_path"]
-        for r in (
-            listing.join(referenced, "file_path", "left_anti")
-            .filter(F.col("modified_at") < F.lit(cutoff_ts))
-            .select("file_path")
-            .collect()
+        path
+        for path, _size, modified_at in list_file_rows(
+            spark, os.path.join(table.location, "data"), suffix=".parquet"
         )
+        if path not in referenced and modified_at < cutoff_ts
     ]
     # Manifest-file GC (expired snapshots leave their delta manifests on
     # disk so stale readers keep working — see metadata.remove_snapshots):

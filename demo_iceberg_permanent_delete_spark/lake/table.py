@@ -32,6 +32,9 @@ from pyspark.sql import types as T
 
 from demo_iceberg_permanent_delete_spark.lake.datafiles import (
     TARGET_FILE_SIZE_BYTES,
+    collect_if_small,
+    fits_driver,
+    write_arrow_file,
     write_data_files,
 )
 from demo_iceberg_permanent_delete_spark.lake.metadata import (
@@ -49,66 +52,18 @@ from demo_iceberg_permanent_delete_spark.lake.metadata import (
 # large).
 _BROADCAST_DELETES_MAX_BYTES = 256 * 1024 * 1024
 
-# Per-write cap on harvested (file, partition-value) count rows — bounds the
-# driver-side collect in _harvest_partition_counts (≈ a few MB of tiny maps
-# at the cap; a batch past it just falls back to the .partitions scan path).
-_PARTITION_HARVEST_MAX_GROUPS = 65536
-
-# Arrow-harvest row gate: below it the driver-side pyarrow harvest beats a
-# Spark job launch outright; above it the distributed job wins (measured:
-# a 600k-row single-threaded groupby+encode costs more than the launch).
-_PARTITION_HARVEST_ARROW_MAX_ROWS = 150_000
-
-_UPSERT_KEYS_ARROW_MAX_ROWS = 4_000_000
-
-# equality_delete key-set gate: at or below this many distinct key tuples
-# the delete file is written driver-side from one Arrow batch (no Spark
-# write job — the dominant fixed cost of a small eq-delete commit); above
-# it the executor write path keeps driver memory bounded.
-_EQ_DELETE_ARROW_MAX_ROWS = 100_000
-
-# deletion-vector gate: at or below this many matched (file_path, pos)
-# tombstones the DV file is built driver-side from one Arrow collect (one
-# Spark job vs checkpoint+write+repack ≈ three); above it the executor
-# path keeps the driver out of row-proportional work (a 100 TB bulk
-# delete's positions never land on the driver).
-_DV_ARROW_MAX_POSITIONS = 1_000_000
-
 # Engine-written delete-file layouts (fixed by the writers in
 # _write_position_deletes/_write_dv_arrow): pinning them at read time
 # skips the per-call footer-inference Spark job of a bare read.parquet.
-_POS_DELETE_SCHEMA = "file_path string, pos bigint"
+_POS_DELETE_SCHEMA = "file_path string, pos long"
 _DV_SCHEMA = "file_path string, positions array<bigint>, cardinality bigint"
-
-# small-append gate: at or below this many rows an INSERT's frame is
-# collected as one Arrow batch and its files are written driver-side
-# (split per Spark partition id, so the file count matches the executor
-# write exactly); above it the executor path runs unchanged — a 100 TB
-# ingest never lands on the driver. A Spark parquet write JOB costs
-# ~0.25 s of commit-protocol fixed overhead at any size (measured), vs
-# ~0.07 s for the same rows through one Arrow collect + pyarrow write.
-_INSERT_ARROW_MAX_ROWS = 100_000
-# ...and the probe itself is only attempted when the optimizer's
-# sizeInBytes estimate says the frame is plausibly small (scan estimates
-# are file-size-based — metadata-only, no job): a big ingest must not pay
-# a discarded limit-collect before its executor write (the same
-# cheap-signal-first rule as the DV writer's row_bound).
-_INSERT_ARROW_MAX_PLAN_BYTES = 4 * 1024 * 1024
-# For plans with NO row-multiplying operator (no Join/Generate/Expand/
-# CartesianProduct: output rows ≤ scan rows, and the byte estimate is an
-# UPPER bound since filters only shrink it) the limit wrapper is skipped
-# entirely up to this estimate — CollectLimit's incremental executeTake
-# measured +0.17 s of pure overhead on a 60k-row append, turning a win
-# into a loss. Worst-case driver footprint is bounded by the estimate
-# itself (decompressed, a few × 32 MiB).
-_INSERT_ARROW_TRUSTED_PLAN_BYTES = 32 * 1024 * 1024
 
 
 def _distinct_keys_arrow(paths: list[str], on: list[str]):
     """Distinct key tuples of the just-written batch files, driver-side:
     column-pruned pyarrow reads + one vectorized group_by — the upsert's
-    eq-delete content without a Spark job. Bounded by the caller's
-    _UPSERT_KEYS_ARROW_MAX_ROWS gate."""
+    eq-delete content without a Spark job. The caller bounds the files'
+    rows by the driver budget."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -137,13 +92,6 @@ _LINEAGE_FIELDS = [
     T.StructField(LAST_UPDATED_COL, T.LongType()),
 ]
 
-# Metadata views (.files / .all_entries) below this many entries build as a
-# driver LocalRelation — measured faster than a distributed scan at demo
-# scale (no job scheduling); above it executors read the JSONL manifests so
-# the driver never materializes O(snapshots × files) rows. Overridable for
-# tests and ops.
-_META_LOCAL_MAX_ENTRIES = int(os.environ.get("SPARK_GRAFT_META_LOCAL_MAX", "100000"))
-
 
 def _delete_set_size_estimate(entries) -> int:
     """Broadcast-budget estimate for a position-delete set: plain row
@@ -155,8 +103,6 @@ def _delete_set_size_estimate(entries) -> int:
         for e in entries
     )
 
-
-_POS_DELETE_SCHEMA = "file_path string, pos long"
 
 # Every queryable metadata relation (Iceberg's `<table>.<relation>` family).
 # Single source of truth for meta() dispatch, register_metadata_views, and
@@ -1198,55 +1144,34 @@ class LakeTable:
     def _write_append_data(self, frame: DataFrame) -> list[ManifestEntry]:
         """INSERT's write: small appends to plain tables skip the Spark
         write job entirely (guide §5 driver rules — the commit protocol's
-        ~0.25 s fixed cost dominates a small append; same gated pattern
-        as the eq-delete key file and DV writers). The frame is probed
-        with ``limit(N+1).toArrow()`` — cheap for the scan-shaped plans
-        appends are (CollectLimit stops early) — and, at or below the
-        gate, written driver-side with pyarrow, SPLIT BY SPARK PARTITION
-        ID so the file count and per-file row sets are exactly what the
-        executor write would have produced (one file per non-empty task;
-        ``repartition(2, k)``-shaped ingests still yield 2 files). Past
-        the gate, or for partitioned tables / explicit file-size targets /
-        parquet writer options, the executor path runs unchanged — a
-        100 TB ingest never lands on the driver."""
+        ~0.25 s fixed cost dominates a small append). A frame that
+        collect_if_small() brings to the driver is written there with
+        pyarrow, SPLIT BY SPARK PARTITION ID so the file count and
+        per-file row sets are exactly what the executor write would have
+        produced (one file per non-empty task; ``repartition(2, k)``-shaped
+        ingests still yield 2 files). Otherwise, and for partitioned
+        tables / explicit file-size targets / parquet writer options, the
+        executor path runs unchanged — a 100 TB ingest never lands on the
+        driver."""
         tsize = self._write_target_size()
         if self._partition_fields or tsize or self._parquet_write_options():
             return self._write_data(frame, target_file_size_bytes=tsize)
         pid_df = frame.select("*", F.spark_partition_id().alias("__wpid"))
-        try:
-            # Driver-local VALUES/local relations constant-fold the whole
-            # probe (pid projection included) into one LocalRelation, so
-            # the collected pids would NOT reproduce the executor write's
-            # parallelize() slicing (min(rows, parallelism) files) —
-            # detected by the optimized plan's top node, those frames keep
-            # the executor path and its file layout exactly.
-            plan = pid_df._jdf.queryExecution().optimizedPlan()
-            if plan.getClass().getSimpleName() == "LocalRelation":
-                return self._write_data(frame, target_file_size_bytes=tsize)
-            est = int(str(plan.stats().sizeInBytes()))
-            plan_str = plan.toString()
-            multiplying = any(
-                k in plan_str
-                for k in ("Join", "Generate", "Expand", "CartesianProduct")
-            )
-            if not multiplying and est <= _INSERT_ARROW_TRUSTED_PLAN_BYTES:
-                # output rows ≤ scan rows and est bounds the bytes — a
-                # bare collect, skipping CollectLimit's executeTake
-                # overhead (+0.17 s measured on a 60k-row append)
-                probe = pid_df.toArrow()
-            elif est <= _INSERT_ARROW_MAX_PLAN_BYTES:
-                probe = pid_df.limit(_INSERT_ARROW_MAX_ROWS + 1).toArrow()
-            else:
-                return self._write_data(frame, target_file_size_bytes=tsize)
-        except Exception:
-            return self._write_data(frame, target_file_size_bytes=tsize)
-        if probe.num_rows > _INSERT_ARROW_MAX_ROWS:
+        # Driver-local VALUES/local relations constant-fold the whole
+        # probe (pid projection included) into one LocalRelation, so the
+        # collected pids would NOT reproduce the executor write's
+        # parallelize() slicing (min(rows, parallelism) files) — detected
+        # by the optimized plan's top node, those frames keep the
+        # executor path and its file layout exactly.
+        plan = pid_df._jdf.queryExecution().optimizedPlan()
+        probe = (
+            None
+            if plan.getClass().getSimpleName() == "LocalRelation"
+            else collect_if_small(pid_df)
+        )
+        if probe is None:
             return self._write_data(frame, target_file_size_bytes=tsize)
         import pyarrow.compute as pc
-
-        from demo_iceberg_permanent_delete_spark.lake.datafiles import (
-            write_arrow_file,
-        )
 
         pids = probe.column("__wpid")
         tb = probe.drop_columns(["__wpid"])
@@ -1264,9 +1189,9 @@ class LakeTable:
         read at 100 TB). Small batches (streaming micro-batches — the
         case where per-batch job launches hurt) harvest driver-side with
         pyarrow inside the write path, zero Spark jobs (round-10 judge
-        item); large batches keep the executor-parallel aggregate, which
-        measured faster past ~150k rows. The pyarrow tuple encoding is
-        python_transform_str — byte-identical to the Spark
+        item); batches past the driver budget keep the executor-parallel
+        aggregate, which measured faster past ~150k rows. The pyarrow
+        tuple encoding is python_transform_str — byte-identical to the Spark
         ``cast(transform as string)`` encoding, differential-tested;
         types without an exact Python twin (float/Decimal identity) fall
         back to the Spark job at any size. Under range-clustering a file
@@ -1280,11 +1205,9 @@ class LakeTable:
         declared = {f.name for f in self.schema().fields}
         if any(f.source not in declared for f in fields):
             return
-        if sum(
-            e.record_count for e in data
-        ) <= _PARTITION_HARVEST_ARROW_MAX_ROWS and self._harvest_partition_counts_arrow(
-            entries, fields
-        ):
+        if fits_driver(
+            sum(e.record_count for e in data)
+        ) and self._harvest_partition_counts_arrow(entries, fields):
             return
         self._harvest_partition_counts_spark(entries, fields)
 
@@ -1336,11 +1259,6 @@ class LakeTable:
                 grouped = gt.group_by(list(gt.column_names)).aggregate(
                     [([], "count_all")]
                 )
-                if grouped.num_rows > _PARTITION_HARVEST_MAX_GROUPS:
-                    # identity over a near-unique column: keep counts None
-                    # — the view's scan fallback covers this file (degrade,
-                    # never bloat the manifest)
-                    continue
                 cols = [
                     grouped.column(f"__k{j}").to_pylist()
                     for j in range(len(encoders))
@@ -1398,32 +1316,27 @@ class LakeTable:
                 kvs.append(
                     transform_column(fld, types[fld.source]).cast("string")
                 )
-            rows = (
-                df.select(
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:", ""
-                    ).alias("__f"),
-                    F.create_map(*kvs).alias("partition"),
-                )
-                .groupBy("__f", "partition")
-                .agg(F.count(F.lit(1)).alias("n"))
-                # bounded collect: (files × values-per-file) is tiny under
-                # range-clustering, but identity-partitioning a near-unique
-                # column could make it row-proportional — past the cap the
-                # batch keeps counts=None and the view's scan fallback
-                # covers it (degrade, never OOM the driver)
-                .limit(_PARTITION_HARVEST_MAX_GROUPS + 1)
-                .collect()
-            )
-            if len(rows) > _PARTITION_HARVEST_MAX_GROUPS:
-                return
+            counts = df.select(
+                F.regexp_replace(
+                    F.col("_metadata.file_path"), "^file:", ""
+                ).alias("__f"),
+                F.create_map(*kvs).alias("partition"),
+            ).groupBy("__f", "partition").agg(F.count(F.lit(1)).alias("n"))
         except Exception:
             return
+        # bounded collect: (files × values-per-file) is tiny under
+        # range-clustering, but identity-partitioning a near-unique column
+        # could make it row-proportional — past the budget the batch keeps
+        # counts=None and the view's scan fallback covers it (degrade,
+        # never OOM the driver)
+        rows = collect_if_small(counts)
+        if rows is None:
+            return
         by_path: dict[str, list] = {}
-        for r in rows:
-            by_path.setdefault(r["__f"], []).append(
-                [dict(r["partition"]), int(r["n"])]
-            )
+        for f, part, n in zip(
+            *(rows.column(c).to_pylist() for c in ("__f", "partition", "n"))
+        ):
+            by_path.setdefault(f, []).append([dict(part), int(n)])
         for e in entries:
             if e.content == CONTENT_DATA and e.file_path in by_path:
                 e.partition_counts = sorted(
@@ -1460,16 +1373,13 @@ class LakeTable:
             # collect of the (file_path, pos) matches: one Spark job
             # total, where the executor path costs three (checkpoint of
             # the match scan + parquet write + possible bin-pack repack).
-            # The limit(N+1) probe is exact below the gate; past it the
-            # executor path keeps driver memory bounded — at 100 TB a
-            # billion-row delete never lands on the driver. The probe's
-            # result is discarded on fallback, so a non-deterministic
-            # source cannot split tombstones across the two paths.
-            # ``row_bound`` (the candidate files' manifest record-count
-            # sum — a metadata-only upper bound on matches) skips the
-            # probe OUTRIGHT when it already exceeds the gate, so a huge
-            # delete never pays a partially-executed match scan that the
-            # executor path then redoes (round-11 advisor finding).
+            # Past the driver budget the executor path keeps driver
+            # memory bounded — at 100 TB a billion-row delete never lands
+            # on the driver. ``row_bound`` (the candidate files' manifest
+            # record-count sum — a metadata-only upper bound on matches)
+            # skips the collect OUTRIGHT when it already exceeds the
+            # budget, so a huge delete never pays a partially-executed
+            # match scan that the executor path then redoes.
             entries = self._write_dv_arrow(matches, row_bound=row_bound)
             if entries is not None:
                 return entries
@@ -1516,23 +1426,13 @@ class LakeTable:
         pyarrow — semantically identical to the executor path (same
         sorted-positions-array layout, record_count = total cardinality,
         referenced-files harvest, dv flag; differential-tested in
-        tests/test_deletion_vectors.py). Returns None past the row gate
-        (or on any Arrow surprise) to request the executor path."""
+        tests/test_deletion_vectors.py). Returns None past the driver
+        budget (or on any Arrow surprise) to request the executor path."""
         import numpy as np
         import pyarrow as pa
 
-        from demo_iceberg_permanent_delete_spark.lake.datafiles import (
-            _MAX_REFERENCED_FILES,
-            write_arrow_file,
-        )
-
-        if row_bound is not None and row_bound > _DV_ARROW_MAX_POSITIONS:
-            return None  # metadata bound says big — never start the probe
-        try:
-            probe = matches.limit(_DV_ARROW_MAX_POSITIONS + 1).toArrow()
-        except Exception:
-            return None
-        if probe.num_rows > _DV_ARROW_MAX_POSITIONS:
+        probe = collect_if_small(matches, row_bound=row_bound)
+        if probe is None:
             return None
         if probe.num_rows == 0:
             return []  # nothing matched — parity with the zero-row drop
@@ -1570,16 +1470,10 @@ class LakeTable:
             self.data_dir,
             content=CONTENT_POSITION_DELETES,
             prefix="delete",
+            record_count_from="cardinality",
         )
-        refs = sorted(grouped)
         for e in entries:
             e.dv = True
-            # Iceberg v3: a DV's record_count is its cardinality (rows it
-            # deletes), not the physical row count of the DV file
-            e.record_count = int(probe.num_rows)
-            e.referenced_files = (
-                refs if len(refs) <= _MAX_REFERENCED_FILES else []
-            )
         return entries
 
     def _apply_equality_deletes(
@@ -2429,12 +2323,26 @@ class LakeTable:
         ``_last_updated_sequence_number`` (see read()) — the row-carrying
         rewrite paths read through this so the ids they MATERIALIZE into
         replacement files are the ones the rows already had."""
+        return self._read_positions_bounded(snap, prune_for, lineage=lineage)[0]
+
+    def _read_positions_bounded(
+        self,
+        snap: Snapshot | None,
+        prune_for: str | None,
+        *,
+        lineage: bool = False,
+    ) -> tuple[DataFrame, int]:
+        """read_with_positions() plus a metadata-only upper bound on the
+        rows it can produce (the candidate files' record_count sum): the
+        MOR writers hand it to the DV writer so an over-budget delete
+        skips the driver collect without partially executing the match
+        scan."""
         self.last_delete_scope = {"planned": 0, "skipped": 0}
         snap = snap or self.metadata.current_snapshot()
         if snap is None:
             return self.empty_frame().withColumns(
                 {"__fp": F.lit(None).cast("string"), "__pos": F.lit(None).cast("long")}
-            )
+            ), 0
         from demo_iceberg_permanent_delete_spark.lake.metadata import CONTENT_DATA
 
         # manifest-level skip first (whole out-of-scope delta files are
@@ -2460,25 +2368,23 @@ class LakeTable:
                 part_fields,
                 aliases=self.metadata.renames,
             )
-        # metadata-only upper bound on the rows this read can produce
-        # (candidate files' record_count sum) — _delete_mor hands it to
-        # the DV writer so an over-the-gate delete skips the Arrow probe
-        # without partially executing the match scan
-        self.last_scan_row_bound = sum(e.record_count for e in data_entries)
+        row_bound = sum(e.record_count for e in data_entries)
         if not data_entries:
             empty = self.empty_frame().withColumns(
                 {"__fp": F.lit(None).cast("string"), "__pos": F.lit(None).cast("long")}
             )
-            return self._null_lineage(empty) if lineage else empty
+            return (self._null_lineage(empty) if lineage else empty), 0
         with_pos = self._read_data_entries(
             data_entries, lineage=lineage, positions=True
         )
         delete_files = self._scope_deletes(
             [e for e in scoped if e.content != CONTENT_DATA], data_entries
         )
-        if not delete_files:
-            return with_pos
-        return self._apply_delete_files(with_pos, delete_files, data_entries)
+        if delete_files:
+            with_pos = self._apply_delete_files(
+                with_pos, delete_files, data_entries
+            )
+        return with_pos, row_bound
 
     # --------------------------------------------------------------- DML
     @property
@@ -2905,15 +2811,12 @@ class LakeTable:
         wap_id: str | None = None,
     ) -> Snapshot | None:
         snap, parent_id = self._branch_base(branch)
-        matches = (
-            self.read_with_positions(snap, prune_for=pred_str)
-            .filter(pred)
-            .select(F.col("__fp").alias("file_path"), F.col("__pos").alias("pos"))
+        rows, row_bound = self._read_positions_bounded(snap, pred_str)
+        matches = rows.filter(pred).select(
+            F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
         )
         base = list(snap.manifest) if snap else []
-        delete_entries = self._write_position_deletes(
-            matches, row_bound=getattr(self, "last_scan_row_bound", None)
-        )
+        delete_entries = self._write_position_deletes(matches, row_bound=row_bound)
         if not delete_entries:
             return None  # nothing matched — no commit (Iceberg behavior)
         snapshot = self._commit_dml(
@@ -3002,29 +2905,18 @@ class LakeTable:
         # them driver-side as one Arrow batch and write the delete file
         # directly — the distinct runs either way, but this skips the
         # parquet write JOB (plus scratch-dir glob/move) that dominated
-        # the commit at micro-batch scale (measured 0.62 s → ~0.2 s). The
-        # limit(N+1) probe is exact below the gate (limit of a distinct
-        # returns ALL rows when fewer than N exist); past the gate the
-        # executor write path keeps driver memory bounded — the probe's
-        # result is discarded there, so a non-deterministic source cannot
-        # split keys across the two paths.
-        delete_entries: list[ManifestEntry] | None = None
-        try:
-            probe = rows.limit(_EQ_DELETE_ARROW_MAX_ROWS + 1).toArrow()
-            if probe.num_rows <= _EQ_DELETE_ARROW_MAX_ROWS:
-                from demo_iceberg_permanent_delete_spark.lake.datafiles import (
-                    write_arrow_file,
-                )
-
-                delete_entries = write_arrow_file(
-                    probe,
-                    self.data_dir,
-                    content=CONTENT_EQUALITY_DELETES,
-                    prefix="eqdelete",
-                )
-        except Exception:
-            delete_entries = None  # Arrow-unfriendly type → executor path
-        if delete_entries is None:
+        # the commit at micro-batch scale (measured 0.62 s → ~0.2 s).
+        # Past the driver budget the executor write path keeps driver
+        # memory bounded.
+        keys = collect_if_small(rows)
+        if keys is not None:
+            delete_entries = write_arrow_file(
+                keys,
+                self.data_dir,
+                content=CONTENT_EQUALITY_DELETES,
+                prefix="eqdelete",
+            )
+        else:
             delete_entries = write_data_files(
                 rows,
                 self.data_dir,
@@ -3108,12 +3000,11 @@ class LakeTable:
         # pruned, vectorized group_by) and the eq-delete file written
         # directly — ZERO Spark jobs on top of the batch write (round-10
         # judge item: the read-back cost two job launches per streaming
-        # micro-batch). Past the gate the Spark read-distinct path keeps
-        # driver memory bounded.
+        # micro-batch). Past the driver budget the Spark read-distinct
+        # path keeps driver memory bounded.
         paths = [e.file_path for e in data_entries]
-        batch_rows = sum(e.record_count for e in data_entries)
         keys_df = None
-        if batch_rows > _UPSERT_KEYS_ARROW_MAX_ROWS and paths:
+        if paths and not fits_driver(sum(e.record_count for e in data_entries)):
             # explicit schema skips the footer-inference job (one per
             # upsert); key columns are always physically present in the
             # batch's own files
@@ -3154,10 +3045,6 @@ class LakeTable:
                         prefix="eqdelete",
                     )
                 else:
-                    from demo_iceberg_permanent_delete_spark.lake.datafiles import (
-                        write_arrow_file,
-                    )
-
                     written = write_arrow_file(
                         _distinct_keys_arrow(paths, on),
                         self.data_dir,
@@ -3580,16 +3467,16 @@ class LakeTable:
 
         lin = self._lineage_ok()
         snap, parent_id = self._branch_base(branch)
-        matches = (
-            self.read_with_positions(snap, prune_for=pred_str, lineage=lin)
-            .filter(pred)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        rows, row_bound = self._read_positions_bounded(
+            snap, pred_str, lineage=lin
         )
+        matches = rows.filter(pred).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             pos_entries = self._write_position_deletes(
                 matches.select(
                     F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
-                )
+                ),
+                row_bound=row_bound,
             )
             if not pos_entries:
                 return None  # nothing matched — no commit (Iceberg behavior)
@@ -4224,7 +4111,7 @@ class LakeTable:
         content/file_path/record_count projected; cleanup_utils.py:145).
 
         Two physical strategies behind one schema:
-        - small tables (≤ _META_LOCAL_MAX_ENTRIES): driver LocalRelation —
+        - small tables (≤ DRIVER_MAX_ROWS): driver LocalRelation —
           measured faster than a distributed scan at demo scale;
         - large tables: executors scan the ancestry's JSONL manifests and
           anti-join the removed set — the driver never materializes
@@ -4234,7 +4121,7 @@ class LakeTable:
         if snap is None:
             return _empty_frame(self.spark, self._FILE_STRUCT)
         est = snap.summary.get("total-files")
-        if est is None or int(est) <= _META_LOCAL_MAX_ENTRIES:
+        if est is None or fits_driver(int(est)):
             rows = [
                 (e.content, e.file_path, "parquet", e.record_count, e.file_size_in_bytes)
                 for e in snap.manifest
@@ -4266,7 +4153,7 @@ class LakeTable:
         rewrite_manifests re-lists every live file as an "add" row, so
         paths are NOT unique across manifests)."""
         est = self._entries_estimate()
-        if est is None or est <= _META_LOCAL_MAX_ENTRIES:
+        if est is None or fits_driver(est):
             by_path = {
                 e.file_path: e
                 for snap in self.metadata.snapshots
@@ -4452,7 +4339,7 @@ class LakeTable:
         only headers (VERDICT r1 scale fix #2). Below the threshold the
         LocalRelation build wins (no job scheduling, no shuffle)."""
         est = self._entries_estimate()
-        if est is None or est <= _META_LOCAL_MAX_ENTRIES:
+        if est is None or fits_driver(est):
             by_id = {s.snapshot_id: s for s in self.metadata.snapshots}
             rows = []
             for s in self.metadata.snapshots:

@@ -14,7 +14,10 @@ metadata, so the session is a stock Spark session tuned for:
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -64,3 +67,61 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+class SessionConfOverride:
+    """Refcounted, per-session override of one runtime conf key.
+
+    The first entrant on a session saves the key's prior value and sets
+    the override; the last one to leave restores it, or unsets it when it
+    was never set (``conf.get(key, None)`` is None then) so the override
+    never leaks into the user's own later writes. Overlapping holders on
+    one session share the override: per-call set/restore raced (one
+    thread captured another's override as "previous", or stripped it
+    mid-write). Depth and saved value are kept per session: a second
+    SparkSession entering while the first holds the key still gets the
+    conf set on its own session. An overlapping holder that wants a
+    DIFFERENT value cannot share one session conf and is refused."""
+
+    def __init__(self, key: str) -> None:
+        self.key = key
+        self._lock = threading.Lock()
+        # session -> [depth, value, prior]; weak keys, so a stopped
+        # session's entry is collected
+        self._state: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+    def enter(self, spark: SparkSession, value: str) -> None:
+        with self._lock:
+            st = self._state.get(spark)
+            if st is None:
+                prior = spark.conf.get(self.key, None)
+                if prior != value:
+                    spark.conf.set(self.key, value)
+                st = self._state[spark] = [0, value, prior]
+            elif st[1] != value:
+                raise RuntimeError(
+                    f"overlapping overrides of {self.key} on one session "
+                    f"requested different values ({st[1]} vs {value}); "
+                    "stagger them or use one value"
+                )
+            st[0] += 1
+
+    def leave(self, spark: SparkSession) -> None:
+        with self._lock:
+            st = self._state[spark]
+            st[0] -= 1
+            if st[0] == 0:
+                del self._state[spark]
+                _depth, value, prior = st
+                if prior is None:
+                    spark.conf.unset(self.key)
+                elif prior != value:
+                    spark.conf.set(self.key, prior)
+
+    @contextlib.contextmanager
+    def __call__(self, spark: SparkSession, value: str):
+        self.enter(spark, value)
+        try:
+            yield
+        finally:
+            self.leave(spark)

@@ -6,10 +6,11 @@ modification times scaled /1000). Our warehouse is local-FS, so the listing
 is a plain os.walk surfaced as a DataFrame; the Hadoop-FS path is kept as a
 fallback for object stores.
 
-The listing feeds orphan detection as a *relation* — listing ANTI JOIN
-metadata — which is the scalable shape: at 100 TB the listing itself is
-millions of rows and the join runs distributed, never as a driver-side set
-difference (maintenance.py only collects the final, small, orphan list).
+Both walks build the listing on the driver. Orphan detection
+(maintenance.remove_orphan_files) takes it as rows and subtracts the
+metadata's referenced-path set there: both sides are file-count sized and
+already held in Python, so the difference costs no Spark job.
+``list_files`` surfaces the same rows as a DataFrame.
 """
 
 from __future__ import annotations
@@ -36,6 +37,24 @@ def list_files(
     use_hadoop_fs: bool = False,
 ) -> DataFrame:
     """Recursive listing of ``root`` as (file_path, file_size, modified_at)."""
+    # one Arrow batch, not a defaultParallelism-sliced Python RDD — each
+    # consumer's collect otherwise launches a full-width Python-worker job
+    # for a metadata-sized listing (the _local_frame rule)
+    from demo_iceberg_permanent_delete_spark.lake.table import _local_frame
+
+    return _local_frame(
+        spark, list_file_rows(spark, root, suffix, use_hadoop_fs), LISTING_SCHEMA
+    )
+
+
+def list_file_rows(
+    spark: SparkSession,
+    root: str,
+    suffix: str | None = None,
+    use_hadoop_fs: bool = False,
+) -> list[tuple[str, int, dt.datetime]]:
+    """``list_files``' rows: (file_path, file_size, modified_at as naive
+    UTC) per file under ``root``."""
     if use_hadoop_fs:
         return _list_files_hadoop(spark, root, suffix)
     rows = []
@@ -52,15 +71,12 @@ def list_files(
                     dt.datetime.fromtimestamp(st.st_mtime, dt.timezone.utc).replace(tzinfo=None),
                 )
             )
-    # one Arrow batch, not a defaultParallelism-sliced Python RDD — each
-    # consumer's collect otherwise launches a full-width Python-worker job
-    # for a metadata-sized listing (the _local_frame rule)
-    from demo_iceberg_permanent_delete_spark.lake.table import _local_frame
-
-    return _local_frame(spark, rows, LISTING_SCHEMA)
+    return rows
 
 
-def _list_files_hadoop(spark: SparkSession, root: str, suffix: str | None) -> DataFrame:
+def _list_files_hadoop(
+    spark: SparkSession, root: str, suffix: str | None
+) -> list[tuple[str, int, dt.datetime]]:
     """Hadoop FileSystem walk via py4j — the reference's mechanism
     (s3_utils.py:20-38), kept for object-store warehouses."""
     jvm = spark._jvm
@@ -70,9 +86,7 @@ def _list_files_hadoop(spark: SparkSession, root: str, suffix: str | None) -> Da
     fs = path.getFileSystem(conf)
     rows = []
     if not fs.exists(path):
-        from demo_iceberg_permanent_delete_spark.lake.table import _empty_frame
-
-        return _empty_frame(spark, LISTING_SCHEMA)
+        return rows
     it = fs.listFiles(path, True)  # recursive
     while it.hasNext():
         status = it.next()
@@ -88,9 +102,4 @@ def _list_files_hadoop(spark: SparkSession, root: str, suffix: str | None) -> Da
                 ).replace(tzinfo=None),
             )
         )
-    # one Arrow batch, not a defaultParallelism-sliced Python RDD — each
-    # consumer's collect otherwise launches a full-width Python-worker job
-    # for a metadata-sized listing (the _local_frame rule)
-    from demo_iceberg_permanent_delete_spark.lake.table import _local_frame
-
-    return _local_frame(spark, rows, LISTING_SCHEMA)
+    return rows

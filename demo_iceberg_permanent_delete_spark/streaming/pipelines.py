@@ -20,15 +20,17 @@ Scale notes (100 TB/day story):
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from demo_iceberg_permanent_delete_spark.session import SessionConfOverride
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -602,39 +604,11 @@ def run_available_now(
     )[0]
 
 
-_SHUFFLE_OVERRIDE_LOCK = threading.Lock()
-_SHUFFLE_OVERRIDE: dict = {"depth": 0, "value": None, "before": None}
-
-
-def _enter_shuffle_override(spark: SparkSession, value: str) -> None:
-    """Refcounted session-conf override of spark.sql.shuffle.partitions
-    (same pattern as the lake writer's _MicrosTimestampGuard): the first
-    entrant saves the prior value and sets the override, the last leaver
-    restores it. Overlapping callers wanting DIFFERENT values cannot both
-    hold one session conf — refuse loudly instead of silently pinning the
-    wrong state partitioning into a streaming checkpoint."""
-    with _SHUFFLE_OVERRIDE_LOCK:
-        st = _SHUFFLE_OVERRIDE
-        if st["depth"] == 0:
-            st["before"] = spark.conf.get("spark.sql.shuffle.partitions")
-            st["value"] = value
-            spark.conf.set("spark.sql.shuffle.partitions", value)
-        elif st["value"] != value:
-            raise RuntimeError(
-                "overlapping run_available_now* calls requested different "
-                f"state_partitions ({st['value']} vs {value}); stagger them "
-                "or use one value"
-            )
-        st["depth"] += 1
-
-
-def _leave_shuffle_override(spark: SparkSession) -> None:
-    with _SHUFFLE_OVERRIDE_LOCK:
-        st = _SHUFFLE_OVERRIDE
-        st["depth"] -= 1
-        if st["depth"] == 0:
-            spark.conf.set("spark.sql.shuffle.partitions", st["before"])
-            st["value"] = st["before"] = None
+# Spark pins spark.sql.shuffle.partitions into a streaming checkpoint at
+# first-batch planning: overlapping run_available_now* calls on one
+# session share the override, and a conflicting value is refused rather
+# than silently pinning the wrong state partitioning.
+_shuffle_partitions = SessionConfOverride("spark.sql.shuffle.partitions")
 
 
 def run_available_now_many(
@@ -668,40 +642,38 @@ def run_available_now_many(
     spark = stream_dfs[0].sparkSession
     names = [f"sink_{uuid.uuid4().hex[:12]}" for _ in stream_dfs]
     ckpt_roots = [tempfile.mkdtemp(prefix="ckpt_") for _ in stream_dfs]
+    # Spark reads the shuffle-partition count at first-batch planning,
+    # not at .start() — keep it set until every bounded query terminates
+    override = (
+        contextlib.nullcontext()
+        if state_partitions is None
+        else _shuffle_partitions(spark, str(state_partitions))
+    )
     queries = []
     try:
-        if state_partitions is not None:
-            # Spark reads this at first-batch planning, not at .start() —
-            # keep it set until every bounded query terminates. Refcount-
-            # guarded (round-11 advisor finding): two OVERLAPPING calls
-            # from driver threads must not capture each other's override
-            # as 'before' or strip it mid-planning; a concurrent call
-            # asking for a DIFFERENT value cannot compose and raises.
-            _enter_shuffle_override(spark, str(state_partitions))
-        for df, mode, name, root in zip(
-            stream_dfs, output_modes, names, ckpt_roots
-        ):
-            queries.append(
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .option("checkpointLocation", os.path.join(root, "cp"))
-                .trigger(availableNow=True)
-                .start()
-            )
-        try:
-            for name, q in zip(names, queries):
-                if not q.awaitTermination(timeout_s):
-                    raise TimeoutError(
-                        f"stream {name} did not finish in {timeout_s}s"
-                    )
-        finally:
-            for q in queries:
-                if q.isActive:
-                    q.stop()
+        with override:
+            for df, mode, name, root in zip(
+                stream_dfs, output_modes, names, ckpt_roots
+            ):
+                queries.append(
+                    df.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode(mode)
+                    .option("checkpointLocation", os.path.join(root, "cp"))
+                    .trigger(availableNow=True)
+                    .start()
+                )
+            try:
+                for name, q in zip(names, queries):
+                    if not q.awaitTermination(timeout_s):
+                        raise TimeoutError(
+                            f"stream {name} did not finish in {timeout_s}s"
+                        )
+            finally:
+                for q in queries:
+                    if q.isActive:
+                        q.stop()
     finally:
-        if state_partitions is not None:
-            _leave_shuffle_override(spark)
         # the memory-sink tables are already materialized; the single-use
         # checkpoints are dead weight (8 MB of state-store deltas per run
         # that accumulate across repeated bench/test invocations)

@@ -257,10 +257,15 @@ def test_insert_select_allows_any_omitted_column(spark, tmp_path):
 def test_micros_guard_is_per_session(spark):
     """Round-11 advisor: with process-global depth, a second session
     entering while the first held the guard never got the conf set on
-    ITS OWN session (silently emitting statless INT96 files). The guard
-    now keys depth/prev per session."""
+    ITS OWN session (silently emitting statless INT96 files). The
+    streaming shuffle-partition override had the same process-global
+    state: a second session asking for its own value was refused and
+    never got the conf. Both guards key depth/prior per session."""
     from demo_iceberg_permanent_delete_spark.lake.datafiles import (
         _micros_timestamps,
+    )
+    from demo_iceberg_permanent_delete_spark.streaming.pipelines import (
+        _shuffle_partitions,
     )
 
     key = "spark.sql.parquet.outputTimestampType"
@@ -277,26 +282,45 @@ def test_micros_guard_is_per_session(spark):
         assert spark.conf.get(key) == "TIMESTAMP_MICROS"
     assert spark.conf.get(key, None) is None
 
+    key = "spark.sql.shuffle.partitions"
+    before, other_before = spark.conf.get(key), other.conf.get(key)
+    with _shuffle_partitions(spark, "7"):
+        with _shuffle_partitions(other, "9"):
+            assert other.conf.get(key) == "9", (
+                "second session must get its own override"
+            )
+            assert spark.conf.get(key) == "7"
+        assert other.conf.get(key) == other_before
+        assert spark.conf.get(key) == "7"
+    assert spark.conf.get(key) == before
+
 
 def test_shuffle_override_refuses_conflicting_overlap(spark):
     """Round-11 advisor: overlapping run_available_now* overrides must
-    not race the set/restore; a conflicting concurrent value raises."""
+    not race the set/restore; a conflicting concurrent value raises, and
+    the refused call leaves the holder's override in place (it used to
+    release a hold it never took, restoring the conf under the holder)."""
     import pytest as _pytest
 
     from demo_iceberg_permanent_delete_spark.streaming.pipelines import (
-        _enter_shuffle_override,
-        _leave_shuffle_override,
+        _shuffle_partitions,
+        run_available_now_many,
     )
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    _enter_shuffle_override(spark, "7")
+    _shuffle_partitions.enter(spark, "7")
     try:
         assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-        _enter_shuffle_override(spark, "7")  # same value refcounts
-        _leave_shuffle_override(spark)
+        _shuffle_partitions.enter(spark, "7")  # same value refcounts
+        _shuffle_partitions.leave(spark)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
         with _pytest.raises(RuntimeError, match="different"):
-            _enter_shuffle_override(spark, "9")
+            _shuffle_partitions.enter(spark, "9")
+        with _pytest.raises(RuntimeError, match="different"):
+            run_available_now_many(
+                [spark.readStream.format("rate").load()], state_partitions=9
+            )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
     finally:
-        _leave_shuffle_override(spark)
+        _shuffle_partitions.leave(spark)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before

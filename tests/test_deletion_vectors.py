@@ -138,12 +138,11 @@ def test_dv_arrow_writer_matches_executor_path(spark, tmp_path, monkeypatch):
     """The round-11 driver-side DV writer must be indistinguishable from
     the executor path: same visible rows, same DV semantics (record_count
     = cardinality, sorted positions, dv flag, referenced-files harvest).
-    The executor path is forced via the row gate."""
-    import demo_iceberg_permanent_delete_spark.lake.table as table_mod
-    from demo_iceberg_permanent_delete_spark.lake import Catalog
+    The executor path is forced via the driver budget."""
+    from demo_iceberg_permanent_delete_spark.lake import Catalog, datafiles
 
     def build(gate):
-        monkeypatch.setattr(table_mod, "_DV_ARROW_MAX_POSITIONS", gate)
+        monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", gate)
         wh = str(tmp_path / f"wh_{gate}")
         cat = Catalog(spark, wh)
         cat.create_namespace("default")
@@ -158,8 +157,11 @@ def test_dv_arrow_writer_matches_executor_path(spark, tmp_path, monkeypatch):
         t.delete("id % 7 = 3")
         return t
 
-    t_arrow = build(1_000_000)  # driver path
-    t_exec = build(0)  # gate 0 forces the executor path
+    t_arrow = build(datafiles.DRIVER_MAX_ROWS)  # driver path
+    # a budget under the 143 matches forces the executor path; above the
+    # DV file's rows (one per data file) it keeps the referenced-files
+    # harvest, which the same budget bounds
+    t_exec = build(16)
     got = sorted(map(tuple, t_arrow.read().collect()))
     want = sorted(map(tuple, t_exec.read().collect()))
     assert got == want and got

@@ -6,7 +6,7 @@ decodes content=2 but never creates it — file_summary_utils.py:146)."""
 from __future__ import annotations
 
 from tests.conftest import one_part
-from demo_iceberg_permanent_delete_spark.lake import Catalog
+from demo_iceberg_permanent_delete_spark.lake import Catalog, datafiles
 
 DDL = "k bigint, name string, v double"
 
@@ -22,13 +22,18 @@ def _rows(spark, data):
     return one_part(spark, data, DDL)
 
 
-def test_equality_delete_masks_matching_rows(spark, tmp_path):
-    t = _table(spark, tmp_path)
-    t.insert(_rows(spark, [(1, "a", 1.0), (2, "b", 2.0), (3, "a", 3.0)]))
-    snap = t.equality_delete(spark.createDataFrame([("a",)], "name string"))
-    assert snap is not None
-    assert [e.content for e in t.metadata.current_snapshot().delete_files()] == [2]
-    assert sorted(r["k"] for r in t.read().collect()) == [2]
+def test_equality_delete_masks_matching_rows(spark, tmp_path, monkeypatch):
+    # the default driver budget writes the key file with pyarrow; budget 0
+    # takes the executor write: same rows, files and manifest
+    for budget in (datafiles.DRIVER_MAX_ROWS, 0):
+        monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", budget)
+        t = _table(spark, tmp_path / f"budget{budget}")
+        t.insert(_rows(spark, [(1, "a", 1.0), (2, "b", 2.0), (3, "a", 3.0)]))
+        snap = t.equality_delete(spark.createDataFrame([("a",)], "name string"))
+        assert snap is not None
+        dels = t.metadata.current_snapshot().delete_files()
+        assert [(e.content, e.record_count) for e in dels] == [(2, 1)]
+        assert sorted(r["k"] for r in t.read().collect()) == [2]
 
 
 def test_equality_delete_sequence_later_inserts_survive(spark, tmp_path):

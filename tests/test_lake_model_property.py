@@ -23,13 +23,37 @@ import pytest
 
 pytestmark = pytest.mark.slow  # ~160 s of randomized DML sequences
 
-from demo_iceberg_permanent_delete_spark.lake import Catalog
+from demo_iceberg_permanent_delete_spark.lake import Catalog, datafiles
 
 DDL = "k bigint, v bigint, s string"
 FUTURE = dt.datetime(2100, 1, 1)
 
 N_SEEDS = 5
 N_STEPS = 14
+# seeds also run with a driver budget of 0 (every driver-collect site
+# takes its executor path), checked against a default-budget run
+BUDGET0_SEEDS = (0, 1)
+
+
+def _fingerprint(table):
+    """What the two budget runs must agree on: visible rows, and per
+    snapshot its operation and the (content, record count, dv) of every
+    manifest entry. File paths, sizes and referenced-file lists are left
+    out: paths are random, and pyarrow and Spark write different bytes."""
+    rows = sorted(
+        (r["k"], r["v"], r["s"]) for r in table.read().collect()
+    )
+    snaps = [
+        (
+            s.operation,
+            sorted(
+                (e.content, e.record_count, bool(getattr(e, "dv", False)))
+                for e in s.manifest
+            ),
+        )
+        for s in table.metadata.snapshots
+    ]
+    return rows, snaps
 
 
 def _rows_lin(table):
@@ -45,8 +69,35 @@ def _rows_lin(table):
     return vals, lin
 
 
-@pytest.mark.parametrize("seed", range(N_SEEDS))
-def test_random_dml_sequences_match_model(spark, tmp_path, seed):
+@pytest.mark.parametrize(
+    "seed,budget",
+    [(seed, None) for seed in range(N_SEEDS)]
+    + [(seed, 0) for seed in BUDGET0_SEEDS],
+    ids=[str(seed) for seed in range(N_SEEDS)]
+    + [f"{seed}-budget0" for seed in BUDGET0_SEEDS],
+)
+def test_random_dml_sequences_match_model(
+    spark, tmp_path, monkeypatch, seed, budget
+):
+    if budget is None:
+        _run_sequence(spark, tmp_path, seed)
+        return
+    want_rows, want_snaps = _fingerprint(
+        _run_sequence(spark, tmp_path / "default", seed)
+    )
+    monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", budget)
+    got_rows, got_snaps = _fingerprint(
+        _run_sequence(spark, tmp_path / f"budget{budget}", seed)
+    )
+    assert got_rows == want_rows
+    assert got_snaps == want_snaps, (
+        f"seed {seed}: budget {budget} wrote different manifests"
+    )
+
+
+def _run_sequence(spark, tmp_path, seed):
+    """One random DML sequence, checked against the model after every
+    step; returns the table."""
     rnd = random.Random(9000 + seed)
     cat = Catalog(spark, str(tmp_path / f"wh{seed}"))
     cat.create_namespace("default")
@@ -254,3 +305,4 @@ def test_random_dml_sequences_match_model(spark, tmp_path, seed):
         assert got_lin == lin_states[sid], (
             f"seed {seed}: time travel to {sid} lineage diverged"
         )
+    return t

@@ -8,8 +8,7 @@ from __future__ import annotations
 import pytest
 
 from tests.conftest import one_part
-from demo_iceberg_permanent_delete_spark.lake import Catalog
-from demo_iceberg_permanent_delete_spark.lake import table as table_mod
+from demo_iceberg_permanent_delete_spark.lake import Catalog, datafiles
 
 DDL = "k bigint, name string"
 
@@ -44,7 +43,7 @@ def test_distributed_views_match_local(lifecycle_table, monkeypatch):
     local_entries = _collect(t.meta("all_entries"), "data_file")
     assert any("status=2" in r for r in local_entries), "fixture lacks removals"
 
-    monkeypatch.setattr(table_mod, "_META_LOCAL_MAX_ENTRIES", 0)
+    monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", 0)
     dist_files_df = t.meta("files")
     dist_entries_df = t.meta("all_entries")
 
@@ -66,7 +65,7 @@ def test_distributed_views_after_expire(lifecycle_table, monkeypatch):
     local_files = _collect(t.meta("files"), "file_path")
     local_entries = _collect(t.meta("all_entries"), "data_file")
 
-    monkeypatch.setattr(table_mod, "_META_LOCAL_MAX_ENTRIES", 0)
+    monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", 0)
     assert _collect(t.meta("files"), "file_path") == local_files
     assert _collect(t.meta("all_entries"), "data_file") == local_entries
 

@@ -136,3 +136,42 @@ def test_micros_guard_concurrent_writes_in_unpinned_session(spark, tmp_path):
     finally:
         if prev is not None:
             spark.conf.set(key, prev)
+
+
+def test_session_conf_override_holds_under_thread_stress(spark):
+    """Many threads entering and leaving one per-session override on two
+    sessions, with a short switch interval: every holder sees the
+    override on its own session, and the last one out restores it."""
+    import sys
+
+    from demo_iceberg_permanent_delete_spark.session import SessionConfOverride
+
+    key = "spark.sql.parquet.compression.codec"
+    override = SessionConfOverride(key)
+    sessions = [spark, spark.newSession()]
+    before = [s.conf.get(key, None) for s in sessions]
+    wrong: list[str] = []
+
+    def hold(session):
+        for _ in range(20):
+            with override(session, "zstd"):
+                got = session.conf.get(key)
+                if got != "zstd":
+                    wrong.append(got)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=hold, args=(sessions[i % 2],))
+            for i in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not wrong
+    assert [s.conf.get(key, None) for s in sessions] == before

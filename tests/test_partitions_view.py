@@ -6,7 +6,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from demo_iceberg_permanent_delete_spark.lake import Catalog
+from demo_iceberg_permanent_delete_spark.lake import Catalog, datafiles
 
 
 def _rows(ts_day: int, n: int, base: int = 0):
@@ -16,30 +16,45 @@ def _rows(ts_day: int, n: int, base: int = 0):
     ]
 
 
-def test_partitions_view_identity_and_days(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    cat.create_namespace("default")
-    t = cat.create_table(
-        "default.pt",
-        "id bigint, v string, ts timestamp",
-        partition_by=["days(ts)"],
-    )
-    t.insert(spark.createDataFrame(_rows(5, 4), "id long, v string, ts timestamp"))
-    t.insert(spark.createDataFrame(_rows(6, 3, 100), "id long, v string, ts timestamp"))
+def test_partitions_view_identity_and_days(spark, tmp_path, monkeypatch):
+    # the default driver budget harvests partition counts at write time;
+    # budget 0 leaves them unset and the view scans: same rows
+    default = datafiles.DRIVER_MAX_ROWS
+    views = {}
+    for budget in (default, 0):
+        monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", budget)
+        cat = Catalog(spark, str(tmp_path / f"wh{budget}"))
+        cat.create_namespace("default")
+        t = cat.create_table(
+            "default.pt",
+            "id bigint, v string, ts timestamp",
+            partition_by=["days(ts)"],
+        )
+        t.insert(spark.createDataFrame(_rows(5, 4), "id long, v string, ts timestamp"))
+        t.insert(spark.createDataFrame(_rows(6, 3, 100), "id long, v string, ts timestamp"))
 
-    parts = {
-        tuple(sorted(r["partition"].items())): r
-        for r in t.meta("partitions").collect()
-    }
-    assert (("days(ts)", "2024-06-05"),) in parts
-    assert (("days(ts)", "2024-06-06"),) in parts
-    assert parts[(("days(ts)", "2024-06-05"),)]["record_count"] == 4
-    assert parts[(("days(ts)", "2024-06-06"),)]["record_count"] == 3
-    assert all(r["file_count"] >= 1 for r in parts.values())
+        parts = {
+            tuple(sorted(r["partition"].items())): r
+            for r in t.meta("partitions").collect()
+        }
+        assert (("days(ts)", "2024-06-05"),) in parts
+        assert (("days(ts)", "2024-06-06"),) in parts
+        assert parts[(("days(ts)", "2024-06-05"),)]["record_count"] == 4
+        assert parts[(("days(ts)", "2024-06-06"),)]["record_count"] == 3
+        assert all(r["file_count"] >= 1 for r in parts.values())
 
-    # record counts must reconcile with the table scan
-    total = sum(r["record_count"] for r in parts.values())
-    assert total == t.read().count()
+        # record counts must reconcile with the table scan
+        total = sum(r["record_count"] for r in parts.values())
+        assert total == t.read().count()
+        harvested = [
+            e.partition_counts is not None
+            for e in t.metadata.current_snapshot().data_files()
+        ]
+        assert all(harvested) if budget else not any(harvested)
+        views[budget] = sorted(
+            (k, r["record_count"], r["file_count"]) for k, r in parts.items()
+        )
+    assert views[0] == views[default]
 
 
 def test_partitions_view_unpartitioned_single_row(spark, tmp_path):

@@ -12,7 +12,7 @@ import os
 import pytest
 
 from tests.conftest import one_part
-from demo_iceberg_permanent_delete_spark.lake import Catalog
+from demo_iceberg_permanent_delete_spark.lake import Catalog, datafiles
 from demo_iceberg_permanent_delete_spark.lake.metadata import (
     CONTENT_DATA,
     CONTENT_EQUALITY_DELETES,
@@ -192,41 +192,46 @@ def test_upsert_eq_batch_dedup_latest_wins(spark, tmp_path):
     assert rows == {1: "new", 2: "x"}
 
 
-def test_table_upsert_unit_semantics(spark, tmp_path):
+def test_table_upsert_unit_semantics(spark, tmp_path, monkeypatch):
     """Direct LakeTable.upsert: the commit's own data files survive its
     own eq-delete (same sequence number — strict < rule); older rows with
     matching keys are masked; unknown key columns are rejected; the
-    empty-table first batch writes no delete file."""
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    cat.create_namespace("default")
-    t = cat.create_table("default.u", "k bigint, v string")
+    empty-table first batch writes no delete file. The default driver
+    budget derives the eq-delete keys with pyarrow; budget 0 takes the
+    Spark read-distinct path: same rows, files and manifests."""
+    for budget in (datafiles.DRIVER_MAX_ROWS, 0):
+        monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", budget)
+        cat = Catalog(spark, str(tmp_path / f"wh{budget}"))
+        cat.create_namespace("default")
+        t = cat.create_table("default.u", "k bigint, v string")
 
-    s1 = t.upsert(one_part(spark, [(1, "a"), (2, "b")], "k long, v string"), on=["k"])
-    assert s1.operation == "overwrite"
-    # empty-table fast path: no eq-delete entry in the first commit
-    assert all(e.content == CONTENT_DATA for e in s1.manifest)
+        s1 = t.upsert(one_part(spark, [(1, "a"), (2, "b")], "k long, v string"), on=["k"])
+        assert s1.operation == "overwrite"
+        # empty-table fast path: no eq-delete entry in the first commit
+        assert all(e.content == CONTENT_DATA for e in s1.manifest)
 
-    s2 = t.upsert(one_part(spark, [(2, "B"), (3, "c")], "k long, v string"), on=["k"])
-    eq = [e for e in s2.manifest if e.content == CONTENT_EQUALITY_DELETES]
-    assert len(eq) == 1 and eq[0].equality_columns == ["k"]
-    # both files of commit 2 share its sequence number
-    assert all(
-        e.sequence_number == s2.sequence_number
-        for e in s2.manifest
-        if e.added_snapshot_id == s2.snapshot_id
-    )
-    assert sorted((r["k"], r["v"]) for r in t.read().collect()) == [
-        (1, "a"),
-        (2, "B"),
-        (3, "c"),
-    ]
-    # time travel: the pre-upsert snapshot still reads the old value
-    assert sorted(
-        (r["k"], r["v"]) for r in t.read(snapshot_id=s1.snapshot_id).collect()
-    ) == [(1, "a"), (2, "b")]
+        s2 = t.upsert(one_part(spark, [(2, "B"), (3, "c")], "k long, v string"), on=["k"])
+        eq = [e for e in s2.manifest if e.content == CONTENT_EQUALITY_DELETES]
+        assert len(eq) == 1 and eq[0].equality_columns == ["k"]
+        assert eq[0].record_count == 2  # the batch's distinct keys
+        # both files of commit 2 share its sequence number
+        assert all(
+            e.sequence_number == s2.sequence_number
+            for e in s2.manifest
+            if e.added_snapshot_id == s2.snapshot_id
+        )
+        assert sorted((r["k"], r["v"]) for r in t.read().collect()) == [
+            (1, "a"),
+            (2, "B"),
+            (3, "c"),
+        ]
+        # time travel: the pre-upsert snapshot still reads the old value
+        assert sorted(
+            (r["k"], r["v"]) for r in t.read(snapshot_id=s1.snapshot_id).collect()
+        ) == [(1, "a"), (2, "b")]
 
-    with pytest.raises(ValueError, match="not in table schema"):
-        t.upsert(one_part(spark, [(1, "z")], "k long, v string"), on=["nope"])
+        with pytest.raises(ValueError, match="not in table schema"):
+            t.upsert(one_part(spark, [(1, "z")], "k long, v string"), on=["nope"])
 
 
 def test_upsert_eq_changes_feed(spark, tmp_path):
