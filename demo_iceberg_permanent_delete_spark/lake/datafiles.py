@@ -24,6 +24,7 @@ from typing import Any
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from demo_iceberg_permanent_delete_spark.lake.metadata import (
     CONTENT_DATA,
@@ -149,23 +150,59 @@ def collect_if_small(df: DataFrame, row_bound: int | None = None):
     most DRIVER_MAX_ROWS + 1 rows to the driver. The collected batch
     is the result: on overflow it is discarded whole, so a
     non-deterministic source cannot split its rows across the two
-    paths. Any Spark or Arrow error also returns None."""
+    paths. Any Spark or Arrow error also returns None. A frame whose
+    optimized plan is a LocalRelation is read with collect(), which
+    starts no job (_collect_local), under the same row rules."""
     try:
-        if row_bound is not None:
-            if not fits_driver(row_bound):
-                return None
+        if row_bound is not None and not fits_driver(row_bound):
+            return None
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if plan.getClass().getSimpleName() == "LocalRelation" and _rows_exact(
+            df.schema
+        ):
+            table = _collect_local(df)
+        elif row_bound is not None:
+            table = df.toArrow()
+        elif not _row_preserving(plan):
+            table = df.limit(DRIVER_MAX_ROWS + 1).toArrow()
+        elif int(str(plan.stats().sizeInBytes())) <= DRIVER_MAX_PLAN_BYTES:
             table = df.toArrow()
         else:
-            plan = df._jdf.queryExecution().optimizedPlan()
-            if not _row_preserving(plan):
-                table = df.limit(DRIVER_MAX_ROWS + 1).toArrow()
-            elif int(str(plan.stats().sizeInBytes())) <= DRIVER_MAX_PLAN_BYTES:
-                table = df.toArrow()
-            else:
-                return None
+            return None
     except Exception:
         return None
     return table if fits_driver(table.num_rows) else None
+
+
+def _rows_exact(schema: T.StructType) -> bool:
+    """Whether collect() values of ``schema`` convert back to Arrow
+    exactly. TimestampType is left out: collect() renders it as a naive
+    datetime in the Python process's local zone."""
+    exact = (
+        T.StringType,
+        T.BinaryType,
+        T.BooleanType,
+        T.NumericType,
+        T.DateType,
+        T.TimestampNTZType,
+    )
+    return all(isinstance(f.dataType, exact) for f in schema.fields)
+
+
+def _collect_local(df: DataFrame):
+    """A frame whose optimized plan is a LocalRelation (driver-held rows,
+    e.g. a filter over an Arrow-backed createDataFrame) as a pyarrow
+    Table: Spark answers collect() from the relation with no job, where
+    toArrow() runs one."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(df.schema)
+    rows = df.collect()
+    return pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(schema)],
+        schema=schema,
+    )
 
 
 def _truncate_lower(s: str) -> str:

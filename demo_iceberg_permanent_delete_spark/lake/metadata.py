@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import threading
 import time
 import uuid
@@ -197,6 +198,25 @@ def entry_sequence(
     if snap_order is None:
         return unknown
     return snap_order.get(entry.added_snapshot_id, unknown)
+
+
+def plain_path(path: str) -> bool:
+    """Whether ``path`` reads the same as a URI path: it holds no
+    character that Spark's ``_metadata.file_path`` percent-encodes."""
+    return re.fullmatch(r"[A-Za-z0-9_/.=-]*", path) is not None
+
+
+def path_spellings(path: str) -> tuple[str, ...]:
+    """The data-file paths a position-delete row's ``file_path`` may name:
+    the value itself and, when it differs, its percent-decoded form.
+    Delete files written before the engine decoded Spark's
+    ``_metadata.file_path`` (LakeTable._with_position) hold the encoded
+    spelling under a location that needs URL encoding; matching through
+    the decoded one keeps those tombstones applied in every reader."""
+    from urllib.parse import unquote
+
+    decoded = unquote(path)
+    return (path,) if decoded == path else (path, decoded)
 
 
 @dataclass

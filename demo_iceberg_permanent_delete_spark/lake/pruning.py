@@ -35,6 +35,8 @@ from typing import Any
 from demo_iceberg_permanent_delete_spark.lake.metadata import (
     ManifestEntry,
     entry_sequence,
+    path_spellings,
+    plain_path,
 )
 
 _CMP_RE = re.compile(
@@ -814,6 +816,7 @@ def scope_delete_files(
         return list(delete_entries)
     paths = sorted(e.file_path for e in data_entries)
     path_set = set(paths)
+    paths_plain = all(plain_path(p) for p in paths)
     # hoisted once — the eq-delete branch used to recompute per-candidate
     # sequences and bounds PER DELETE FILE, an O(deletes × candidates ×
     # key columns) rescan of identical values (review-style constant
@@ -835,11 +838,15 @@ def scope_delete_files(
             refs = getattr(e, "referenced_files", None)
             if refs:
                 # exact: the entry knows every data file it references
-                if any(p in path_set for p in refs):
+                if any(
+                    q in path_set for r in refs for q in path_spellings(r)
+                ):
                     out.append(e)
                 continue
             b = _bounds_for(e, "file_path")
-            if b is None:
+            if b is None or not paths_plain:
+                # (bounds over percent-encoded spellings prove nothing
+                # about plain paths: see metadata.path_spellings)
                 out.append(e)
                 continue
             lo, hi = b

@@ -129,11 +129,13 @@ class LakeEngine:
         # (TableMetadata.latest_version), so any commit — from this
         # facade, a LakeTable handle, or another process — invalidates
         # naturally; mutating statement handlers never use the cache.
-        #   name → (metadata_version, identity, LakeTable, read() DataFrame)
-        self._table_cache: dict[str, tuple] = {}
+        #   name → [metadata_version, identity, LakeTable, full read() df
+        #   or None until a statement needs it (_cached_read)]
+        self._table_cache: dict[str, list] = {}
         #   (name, metadata_version, predicate) → scan_estimate dict
         self._estimate_cache: dict[tuple, dict] = {}
-        #   (name, metadata_version, predicate) → manifest-pruned scan df
+        #   (name, metadata_version, predicate) → manifest-pruned executor
+        #   scan df (driver-read scans are not kept: see _cached_scan)
         self._scan_cache: dict[tuple, DataFrame] = {}
         #   (name, metadata_version, view) already registered this session
         #   — each metadata view pays a driver-side build (manifest walk,
@@ -141,9 +143,20 @@ class LakeEngine:
         #   same views in consecutive statements
         self._meta_view_reg: set[tuple] = set()
 
-    def _cached_table(self, name: str) -> tuple[LakeTable, DataFrame]:
-        """Version-checked cached (LakeTable, read DataFrame) for SELECT
-        paths. One registry read + one listdir + one stat when unchanged.
+    def _cache_key(self, name: str) -> str:
+        # the session read branch is part of table identity for reads:
+        # the same name under spark.wap.branch serves the BRANCH head
+        # (Iceberg's WAP read routing), so it caches under its own key —
+        # branch commits bump the metadata version, which the staleness
+        # probe in _cached_table already watches
+        wb = self._active_read_branch()
+        return name if wb is None else f"{name}@{wb}"
+
+    def _cached_table(self, name: str) -> LakeTable:
+        """Version-checked cached LakeTable for SELECT paths. One registry
+        read + one listdir + one stat when unchanged. The full read is
+        not built here (_cached_read): a statement whose WHERE scopes the
+        table registers its pruned scan instead.
 
         The version number alone is not table identity: DROP PURGE +
         CREATE of the same name reuses the deterministic location and
@@ -162,16 +175,10 @@ class LakeEngine:
 
         reg = self.catalog._read_registry()
         entry = reg["tables"].get(name)
-        # the session read branch is part of table identity for reads:
-        # the same name under spark.wap.branch serves the BRANCH head
-        # (Iceberg's WAP read routing), so it caches under its own key —
-        # branch commits bump the metadata version, which the staleness
-        # probe below already watches
-        wb = self._active_read_branch()
-        cache_key = name if wb is None else f"{name}@{wb}"
+        cache_key = self._cache_key(name)
         cached = self._table_cache.get(cache_key)
         if entry is not None and cached is not None:
-            version, ident, t, df = cached
+            version, ident, t, _ = cached
             try:
                 latest = TableMetadata.latest_version(entry["location"])
             except OSError:
@@ -187,11 +194,10 @@ class LakeEngine:
                 and cur_ident == ident
                 and t.metadata.location == entry["location"]
             ):
-                return t, df
+                return t
         t = self.catalog.load_table(name)
-        df = self._branch_read(t)
         ident = doc_identity(t.metadata.location, t.metadata.version)
-        self._table_cache[cache_key] = (t.metadata.version, ident, t, df)
+        self._table_cache[cache_key] = [t.metadata.version, ident, t, None]
         # drop the table's stale estimates/scans with it (a same-version
         # recreate would otherwise serve the old table's)
         self._estimate_cache = {
@@ -203,11 +209,22 @@ class LakeEngine:
         self._meta_view_reg = {
             k for k in self._meta_view_reg if k[0] != name
         }
-        return t, df
+        return t
+
+    def _cached_read(self, name: str, t: LakeTable) -> DataFrame:
+        """The full (session-branch) read of ``t``, built once per cached
+        table handle: for statements with no scoped predicate on it, and
+        as the fallback when the pruned scan fails."""
+        cached = self._table_cache.get(self._cache_key(name))
+        if cached is None or cached[2] is not t:
+            return self._branch_read(t)
+        if cached[3] is None:
+            cached[3] = self._branch_read(t)
+        return cached[3]
 
     def _cached_scan(
-        self, name: str, t: LakeTable, predicate: str, fallback: DataFrame
-    ):
+        self, name: str, t: LakeTable, predicate: str
+    ) -> DataFrame | None:
         """Manifest-pruned read for a statement whose WHERE provably
         scopes this table's single scan (lake/scanscope.py): files whose
         min/max stats cannot match are never opened — Iceberg's scan
@@ -216,7 +233,12 @@ class LakeEngine:
         statement's own WHERE above the view is the single evaluation,
         so a non-deterministic conjunct (rand()) is never drawn twice,
         and the only layer that must be sound is the conservative pruner
-        (unevaluable leaves keep every file)."""
+        (unevaluable leaves keep every file). None when the scan fails.
+
+        Candidates within the driver budget come back driver-read (a
+        LocalRelation holding the rows, LakeTable._driver_read). Those
+        are rebuilt per statement and never cached: the cache holds
+        executor scans, which are plans, so it pins no table data."""
         key = (name, t.metadata.version, predicate)
         df = self._scan_cache.get(key)
         if df is None:
@@ -225,10 +247,10 @@ class LakeEngine:
             except Exception:
                 # never cache a failure under the predicate key (a
                 # transient error must not pin the unpruned read for the
-                # version) — the caller's already-cached full read is the
-                # free safe answer
-                return fallback
-            _store(self._scan_cache, key, df, cap=64)
+                # version) — the caller falls back to the full read
+                return None
+            if not df.isLocal():
+                _store(self._scan_cache, key, df, cap=64)
         return df
 
     def _cached_estimate(self, name: str, t: LakeTable, predicate):
@@ -1648,7 +1670,7 @@ class LakeEngine:
             # main manifest — defer to the general (branch-routed) path
             return None
         try:
-            t, _ = self._cached_table(self._strip_catalog(ident))
+            t = self._cached_table(self._strip_catalog(ident))
         except Exception:
             return None
         parsed: list[tuple[str, str, str | None]] = []
@@ -1829,7 +1851,7 @@ class LakeEngine:
             extract_scan_predicates,
         )
 
-        loaded: dict[str, tuple[LakeTable, DataFrame]] = {
+        loaded: dict[str, LakeTable] = {
             name: self._cached_table(name) for name in needed
         }
         rewritten = "".join(segments)
@@ -1837,8 +1859,8 @@ class LakeEngine:
             predicates = extract_scan_predicates(
                 rewritten,
                 {
-                    name.replace(".", "__"): set(df.columns)
-                    for name, (_, df) in loaded.items()
+                    name.replace(".", "__"): set(t.schema().names)
+                    for name, t in loaded.items()
                 },
                 occurrences,
             )
@@ -1850,13 +1872,14 @@ class LakeEngine:
         # keep the branch read as-is (correct first, fast later)
         on_branch = self._active_read_branch() is not None
         for name, views in needed.items():
-            t, df = loaded[name]
+            t = loaded[name]
             pred = None if on_branch else predicates.get(name.replace(".", "__"))
             est = self._cached_estimate(name, t, pred) if not on_branch else None
-            if pred is not None:
-                # register the manifest-pruned scan, not the full read —
-                # Spark re-applies the statement's WHERE above the view
-                df = self._cached_scan(name, t, pred, fallback=df)
+            # register the manifest-pruned scan, not the full read —
+            # Spark re-applies the statement's WHERE above the view
+            df = None if pred is None else self._cached_scan(name, t, pred)
+            if df is None:
+                df = self._cached_read(name, t)
             if est is not None and 0 < est["bytes"] <= _broadcast_threshold(
                 self.spark, None
             ):

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from demo_iceberg_permanent_delete_spark.lake.datafiles import (
+    DRIVER_MAX_PLAN_BYTES,
     TARGET_FILE_SIZE_BYTES,
     collect_if_small,
     fits_driver,
@@ -45,6 +46,7 @@ from demo_iceberg_permanent_delete_spark.lake.metadata import (
     Snapshot,
     TableMetadata,
     entry_sequence,
+    plain_path,
 )
 
 # A broadcast of the delete set is safe well past this size; beyond it we let
@@ -904,12 +906,21 @@ class LakeTable:
             out = self._apply_delete_files(out, delete_files, data_files)
         return out.select(*cols)
 
-    def _with_position(self, df: DataFrame) -> DataFrame:
-        """Attach physical (file_path, pos) — stable per parquet file."""
+    @staticmethod
+    def _with_position(df: DataFrame, paths: list[str]) -> DataFrame:
+        """Attach physical (file_path, pos) — stable per parquet file.
+
+        ``__fp`` is the manifest path byte for byte, the key delete files
+        are written and scoped against. Spark's ``_metadata.file_path`` is
+        a URI, percent-encoded wherever ``paths`` hold a character a URI
+        path may not (a space, ``%``), so it is decoded back unless every
+        path is plain. The decoder (java.net.URLDecoder) reads ``+`` as a
+        space while in a URI it is literal, so ``+`` is escaped first."""
+        fp = F.regexp_replace(F.col("_metadata.file_path"), "^file:", "")
+        if not all(plain_path(p) for p in paths):
+            fp = F.url_decode(F.regexp_replace(fp, "\\+", "%2B"))
         return df.select(
-            "*",
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:", "").alias("__fp"),
-            F.col("_metadata.row_index").alias("__pos"),
+            "*", fp.alias("__fp"), F.col("_metadata.row_index").alias("__pos")
         )
 
     def _read_data_entries(
@@ -974,7 +985,7 @@ class LakeTable:
             df = self._data_reader(lineage=lineage).parquet(*paths)
             if positions:
                 # before the union: _metadata resolves only on the scan
-                df = self._with_position(df)
+                df = self._with_position(df, paths)
             if missing:
                 df = df.withColumns(
                     {
@@ -989,6 +1000,69 @@ class LakeTable:
         if lineage:
             out = self._attach_lineage(out, entries)
         return out
+
+    def _driver_read(
+        self,
+        data_entries: list[ManifestEntry],
+        delete_files: list[ManifestEntry],
+        *,
+        positions: bool = False,
+    ) -> DataFrame | None:
+        """The merged read of ``data_entries`` built on the driver, or None
+        when it is past the driver budget or a type does not convert
+        through Arrow: the caller then builds the executor read. The
+        budget counts every file the read opens, each time it opens it —
+        the data files plus, per data file, the delete files it sees
+        (delete_reads) — against DRIVER_MAX_ROWS by manifest record count
+        and DRIVER_MAX_PLAN_BYTES by file size, so many small delete
+        files (one equality-delete file per streaming upsert) send the
+        read to the executor anti-join, which reads each of them once.
+
+        The files go through the DataSource's per-file MOR reader
+        (sources/lake_datasource.py read_entries_arrow: the same delete,
+        rename, default and widening resolution its executor tasks run)
+        and come back as ``createDataFrame(arrow_table)``, a LocalRelation:
+        Spark folds a statement's filter and projection over it and
+        collects the result with no job, where the parquet scan plus the
+        delete anti-join costs one or two per statement. Columns: the
+        declared schema, then ``__fp``/``__pos`` with ``positions`` (the
+        positioned executor read's column set)."""
+        from demo_iceberg_permanent_delete_spark.sources.lake_datasource import (
+            delete_reads,
+            read_entries_arrow,
+        )
+
+        reads = [
+            *data_entries,
+            *delete_reads(self.metadata, data_entries, delete_files),
+        ]
+        if not fits_driver(sum(e.record_count for e in reads)) or (
+            sum(e.file_size_in_bytes for e in reads) > DRIVER_MAX_PLAN_BYTES
+        ):
+            return None
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        declared = self.schema()
+        fields = list(declared.fields)
+        if positions:
+            fields += [
+                T.StructField("__fp", T.StringType()),
+                T.StructField("__pos", T.LongType()),
+            ]
+        try:
+            table = read_entries_arrow(
+                self.metadata,
+                data_entries,
+                delete_files,
+                to_arrow_schema(declared),
+                positions=positions,
+            )
+            return self.spark.createDataFrame(table, T.StructType(fields))
+        except (pa.ArrowException, TypeError, ValueError):
+            # a conversion pyarrow or Spark's Arrow bridge does not do
+            # (the executor reader's casts are Spark's own)
+            return None
 
     def _attach_lineage(
         self, with_pos: DataFrame, data_entries: list[ManifestEntry]
@@ -1113,6 +1187,16 @@ class LakeTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
+        if not plain_path(self.location):
+            # tombstones keyed on Spark's percent-encoded path (written
+            # before _with_position decoded it) also name their decoded
+            # path — metadata.path_spellings; ``+`` is literal in a URI
+            decoded = F.try_url_decode(F.regexp_replace("__fp", "\\+", "%2B"))
+            out = out.unionByName(
+                out.filter(decoded != F.col("__fp")).select(
+                    decoded.alias("__fp"), "__pos"
+                )
+            )
         return out
 
     def _parquet_write_options(self) -> dict[str, str]:
@@ -1343,6 +1427,14 @@ class LakeTable:
                     by_path[e.file_path], key=_partition_sort_key
                 )
 
+    @property
+    def _dv_deletes(self) -> bool:
+        """Position deletes are written in the deletion-vector layout."""
+        return (
+            self.properties.get("write.delete.vector.enabled", "true").lower()
+            == "true"
+        )
+
     def _write_position_deletes(
         self,
         matches: DataFrame,
@@ -1360,14 +1452,10 @@ class LakeTable:
         local. Measured at sf0.1 with 5 stacked MOR delete generations
         (~55% of 600k rows): DV writes 7.3 s vs 9.4 s, read-merge 0.92 s
         vs 1.22 s, 40 vs 370k delete-file rows (scratch/dv_bench.py)."""
-        use_dv = (
-            self.properties.get("write.delete.vector.enabled", "true").lower()
-            == "true"
-        )
         kwargs = {}
         if target_file_size_bytes is not None:
             kwargs["target_file_size_bytes"] = target_file_size_bytes
-        if use_dv:
+        if self._dv_deletes:
             # Small deletes (the overwhelmingly common shape — a GDPR key,
             # one bad batch) build the DV file DRIVER-SIDE from one Arrow
             # collect of the (file_path, pos) matches: one Spark job
@@ -1541,6 +1629,12 @@ class LakeTable:
         row-group stats cannot). Sound: falls back to all files whenever
         the predicate isn't a provably-prunable string.
 
+        Candidate files within the driver budget are read on the driver
+        (_driver_read) and come back as a LocalRelation, which Spark
+        filters, projects and collects without a job; past the budget
+        the executor read (parquet scan + delete anti-join) is built.
+        Both apply the same deletes, renames, defaults and widening.
+
         ``prune_only=True`` skips the final row filter and returns the
         candidate-file SUPERSET (pruning is conservative) — for callers
         that re-apply the predicate themselves, like the SQL facade's
@@ -1595,11 +1689,12 @@ class LakeTable:
         delete_files = self._scope_deletes(
             [e for e in scoped if e.content != CONTENT_DATA], entries
         )
-        df = self._read_data_entries(entries, positions=bool(delete_files))
-        cols = [f.name for f in self.schema().fields]
-        if delete_files:
-            df = self._apply_delete_files(df, delete_files, entries)
-        df = df.select(*cols)
+        df = self._driver_read(entries, delete_files)
+        if df is None:
+            df = self._read_data_entries(entries, positions=bool(delete_files))
+            if delete_files:
+                df = self._apply_delete_files(df, delete_files, entries)
+            df = df.select(*[f.name for f in self.schema().fields])
         return df if prune_only else df.filter(self._as_column(predicate))
 
     def _scope_deletes(
@@ -2331,12 +2426,16 @@ class LakeTable:
         prune_for: str | None,
         *,
         lineage: bool = False,
+        driver: bool = False,
     ) -> tuple[DataFrame, int]:
         """read_with_positions() plus a metadata-only upper bound on the
         rows it can produce (the candidate files' record_count sum): the
         MOR writers hand it to the DV writer so an over-budget delete
         skips the driver collect without partially executing the match
-        scan."""
+        scan. ``driver=True`` (the MOR DELETE match read under the DV
+        layout) reads candidate files that fit the driver budget on the
+        driver (_driver_read); every other caller keeps the executor
+        read."""
         self.last_delete_scope = {"planned": 0, "skipped": 0}
         snap = snap or self.metadata.current_snapshot()
         if snap is None:
@@ -2374,11 +2473,15 @@ class LakeTable:
                 {"__fp": F.lit(None).cast("string"), "__pos": F.lit(None).cast("long")}
             )
             return (self._null_lineage(empty) if lineage else empty), 0
-        with_pos = self._read_data_entries(
-            data_entries, lineage=lineage, positions=True
-        )
         delete_files = self._scope_deletes(
             [e for e in scoped if e.content != CONTENT_DATA], data_entries
+        )
+        if driver and not lineage:
+            local = self._driver_read(data_entries, delete_files, positions=True)
+            if local is not None:
+                return local, row_bound
+        with_pos = self._read_data_entries(
+            data_entries, lineage=lineage, positions=True
         )
         if delete_files:
             with_pos = self._apply_delete_files(
@@ -2811,7 +2914,11 @@ class LakeTable:
         wap_id: str | None = None,
     ) -> Snapshot | None:
         snap, parent_id = self._branch_base(branch)
-        rows, row_bound = self._read_positions_bounded(snap, pred_str)
+        # the DV writer takes small match sets on the driver, so a
+        # driver-read match scan makes the whole delete jobless
+        rows, row_bound = self._read_positions_bounded(
+            snap, pred_str, driver=self._dv_deletes
+        )
         matches = rows.filter(pred).select(
             F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
         )

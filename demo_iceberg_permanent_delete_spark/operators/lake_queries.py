@@ -14,6 +14,7 @@ files/partitions.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -747,15 +748,19 @@ def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         if decision["right_bytes"] <= decision["threshold"]:
             assert decision["strategy"] == "broadcast_right", decision
 
-        # Facade per-scan pruning, driver-visible (X39/X41): a SQL
-        # statement whose WHERE provably scopes this table registers the
-        # manifest-PRUNED scan (lake/scanscope.py → scan(prune_only)).
-        # `o_note IS NULL` prunes the era-2 files via their recorded
-        # null_count=0 while era-1 files (no o_note stats) and era-3
-        # files (all-null o_note) are conservatively kept — so the scan
-        # must read strictly fewer files than the table holds, and its
-        # count must equal the manifest-derived null-note row total.
+        # Facade per-scan pruning (X39/X41): a SQL statement whose WHERE
+        # provably scopes this table registers the manifest-PRUNED scan
+        # (lake/scanscope.py → scan(prune_only)). `o_note IS NULL` prunes
+        # the era-2 files via their recorded null_count=0 while era-1
+        # files (no o_note stats) and era-3 files (all-null o_note) are
+        # conservatively kept — so the scan reads strictly fewer files
+        # than the table holds (none outside the candidates: an executor
+        # scan lists them as input files, a driver-read one lists none),
+        # and its count must equal the manifest-derived null-note total.
         from demo_iceberg_permanent_delete_spark.lake import LakeEngine
+        from demo_iceberg_permanent_delete_spark.lake.pruning import (
+            candidate_files,
+        )
 
         eng = LakeEngine(spark, warehouse)
         pruned = eng.sql(
@@ -763,10 +768,17 @@ def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "WHERE o_note IS NULL"
         )
         data_files = t.metadata.current_snapshot().data_files()
-        n_scan = len(
-            {f for f in pruned.inputFiles() if f.endswith(".parquet")}
-        )
-        assert 0 < n_scan < len(data_files), (n_scan, len(data_files))
+        kept = {
+            os.path.basename(e.file_path)
+            for e in candidate_files(data_files, "o_note IS NULL")
+        }
+        assert 0 < len(kept) < len(data_files), (len(kept), len(data_files))
+        scanned = {
+            os.path.basename(f)
+            for f in pruned.inputFiles()
+            if f.endswith(".parquet")
+        }
+        assert scanned <= kept, (scanned, kept)
         expected = sum(
             e.record_count
             if "o_note" not in e.null_counts

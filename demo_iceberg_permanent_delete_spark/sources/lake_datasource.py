@@ -247,24 +247,111 @@ def _read_data_file(
     the raw table BEFORE the equality-delete merge (deletes keyed on the
     defaulted column must see the read value) and overwritten after
     conformance for uniformity."""
-    tbl = _apply_defaults(
-        _conform(
-            _visible_table(
-                path,
-                pos_delete_paths,
-                eq_deletes,
-                dv_paths,
-                renames,
-                row_groups=row_groups,
-                row_offset=row_offset,
-                defaults_typed=_typed_defaults(arrow_schema, defaults),
-            ),
-            arrow_schema,
-            renames,
-        ),
+    tbl, _ = _conformed_file(
+        path,
+        arrow_schema,
+        pos_delete_paths,
+        eq_deletes,
+        renames,
+        dv_paths,
         defaults,
+        row_groups=row_groups,
+        row_offset=row_offset,
     )
     yield from tbl.to_batches()
+
+
+def _conformed_file(
+    path: str,
+    arrow_schema,
+    pos_delete_paths: Sequence[str],
+    eq_deletes: Sequence[tuple[tuple[str, ...], tuple[str, ...]]],
+    renames,
+    dv_paths: Sequence[str],
+    defaults: Sequence[tuple[str, object]],
+    *,
+    row_groups: tuple[int, int] | None = None,
+    row_offset: int = 0,
+    with_positions: bool = False,
+):
+    """(conformed visible table, raw visible table) of one data file: the
+    per-file MOR read every reader shares — deletes applied, then
+    renames, widening, null-fill and initial defaults resolved against
+    ``arrow_schema``. The raw table keeps ``__gpos`` and any
+    materialized lineage columns for callers that need them."""
+    raw = _visible_table(
+        path,
+        pos_delete_paths,
+        eq_deletes,
+        dv_paths,
+        renames,
+        row_groups=row_groups,
+        row_offset=row_offset,
+        defaults_typed=_typed_defaults(arrow_schema, defaults),
+        with_positions=with_positions,
+    )
+    return _apply_defaults(_conform(raw, arrow_schema, renames), defaults), raw
+
+
+def delete_reads(meta, data_entries, delete_entries) -> list:
+    """The delete entries read_entries_arrow opens for ``data_entries``,
+    once per data file that sees each (_visibility): what a driver read
+    of those files costs beyond the data files themselves."""
+    pos_for, dv_for, eq_for = _visibility(
+        meta, None, entries=[*data_entries, *delete_entries]
+    )
+    by_path = {d.file_path: d for d in delete_entries}
+    return [
+        by_path[p]
+        for e in data_entries
+        for p in (
+            *pos_for(e),
+            *dv_for(e),
+            *(q for paths, _ in eq_for(e) for q in paths),
+        )
+    ]
+
+
+def read_entries_arrow(
+    meta,
+    data_entries,
+    delete_entries,
+    arrow_schema,
+    *,
+    positions: bool = False,
+):
+    """Driver-side MOR read of manifest-listed data files into ONE
+    pyarrow Table conformed to ``arrow_schema``: the batch reader's
+    per-file read (_visibility → _conformed_file), run in-process over
+    each entry with the delete files ``delete_entries`` it can see.
+
+    ``positions`` appends ``__fp`` (the manifest path) and ``__pos`` (the
+    row's file-global position), the keys position deletes are written
+    against."""
+    import pyarrow as pa
+
+    pos_for, dv_for, eq_for = _visibility(
+        meta, None, entries=[*data_entries, *delete_entries]
+    )
+    parts = []
+    for e in data_entries:
+        tbl, raw = _conformed_file(
+            e.file_path,
+            arrow_schema,
+            pos_for(e),
+            eq_for(e),
+            meta.renames,
+            dv_for(e),
+            _defaults_for(meta, e),
+            with_positions=positions,
+        )
+        if positions:
+            tbl = tbl.append_column(
+                "__fp", pa.array([e.file_path] * tbl.num_rows, pa.string())
+            )
+            tbl = tbl.append_column("__pos", raw.column("__gpos"))
+        parts.append(tbl)
+    return pa.concat_tables(parts)
 
 
 def _typed_defaults(arrow_schema, defaults):
@@ -350,29 +437,56 @@ def _tombstone_positions(
     target file; their positions array is clamped by the caller."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
+
+    from demo_iceberg_permanent_delete_spark.lake.metadata import (
+        path_spellings,
+        plain_path,
+    )
+
+    # a path that needs URL encoding may also be named by its encoded
+    # spelling (metadata.path_spellings), which no pushed equality
+    # filter can see: such rows are selected after the read
+    plain = plain_path(path)
+    by_path = [("file_path", "==", path)] if plain else []
+
+    def addressed(tbl):
+        if plain:
+            return tbl
+        vals = tbl.column("file_path")
+        hits = [
+            v
+            for v in pc.unique(vals).to_pylist()
+            if v is not None and path in path_spellings(v)
+        ]
+        return tbl.filter(pc.is_in(vals, pa.array(hits, pa.string())))
 
     drops: list = []
     if pos_delete_paths:
-        filters: list[tuple] = [("file_path", "==", path)]
+        filters: list[tuple] = list(by_path)
         if row_range is not None:
             filters += [("pos", ">=", row_range[0]), ("pos", "<", row_range[1])]
-        mine = pa.concat_tables(
-            pq.read_table(p, columns=["file_path", "pos"], filters=filters)
-            for p in pos_delete_paths
+        mine = addressed(
+            pa.concat_tables(
+                pq.read_table(
+                    p, columns=["file_path", "pos"], filters=filters or None
+                )
+                for p in pos_delete_paths
+            )
         )
         if mine.num_rows:
             drops.append(np.asarray(mine.column("pos")).astype("int64"))
     if dv_paths:
         # deletion-vector layout: one row per target data file with the
         # sorted positions array — filter to this file, concatenate arrays
-        mine = pa.concat_tables(
-            pq.read_table(
-                p,
-                columns=["file_path", "positions"],
-                filters=[("file_path", "==", path)],
+        mine = addressed(
+            pa.concat_tables(
+                pq.read_table(
+                    p, columns=["file_path", "positions"], filters=by_path or None
+                )
+                for p in dv_paths
             )
-            for p in dv_paths
         )
         for arr in mine.column("positions").to_pylist():
             if arr:
@@ -962,6 +1076,7 @@ def _visibility(meta, snap, entries=None):
         CONTENT_EQUALITY_DELETES,
         CONTENT_POSITION_DELETES,
         entry_sequence,
+        path_spellings,
     )
 
     deletes = [
@@ -982,7 +1097,8 @@ def _visibility(meta, snap, entries=None):
                 continue
             refs = getattr(e, "referenced_files", None) or ()
             if refs:
-                for r in refs:
+                targets = {q for r in refs for q in path_spellings(r)}
+                for r in targets:
                     by_target.setdefault(r, []).append(e.file_path)
             else:
                 always.append(e.file_path)
@@ -1617,6 +1733,7 @@ class LakeCdcStreamReader(LakeStreamReader):
             CONTENT_DATA,
             CONTENT_EQUALITY_DELETES,
             CONTENT_POSITION_DELETES,
+            path_spellings,
         )
 
         start_id, end_id = start["snapshot_id"], end["snapshot_id"]
@@ -1710,7 +1827,9 @@ class LakeCdcStreamReader(LakeStreamReader):
                     for e in mask_entries:
                         known = getattr(e, "referenced_files", None)
                         if known:
-                            refs.update(known)
+                            refs.update(
+                                q for r in known for q in path_spellings(r)
+                            )
                         else:
                             refs.update(
                                 pq.read_table(

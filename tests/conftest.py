@@ -55,6 +55,19 @@ def one_part(spark, rows, ddl):
     return spark.createDataFrame(pdf, ddl).coalesce(1)
 
 
+def jobless(spark, fn):
+    """``fn()``, asserting it started no Spark job."""
+    sc = spark.sparkContext
+    group = "jobless-probe"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    return out
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

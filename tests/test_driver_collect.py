@@ -133,3 +133,84 @@ def test_lake_has_one_driver_gate():
                         "use datafiles.fits_driver / collect_if_small"
                     )
     assert not problems, "\n".join(problems)
+
+
+# Calls whose result is Arrow data: pyarrow constructors and readers, the
+# shared per-file MOR reader, and the driver-collect helpers.
+_ARROW_MODULES = {"pa", "pq", "pc", "pyarrow"}
+_ARROW_FUNCS = {"read_entries_arrow", "collect_if_small", "_collect_local", "toArrow"}
+
+
+def _yields_arrow(node, arrow_names) -> bool:
+    if isinstance(node, ast.Name):
+        return node.id in arrow_names
+    if not isinstance(node, ast.Call):
+        return False
+    func = node.func
+    if isinstance(func, ast.Name):
+        return func.id in _ARROW_FUNCS
+    if isinstance(func, ast.Attribute):
+        if func.attr in _ARROW_FUNCS:
+            return True
+        root = func.value
+        while isinstance(root, ast.Attribute):
+            root = root.value
+        return isinstance(root, ast.Name) and root.id in _ARROW_MODULES
+    return False
+
+
+def _arrow_frames(tree):
+    """(function name, line) of every createDataFrame call whose data
+    argument is Arrow: an Arrow-producing call, or a name such a call (or
+    another such name) was assigned in the same function."""
+    found = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        arrow_names: set[str] = set()
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Assign) and _yields_arrow(node.value, arrow_names):
+                arrow_names |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and node.args
+                and _yields_arrow(node.args[0], arrow_names)
+            ):
+                found.append((fn.name, node.lineno))
+    return found
+
+
+def test_arrow_frame_guard_detects_arrow_data():
+    src = '''
+def ok(spark, rows):
+    return spark.createDataFrame(rows, "a long")
+
+def direct(spark):
+    return spark.createDataFrame(pa.table({"a": [1]}))
+
+def named(spark, meta):
+    t = read_entries_arrow(meta, [], [], None)
+    u = t
+    return spark.createDataFrame(u, "a long")
+'''
+    assert [name for name, _ in _arrow_frames(ast.parse(src))] == ["direct", "named"]
+
+
+def test_lake_builds_arrow_frames_in_one_helper():
+    """Static guard: under lake/, a Spark frame is built over Arrow data
+    (createDataFrame of a pyarrow Table, a driver-held LocalRelation) only
+    by the driver-scan helper LakeTable._driver_read."""
+    problems = [
+        f"{name}:{line} createDataFrame over Arrow data in {fn}()"
+        for name, tree in _lake_modules()
+        for fn, line in _arrow_frames(tree)
+        if (name, fn) != ("table.py", "_driver_read")
+    ]
+    assert not problems, "\n".join(problems)
+    owners = [
+        (name, fn) for name, tree in _lake_modules() for fn, _ in _arrow_frames(tree)
+    ]
+    assert owners == [("table.py", "_driver_read")]

@@ -36,13 +36,19 @@ BUDGET0_SEEDS = (0, 1)
 
 
 def _fingerprint(table):
-    """What the two budget runs must agree on: visible rows, and per
-    snapshot its operation and the (content, record count, dv) of every
-    manifest entry. File paths, sizes and referenced-file lists are left
-    out: paths are random, and pyarrow and Spark write different bytes."""
+    """What the two budget runs must agree on: visible rows, manifest-
+    pruned scans (read on the driver at the default budget, by executors
+    at budget 0), and per snapshot its operation and the (content, record
+    count, dv) of every manifest entry. File paths, sizes and
+    referenced-file lists are left out: paths are random, and pyarrow and
+    Spark write different bytes."""
     rows = sorted(
         (r["k"], r["v"], r["s"]) for r in table.read().collect()
     )
+    scans = [
+        sorted((r["k"], r["v"], r["s"]) for r in table.scan(pred).collect())
+        for pred in ("v = 2", "k < 12 AND s >= 's3'")
+    ]
     snaps = [
         (
             s.operation,
@@ -53,7 +59,7 @@ def _fingerprint(table):
         )
         for s in table.metadata.snapshots
     ]
-    return rows, snaps
+    return (rows, scans), snaps
 
 
 def _rows_lin(table):

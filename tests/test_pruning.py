@@ -7,9 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import one_part
-from demo_iceberg_permanent_delete_spark.lake import Catalog
+from tests.conftest import jobless, one_part
+from demo_iceberg_permanent_delete_spark.lake import Catalog, datafiles
 from demo_iceberg_permanent_delete_spark.lake.pruning import candidate_files
+from demo_iceberg_permanent_delete_spark.sources import lake_datasource
 
 DDL = "k bigint, name string, v double"
 
@@ -155,7 +156,9 @@ def test_in_list_pruning(ranged_table):
     )
 
 
-def test_scan_results_match_unpruned_read(ranged_table):
+def test_scan_results_match_unpruned_read(ranged_table, monkeypatch):
+    # budget 0: the executor scan, whose plan lists the files it opens
+    monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", 0)
     pruned = ranged_table.scan("k >= 100 AND k < 200")
     full = ranged_table.read().filter("k >= 100 AND k < 200")
     assert sorted(r["k"] for r in pruned.collect()) == sorted(
@@ -164,6 +167,27 @@ def test_scan_results_match_unpruned_read(ranged_table):
     # and the pruned plan really reads fewer files
     assert len(pruned.inputFiles()) == 1
     assert len(ranged_table.read().inputFiles()) == 3
+
+
+def test_driver_scan_reads_only_candidate_files(ranged_table, monkeypatch):
+    """Driver-path twin of the test above: within the budget the scan is
+    read on the driver by the shared per-file reader, which is handed
+    only the one candidate file."""
+    read = []
+    real = lake_datasource.read_entries_arrow
+
+    def spy(meta, data_entries, *args, **kwargs):
+        read.append([e.file_path for e in data_entries])
+        return real(meta, data_entries, *args, **kwargs)
+
+    monkeypatch.setattr(lake_datasource, "read_entries_arrow", spy)
+    pruned = ranged_table.scan("k >= 100 AND k < 200")
+    rows = jobless(ranged_table.spark, pruned.collect)
+    assert sorted(r["k"] for r in rows) == list(range(100, 200))
+    want = candidate_files(
+        ranged_table.metadata.current_snapshot().data_files(), "k >= 100 AND k < 200"
+    )
+    assert read == [[e.file_path for e in want]] and len(want) == 1
 
 
 def test_pruned_delete_composes_with_mor_read(ranged_table_mut):

@@ -9,7 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from demo_iceberg_permanent_delete_spark.lake import SnapshotNotFoundError, UnsafeOperationError
+from tests.conftest import jobless
+from demo_iceberg_permanent_delete_spark.lake import datafiles
 from demo_iceberg_permanent_delete_spark.lake.sql import LakeEngine
+from demo_iceberg_permanent_delete_spark.sources import lake_datasource
 
 TABLE = "demo.default.pii_data"
 
@@ -484,11 +487,7 @@ def test_drop_purge_recreate_same_name_not_served_from_cache(spark, tmp_path):
     assert {r["b"] for r in df.collect()} == {"x", "y"}
 
 
-def test_select_registers_manifest_pruned_scan(spark, tmp_path):
-    """A facade SELECT whose WHERE provably scopes one table's scan
-    registers the manifest-PRUNED read (Iceberg scan planning), so files
-    whose min/max can't match are never opened — visible as fewer input
-    files — while results stay identical to the full-scan equivalent."""
+def _days_table(spark, tmp_path):
     eng = LakeEngine(spark, str(tmp_path / "wh"))
     eng.sql("CREATE NAMESPACE IF NOT EXISTS default")
     eng.sql(
@@ -499,6 +498,18 @@ def test_select_registers_manifest_pruned_scan(spark, tmp_path):
         t.insert(
             spark.range(50).selectExpr(f"'d{d}' AS day", "id AS v")
         )
+    return eng, t
+
+
+def test_select_registers_manifest_pruned_scan(spark, tmp_path, monkeypatch):
+    """A facade SELECT whose WHERE provably scopes one table's scan
+    registers the manifest-PRUNED read (Iceberg scan planning), so files
+    whose min/max can't match are never opened — visible as fewer input
+    files — while results stay identical to the full-scan equivalent.
+    Budget 0: the executor scan, whose plan lists its input files (the
+    driver-read twin is the next test)."""
+    monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", 0)
+    eng, t = _days_table(spark, tmp_path)
 
     filtered = eng.sql(
         "SELECT sum(v) AS s FROM default.days WHERE day = 'd2'"
@@ -520,6 +531,38 @@ def test_select_registers_manifest_pruned_scan(spark, tmp_path):
         "SELECT sum(v) AS s FROM default.days WHERE day = 'd2'"
     )
     assert filtered2.collect()[0]["s"] == sum(range(10, 50))
+
+
+def test_select_driver_scan_reads_candidate_files(spark, tmp_path, monkeypatch):
+    """Within the driver budget the scoped SELECT's pruned scan is read on
+    the driver by the shared per-file reader: it is handed exactly the
+    candidate file, the statement runs no Spark job, and MOR deletes
+    still apply."""
+    eng, t = _days_table(spark, tmp_path)
+    read = []
+    real = lake_datasource.read_entries_arrow
+
+    def spy(meta, data_entries, *args, **kwargs):
+        read.append([e.file_path for e in data_entries])
+        return real(meta, data_entries, *args, **kwargs)
+
+    monkeypatch.setattr(lake_datasource, "read_entries_arrow", spy)
+    q = "SELECT v FROM default.days WHERE day = 'd2'"
+    want = [
+        e.file_path
+        for e in t.metadata.current_snapshot().data_files()
+        if e.min_values["day"] == "d2"
+    ]
+    assert sorted(r["v"] for r in jobless(spark, lambda: eng.sql(q).collect())) == list(
+        range(50)
+    )
+    assert read == [want]
+    t.set_properties({"write.delete.mode": "merge-on-read"})
+    t.delete("day = 'd2' AND v < 10")
+    assert sorted(r["v"] for r in jobless(spark, lambda: eng.sql(q).collect())) == list(
+        range(10, 50)
+    )
+    assert read[-1] == want
 
 
 def test_metadata_views_register_once_per_version(spark, tmp_path, monkeypatch):
