@@ -125,6 +125,16 @@ def fits_driver(rows: int) -> bool:
     return rows <= DRIVER_MAX_ROWS
 
 
+def fits_driver_reads(reads: list[ManifestEntry]) -> bool:
+    """Whether a driver-side read that opens the files of ``reads``
+    (manifest entries, listed once per time each is opened) is within
+    the budget: DRIVER_MAX_ROWS by manifest record count and
+    DRIVER_MAX_PLAN_BYTES by file size."""
+    return fits_driver(sum(e.record_count for e in reads)) and (
+        sum(e.file_size_in_bytes for e in reads) <= DRIVER_MAX_PLAN_BYTES
+    )
+
+
 def _row_preserving(plan) -> bool:
     stack = [plan]
     while stack:

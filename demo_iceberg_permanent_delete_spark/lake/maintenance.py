@@ -21,12 +21,15 @@ from __future__ import annotations
 import datetime as dt
 import os
 import re
+from math import ceil
 from typing import Any
 
 from pyspark.sql import functions as F
 
 from demo_iceberg_permanent_delete_spark.lake.datafiles import (
     TARGET_FILE_SIZE_BYTES,
+    fits_driver_reads,
+    write_arrow_file,
     write_data_files,
 )
 from demo_iceberg_permanent_delete_spark.lake.errors import UnsafeOperationError
@@ -428,6 +431,143 @@ def remove_orphan_files(
     return sorted(orphans)
 
 
+def _sorted_rewrite_on_driver(table, data, deletes, keys, want, lineage):
+    """The hierarchical-sort rewrite of ``data`` done on the driver: the
+    shared pyarrow MOR reader reads it (deletes applied, lineage
+    resolved), pyarrow sorts it ascending with nulls first and NaN last
+    (Spark's ascending order) and writes it as at most ``want`` files of
+    about equal rows, each cut moved forward to the next change of the
+    sort key so equal keys never straddle two files — the guarantee the
+    executor path's ``repartitionByRange`` gives. Returns the new
+    entries, or None when the read is past the driver budget, the table
+    has parquet writer options, or a key is missing or not sortable in
+    pyarrow: the caller then runs the executor rewrite."""
+    import numpy as np
+    import pyarrow as pa
+
+    if table._parquet_write_options():
+        return None
+    tbl = table._driver_read_arrow(data, deletes, lineage=lineage)
+    if tbl is None or not set(keys) <= set(tbl.column_names):
+        return None
+    try:
+        tbl = _spark_sorted(tbl, keys)
+        starts = _key_starts(tbl, keys)
+    except (pa.ArrowException, TypeError):
+        return None
+    n = tbl.num_rows
+    cuts = [0]
+    for i in range(1, want):
+        j = np.searchsorted(starts, -(-i * n // want))
+        if j < len(starts) and starts[j] > cuts[-1]:
+            cuts.append(int(starts[j]))
+    entries = []
+    for lo, hi in zip(cuts, [*cuts[1:], n]):
+        entries += write_arrow_file(tbl.slice(lo, hi - lo), table.data_dir)
+    table._harvest_partition_counts(entries)
+    return entries
+
+
+def _spark_sorted(tbl, keys):
+    """``tbl`` sorted on ``keys`` in Spark's ascending order: nulls first,
+    NaN after every number. Arrow puts NaN with the nulls, so each key
+    sorts on its null flag (descending) and then on its values with NaN
+    at the end."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    by, sort_keys = {}, []
+    for i, k in enumerate(keys):
+        by[f"n{i}"] = pc.is_null(tbl.column(k))
+        by[f"k{i}"] = tbl.column(k)
+        sort_keys += [(f"n{i}", "descending"), (f"k{i}", "ascending")]
+    return tbl.take(
+        pc.sort_indices(pa.table(by), sort_keys=sort_keys, null_placement="at_end")
+    )
+
+
+def _key_starts(tbl, keys):
+    """Row indices of sorted ``tbl`` where the ``keys`` tuple differs from
+    the row before (nulls equal nulls, NaN equals NaN, as in Spark's
+    range partitioning)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    change = np.zeros(n, dtype=bool)
+    change[:1] = True
+    for k in keys:
+        col = tbl.column(k).combine_chunks()
+        a, b = col.slice(1), col.slice(0, max(n - 1, 0))
+        differs = pc.or_(
+            pc.fill_null(pc.not_equal(a, b), False),
+            pc.xor(pc.is_null(a), pc.is_null(b)),
+        )
+        if pa.types.is_floating(col.type):
+            both_nan = pc.fill_null(pc.and_(pc.is_nan(a), pc.is_nan(b)), False)
+            differs = pc.and_not(differs, both_nan)
+        change[1:] |= differs.to_numpy(zero_copy_only=False)
+    return np.flatnonzero(change)
+
+
+def _rewrite_on_executors(
+    table,
+    data,
+    deletes,
+    *,
+    head_id,
+    lineage,
+    sort_order,
+    want,
+    target_file_size_bytes,
+):
+    """The executor rewrite of ``data``'s rows into new files: a full
+    read of snapshot ``head_id`` when given, else the delete-merged read
+    of ``data``; range-clustered into ``want`` sorted partitions or
+    z-ordered when ``sort_order`` is set, else bin-packed to the size
+    target by the write."""
+    if head_id is not None:
+        # delete-merge applied; branch rewrites read the branch head
+        merged = table.read(snapshot_id=head_id, lineage=lineage)
+    else:
+        wp = table._read_data_entries(
+            data, lineage=lineage, positions=bool(deletes)
+        )
+        out_cols = [f.name for f in table.schema().fields]
+        if lineage:
+            from demo_iceberg_permanent_delete_spark.lake.table import (
+                LAST_UPDATED_COL,
+                ROW_ID_COL,
+            )
+
+            out_cols += [ROW_ID_COL, LAST_UPDATED_COL]
+        merged = (
+            table._apply_delete_files(wp, deletes, data) if deletes else wp
+        ).select(*out_cols)
+    if sort_order is None:
+        return table._write_data(
+            merged, target_file_size_bytes=target_file_size_bytes
+        )
+    if isinstance(sort_order, str):
+        from demo_iceberg_permanent_delete_spark.lake.clustering import (
+            cluster_by_zorder,
+        )
+
+        m = re.fullmatch(r"\s*zorder\s*\(([^)]*)\)\s*", sort_order, re.I)
+        if not m:
+            raise ValueError(
+                f"sort_order string must be 'zorder(col, ...)', got {sort_order!r}"
+            )
+        cols = [c.strip() for c in m.group(1).split(",") if c.strip()]
+        return table._write_data(cluster_by_zorder(merged, cols, want))
+    return table._write_data(
+        merged.repartitionByRange(want, *sort_order).sortWithinPartitions(
+            *sort_order
+        )
+    )
+
+
 def rewrite_data_files(
     table,
     *,
@@ -439,17 +579,29 @@ def rewrite_data_files(
     branch: str | None = None,
 ) -> dict[str, int]:
     """M4 — compact: read the current snapshot WITH position deletes applied,
-    write fresh ~128 MiB files, commit a snapshot referencing only the new
-    files (zero delete files). This is the step that makes MOR deletes
+    write fresh files, commit a snapshot referencing only the new files
+    (zero delete files). This is the step that makes MOR deletes
     physical — the reference's "permanent delete" moment
     (iceberg_pii_deletion_demo.py:421-433, options rewrite-all +
     target-file-size-bytes=134217728).
 
     ``sort_order`` selects the rewrite strategy, mirroring Iceberg's
-    rewrite procedure options: None = binpack (size only);
-    ``["c1", "c2"]`` = hierarchical sort (range-cluster on the columns);
-    ``"zorder(c1, c2)"`` = interleaved-bit clustering so file min/max
-    bounds prune on ANY listed column (lake/clustering.py).
+    rewrite procedure options: None = binpack (files of about
+    ``target_file_size_bytes``); ``["c1", "c2"]`` = hierarchical sort
+    (range-cluster on the columns); ``"zorder(c1, c2)"`` = interleaved-bit
+    clustering so file min/max bounds prune on ANY listed column
+    (lake/clustering.py). Both clustering strategies write at most
+    ``ceil(input bytes / target_file_size_bytes)`` files of about equal
+    rows, so their file sizes follow the rows' encoded size, not the
+    target.
+
+    A hierarchical sort whose input read fits the driver budget
+    (LakeTable._driver_read_arrow), on a table without parquet writer
+    options, runs on the driver with no Spark job
+    (_sorted_rewrite_on_driver: the shared pyarrow MOR reader, a pyarrow
+    sort and one pyarrow write per file, cut at sort-key changes so equal
+    keys share a file). Binpack, z-order and larger inputs run on the
+    executors.
 
     ``where`` scopes the rewrite to files that may contain matching rows
     (Iceberg's ``where =>`` option): candidates resolve through the same
@@ -509,54 +661,28 @@ def rewrite_data_files(
     # each row's _row_id/_last_updated_sequence_number so identity
     # survives the rewrite (Iceberg v3 writer requirement)
     lin = table._lineage_ok()
-    if not scoped:
-        # delete-merge applied; branch rewrites read the branch head
-        merged = table.read(snapshot_id=head_id, lineage=lin)
-    else:
-        wp = table._read_data_entries(
-            prior_data, lineage=lin, positions=bool(prior_deletes)
-        )
-        out_cols = [f.name for f in table.schema().fields]
-        if lin:
-            from demo_iceberg_permanent_delete_spark.lake.table import (
-                LAST_UPDATED_COL,
-                ROW_ID_COL,
-            )
-
-            out_cols += [ROW_ID_COL, LAST_UPDATED_COL]
-        merged = (
-            table._apply_delete_files(wp, prior_deletes, prior_data)
-            if prior_deletes
-            else wp
-        ).select(*out_cols)
+    want = None
     if sort_order is not None:
-        from math import ceil
-
-        from demo_iceberg_permanent_delete_spark.lake.clustering import (
-            cluster_by_zorder,
-        )
-
         # File count from the prior snapshot's byte total: clustering must
         # control the partitioning itself (write_data_files' resize pass
         # would round-robin the clustering away).
         total = sum(e.file_size_in_bytes for e in prior_data)
         want = max(1, ceil(total / target_file_size_bytes))
-        if isinstance(sort_order, str):
-            m = re.fullmatch(r"\s*zorder\s*\(([^)]*)\)\s*", sort_order, re.I)
-            if not m:
-                raise ValueError(
-                    f"sort_order string must be 'zorder(col, ...)', got {sort_order!r}"
-                )
-            cols = [c.strip() for c in m.group(1).split(",") if c.strip()]
-            merged = cluster_by_zorder(merged, cols, want)
-        else:
-            merged = merged.repartitionByRange(want, *sort_order).sortWithinPartitions(
-                *sort_order
-            )
-        new_entries = table._write_data(merged)
-    else:
-        new_entries = table._write_data(
-            merged, target_file_size_bytes=target_file_size_bytes
+    new_entries = None
+    if want is not None and not isinstance(sort_order, str):
+        new_entries = _sorted_rewrite_on_driver(
+            table, prior_data, prior_deletes, list(sort_order), want, lin
+        )
+    if new_entries is None:
+        new_entries = _rewrite_on_executors(
+            table,
+            prior_data,
+            prior_deletes,
+            head_id=None if scoped else head_id,
+            lineage=lin,
+            sort_order=sort_order,
+            want=want,
+            target_file_size_bytes=target_file_size_bytes,
         )
     # Scoped rewrite carries untouched files AND the delete files over
     # (kept files still need their tombstones; tombstones for rewritten
@@ -737,6 +863,43 @@ def rewrite_manifests(table, *, min_count_to_rewrite: int = 2) -> dict[str, int]
     }
 
 
+def _live_dvs_on_driver(table, data, pos_deletes):
+    """Consolidation under the deletion-vector layout, done on the
+    driver: each live data file's tombstones as the reader interprets
+    them (_visibility's referenced-files scoping, _tombstone_positions'
+    path spellings, either input layout) go to the DV writer as one
+    (file_path, pos) table, so the output is one DV file naming only
+    live files. Returns the new entries, or None when reading the delete
+    files each data file sees is past the driver budget: the caller
+    then consolidates on the executors."""
+    import numpy as np
+    import pyarrow as pa
+
+    from demo_iceberg_permanent_delete_spark.sources.lake_datasource import (
+        _tombstone_positions,
+        _visibility,
+        delete_reads,
+    )
+
+    if not fits_driver_reads(delete_reads(table.metadata, data, pos_deletes)):
+        return None
+    pos_for, dv_for, _ = _visibility(
+        table.metadata, None, entries=[*data, *pos_deletes]
+    )
+    paths, positions = [], []
+    for e in data:
+        drop = _tombstone_positions(e.file_path, pos_for(e), dv_for(e))
+        paths += [e.file_path] * drop.size
+        positions.append(drop)
+    tombstones = pa.table(
+        {
+            "file_path": pa.array(paths, pa.string()),
+            "pos": pa.array(np.concatenate([np.empty(0, "int64"), *positions])),
+        }
+    )
+    return table._write_dv_table(tombstones)
+
+
 def rewrite_position_delete_files(
     table, *, branch: str | None = None
 ) -> dict[str, int]:
@@ -744,7 +907,12 @@ def rewrite_position_delete_files(
     files no longer in the current snapshot (inert after COW/compaction) and
     merge the survivors into one file (reference: iceberg_pii_deletion_demo
     .py:436-447; post-condition :449-466 — delete-file count drops).
-    ``branch`` consolidates a branch head instead, like rewrite_data_files."""
+    ``branch`` consolidates a branch head instead, like rewrite_data_files.
+
+    Under the deletion-vector layout, when the delete files each live data
+    file sees fit the driver budget, the tombstones are read and the DV
+    file written on the driver with no Spark job (_live_dvs_on_driver);
+    the plain row layout and larger delete sets run on the executors."""
     branch = None if branch == "main" else branch
     meta = table.metadata
     snap, _ = _target_snapshot(table, branch)
@@ -760,25 +928,29 @@ def rewrite_position_delete_files(
     if not delete_entries:
         return {"rewritten_delete_files_count": 0, "added_delete_files_count": 0}
 
-    spark = table.spark
-    live_data = _local_frame(
-        spark,
-        [(e.file_path,) for e in snap.data_files()] or [("",)],
-        "file_path string",
+    new_entries = (
+        _live_dvs_on_driver(table, snap.data_files(), delete_entries)
+        if table._dv_deletes
+        else None
     )
-    dels = table._pos_delete_rows(delete_entries).select(
-        F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
-    )
-    live_dels = dels.join(F.broadcast(live_data), "file_path", "left_semi")
-
-    # Bin-pack to the compaction target — consolidation must *shrink* the
-    # delete-file count (the reference's post-condition :449-466), not
-    # mirror the input partitioning. The output honors the table's
-    # deletion-vector property, so consolidation doubles as a rows→DV
-    # layout migration once the property is set.
-    new_entries = table._write_position_deletes(
-        live_dels, target_file_size_bytes=TARGET_FILE_SIZE_BYTES
-    )
+    if new_entries is None:
+        live_data = _local_frame(
+            table.spark,
+            [(e.file_path,) for e in snap.data_files()] or [("",)],
+            "file_path string",
+        )
+        dels = table._pos_delete_rows(delete_entries).select(
+            F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
+        )
+        live_dels = dels.join(F.broadcast(live_data), "file_path", "left_semi")
+        # Bin-pack to the compaction target — consolidation must *shrink*
+        # the delete-file count (the reference's post-condition
+        # :449-466), not mirror the input partitioning. The output honors
+        # the table's deletion-vector property, so consolidation doubles
+        # as a rows→DV layout migration once the property is set.
+        new_entries = table._write_position_deletes(
+            live_dels, target_file_size_bytes=TARGET_FILE_SIZE_BYTES
+        )
     stats_were_fresh = (
         meta.statistics.get("snapshot_id") == meta.current_snapshot_id
     )

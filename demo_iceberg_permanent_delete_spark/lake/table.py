@@ -31,10 +31,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from demo_iceberg_permanent_delete_spark.lake.datafiles import (
-    DRIVER_MAX_PLAN_BYTES,
     TARGET_FILE_SIZE_BYTES,
     collect_if_small,
     fits_driver,
+    fits_driver_reads,
     write_arrow_file,
     write_data_files,
 )
@@ -1001,6 +1001,55 @@ class LakeTable:
             out = self._attach_lineage(out, entries)
         return out
 
+    def _driver_read_arrow(
+        self,
+        data_entries: list[ManifestEntry],
+        delete_files: list[ManifestEntry],
+        *,
+        positions: bool = False,
+        lineage: bool = False,
+    ):
+        """The merged read of ``data_entries`` as one pyarrow Table built
+        on the driver, or None when it is past the driver budget or a type
+        does not convert through Arrow: the caller then takes its executor
+        path. The budget (fits_driver_reads) counts every file the read
+        opens, each time it opens it — the data files plus, per data file,
+        the delete files it sees (delete_reads) — so many small delete
+        files (one equality-delete file per streaming upsert) send the
+        read to the executor anti-join, which reads each of them once.
+
+        The files go through the DataSource's per-file MOR reader
+        (sources/lake_datasource.py read_entries_arrow: the same delete,
+        rename, default, widening and lineage resolution its executor
+        tasks run). Columns: the declared schema, then the lineage columns
+        with ``lineage``, then ``__fp``/``__pos`` with ``positions`` (the
+        positioned executor read's column set)."""
+        from demo_iceberg_permanent_delete_spark.sources.lake_datasource import (
+            delete_reads,
+            read_entries_arrow,
+        )
+
+        if not fits_driver_reads(
+            [*data_entries, *delete_reads(self.metadata, data_entries, delete_files)]
+        ):
+            return None
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        try:
+            return read_entries_arrow(
+                self.metadata,
+                data_entries,
+                delete_files,
+                to_arrow_schema(self.schema()),
+                positions=positions,
+                lineage=lineage,
+            )
+        except (pa.ArrowException, TypeError, ValueError):
+            # a conversion pyarrow does not do (the executor reader's
+            # casts are Spark's own)
+            return None
+
     def _driver_read(
         self,
         data_entries: list[ManifestEntry],
@@ -1008,60 +1057,28 @@ class LakeTable:
         *,
         positions: bool = False,
     ) -> DataFrame | None:
-        """The merged read of ``data_entries`` built on the driver, or None
-        when it is past the driver budget or a type does not convert
-        through Arrow: the caller then builds the executor read. The
-        budget counts every file the read opens, each time it opens it —
-        the data files plus, per data file, the delete files it sees
-        (delete_reads) — against DRIVER_MAX_ROWS by manifest record count
-        and DRIVER_MAX_PLAN_BYTES by file size, so many small delete
-        files (one equality-delete file per streaming upsert) send the
-        read to the executor anti-join, which reads each of them once.
-
-        The files go through the DataSource's per-file MOR reader
-        (sources/lake_datasource.py read_entries_arrow: the same delete,
-        rename, default and widening resolution its executor tasks run)
-        and come back as ``createDataFrame(arrow_table)``, a LocalRelation:
-        Spark folds a statement's filter and projection over it and
-        collects the result with no job, where the parquet scan plus the
-        delete anti-join costs one or two per statement. Columns: the
-        declared schema, then ``__fp``/``__pos`` with ``positions`` (the
-        positioned executor read's column set)."""
-        from demo_iceberg_permanent_delete_spark.sources.lake_datasource import (
-            delete_reads,
-            read_entries_arrow,
+        """_driver_read_arrow's table as ``createDataFrame(arrow_table)``,
+        a LocalRelation, or None: Spark folds a statement's filter and
+        projection over it and collects the result with no job, where the
+        parquet scan plus the delete anti-join costs one or two per
+        statement."""
+        table = self._driver_read_arrow(
+            data_entries, delete_files, positions=positions
         )
-
-        reads = [
-            *data_entries,
-            *delete_reads(self.metadata, data_entries, delete_files),
-        ]
-        if not fits_driver(sum(e.record_count for e in reads)) or (
-            sum(e.file_size_in_bytes for e in reads) > DRIVER_MAX_PLAN_BYTES
-        ):
+        if table is None:
             return None
         import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
 
-        declared = self.schema()
-        fields = list(declared.fields)
+        fields = list(self.schema().fields)
         if positions:
             fields += [
                 T.StructField("__fp", T.StringType()),
                 T.StructField("__pos", T.LongType()),
             ]
         try:
-            table = read_entries_arrow(
-                self.metadata,
-                data_entries,
-                delete_files,
-                to_arrow_schema(declared),
-                positions=positions,
-            )
             return self.spark.createDataFrame(table, T.StructType(fields))
         except (pa.ArrowException, TypeError, ValueError):
-            # a conversion pyarrow or Spark's Arrow bridge does not do
-            # (the executor reader's casts are Spark's own)
+            # a conversion Spark's Arrow bridge does not do
             return None
 
     def _attach_lineage(
@@ -1509,48 +1526,43 @@ class LakeTable:
         self, matches: DataFrame, row_bound: int | None = None
     ) -> list[ManifestEntry] | None:
         """Driver-side deletion-vector writer for small tombstone sets:
-        group the collected (file_path, pos) rows with vectorized Arrow
-        ops, sort each file's positions, and write ONE delete file with
-        pyarrow — semantically identical to the executor path (same
-        sorted-positions-array layout, record_count = total cardinality,
-        referenced-files harvest, dv flag; differential-tested in
-        tests/test_deletion_vectors.py). Returns None past the driver
-        budget (or on any Arrow surprise) to request the executor path."""
-        import numpy as np
-        import pyarrow as pa
-
+        one Arrow collect of the (file_path, pos) matches, written by
+        _write_dv_table — semantically identical to the executor path
+        (differential-tested in tests/test_deletion_vectors.py). Returns
+        None past the driver budget (or on any Arrow surprise) to request
+        the executor path."""
         probe = collect_if_small(matches, row_bound=row_bound)
         if probe is None:
             return None
-        if probe.num_rows == 0:
+        return self._write_dv_table(probe)
+
+    def _write_dv_table(self, tombstones) -> list[ManifestEntry]:
+        """Write a pyarrow Table of (file_path, pos) tombstones as ONE
+        deletion-vector file with pyarrow: one row per target file, in
+        sorted-path order, holding its sorted positions array and its
+        cardinality — the executor path's layout, with record_count = the
+        total cardinality, the referenced-files harvest and the dv flag.
+        No rows, no file."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if tombstones.num_rows == 0:
             return []  # nothing matched — parity with the zero-row drop
-        fps = probe.column("file_path").to_pylist()
-        pos = probe.column("pos").to_numpy(zero_copy_only=False)
-        order = np.argsort(np.array(fps, dtype=object), kind="stable")
-        # group positions per file; files emitted in sorted-path order so
-        # the single DV file's row layout is deterministic
-        grouped: dict[str, np.ndarray] = {}
-        cur: str | None = None
-        start = 0
-        sorted_fps = [fps[i] for i in order]
-        sorted_pos = pos[order]
-        for i, fp in enumerate(sorted_fps):
-            if fp != cur:
-                if cur is not None:
-                    grouped[cur] = np.sort(sorted_pos[start:i])
-                cur, start = fp, i
-        if cur is not None:
-            grouped[cur] = np.sort(sorted_pos[start:])
+        rows = tombstones.sort_by([("file_path", "ascending"), ("pos", "ascending")])
+        fps = rows.column("file_path").combine_chunks()
+        n = len(fps)
+        new_file = pc.not_equal(fps.slice(1), fps.slice(0, n - 1))
+        starts = np.flatnonzero(new_file.to_numpy(zero_copy_only=False)) + 1
+        offsets = np.concatenate([[0], starts, [n]])
         table = pa.table(
             {
-                "file_path": pa.array(list(grouped), type=pa.string()),
-                "positions": pa.array(
-                    [v.tolist() for v in grouped.values()],
-                    type=pa.list_(pa.int64()),
+                "file_path": fps.take(pa.array(offsets[:-1])),
+                "positions": pa.ListArray.from_arrays(
+                    pa.array(offsets, pa.int32()),
+                    rows.column("pos").combine_chunks().cast(pa.int64()),
                 ),
-                "cardinality": pa.array(
-                    [int(len(v)) for v in grouped.values()], type=pa.int64()
-                ),
+                "cardinality": pa.array(np.diff(offsets), pa.int64()),
             }
         )
         entries = write_arrow_file(

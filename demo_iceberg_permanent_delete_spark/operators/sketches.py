@@ -64,23 +64,19 @@ def exact_percentiles(
     group count (documented in SCALE.md; the replaced aggregate buffered
     whole groups per task identically, so this is not a new limit).
 
-    NULL semantics: ``F.percentile``/min/max IGNORE nulls, while
-    row_number would rank them first and ``__n`` would count them,
-    shifting every position — so nulls are filtered out up front, which
-    makes the two formulations identical wherever a group has at least
-    one non-null value (previously an undocumented non-null
-    precondition; round-11 advisor finding). Sole divergence left: a
-    group whose values are ALL null is absent from this output, where
-    the aggregate would emit it with NULL percentiles.
+    NULL semantics: ``F.percentile``/min/max IGNORE nulls. Nulls rank
+    LAST and ``__n`` counts only non-null values, so the non-null values
+    hold ranks 0..n−1 exactly as if the nulls were absent and no null row
+    is ever picked. A group whose values are ALL null (n = 0) keeps only
+    its rank-0 row, whose value is NULL, so every output is NULL — the
+    aggregate's row for that group, with no second pass.
     """
-    w = Window.partitionBy(group_col).orderBy(value_col)
+    w = Window.partitionBy(group_col).orderBy(F.col(value_col).asc_nulls_last())
     wn = Window.partitionBy(group_col)
-    ranked = df.select(group_col, value_col).filter(
-        F.col(value_col).isNotNull()
-    ).withColumns(
+    ranked = df.select(group_col, value_col).withColumns(
         {
             "__rn": (F.row_number().over(w) - F.lit(1)).cast("long"),
-            "__n": F.count(F.lit(1)).over(wn),
+            "__n": F.count(value_col).over(wn),
         }
     )
 

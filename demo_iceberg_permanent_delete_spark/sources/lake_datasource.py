@@ -319,15 +319,18 @@ def read_entries_arrow(
     arrow_schema,
     *,
     positions: bool = False,
+    lineage: bool = False,
 ):
     """Driver-side MOR read of manifest-listed data files into ONE
     pyarrow Table conformed to ``arrow_schema``: the batch reader's
     per-file read (_visibility → _conformed_file), run in-process over
     each entry with the delete files ``delete_entries`` it can see.
 
-    ``positions`` appends ``__fp`` (the manifest path) and ``__pos`` (the
-    row's file-global position), the keys position deletes are written
-    against."""
+    ``lineage`` appends ``_row_id`` and ``_last_updated_sequence_number``
+    resolved per row by _resolve_lineage (the table read's
+    _attach_lineage rule). ``positions`` then appends ``__fp`` (the
+    manifest path) and ``__pos`` (the row's file-global position), the
+    keys position deletes are written against."""
     import pyarrow as pa
 
     pos_for, dv_for, eq_for = _visibility(
@@ -343,8 +346,12 @@ def read_entries_arrow(
             meta.renames,
             dv_for(e),
             _defaults_for(meta, e),
-            with_positions=positions,
+            with_positions=positions or lineage,
         )
+        if lineage:
+            rid, seq = _resolve_lineage(raw, e.first_row_id, e.sequence_number)
+            tbl = tbl.append_column("_row_id", rid)
+            tbl = tbl.append_column("_last_updated_sequence_number", seq)
         if positions:
             tbl = tbl.append_column(
                 "__fp", pa.array([e.file_path] * tbl.num_rows, pa.string())

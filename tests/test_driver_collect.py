@@ -136,9 +136,16 @@ def test_lake_has_one_driver_gate():
 
 
 # Calls whose result is Arrow data: pyarrow constructors and readers, the
-# shared per-file MOR reader, and the driver-collect helpers.
+# shared per-file MOR reader and the table's budgeted driver read over it,
+# and the driver-collect helpers.
 _ARROW_MODULES = {"pa", "pq", "pc", "pyarrow"}
-_ARROW_FUNCS = {"read_entries_arrow", "collect_if_small", "_collect_local", "toArrow"}
+_ARROW_FUNCS = {
+    "read_entries_arrow",
+    "_driver_read_arrow",
+    "collect_if_small",
+    "_collect_local",
+    "toArrow",
+}
 
 
 def _yields_arrow(node, arrow_names) -> bool:

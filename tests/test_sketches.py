@@ -133,6 +133,42 @@ def test_exact_percentiles_ignores_nulls_like_aggregate(spark):
     assert got == want
 
 
+def test_exact_percentiles_keeps_all_null_groups_like_aggregate(spark):
+    """A group whose values are all NULL is a row of F.percentile's output
+    with NULL percentiles, min and max; exact_percentiles must emit it
+    too, next to a mixed-null group and a single-value group."""
+    from pyspark.sql import functions as F
+
+    from demo_iceberg_permanent_delete_spark.operators.sketches import (
+        exact_percentiles,
+    )
+    from tests.conftest import one_part
+
+    df = one_part(
+        spark,
+        [("all_null", None), ("all_null", None), ("mixed", 3.0),
+         ("mixed", None), ("mixed", 1.0), ("mixed", None), ("mixed", 7.0),
+         ("one", 5.0), ("one_null", None)],
+        "g string, v double",
+    )
+    qs = [(0.0, "q0"), (0.25, "q25"), (0.5, "q50"), (0.9, "q90"), (1.0, "q100")]
+    got = sorted(map(tuple, exact_percentiles(df, "g", "v", qs).collect()))
+    want = sorted(
+        map(
+            tuple,
+            df.groupBy("g")
+            .agg(
+                *[F.percentile("v", F.lit(q)).alias(a) for q, a in qs],
+                F.min("v").alias("mn"),
+                F.max("v").alias("mx"),
+            )
+            .collect(),
+        )
+    )
+    assert got == want
+    assert ("all_null", *[None] * 7) in got
+
+
 def test_two_level_distincts_match_count_distinct(spark):
     """sketch_exact_summary's Expand-free two-level distinct aggregates
     must equal the count_distinct formulation they replaced (kept

@@ -1530,7 +1530,11 @@ def test_publish_changes_conflict_validation(spark, tmp_path):
     finally:
         spark.conf.unset("spark.wap.id")
     eng.sql("INSERT INTO demo.default.c VALUES (4, 'd')")
-    eng.table("default.c").compact()
+    # the 3-row INSERT lands in one file per task (host-dependent), and
+    # compact() leaves fewer than min_input_files small files alone: 2
+    # makes it rewrite d1's base file on any host (the second INSERT
+    # guarantees at least 2 files)
+    eng.table("default.c").compact(min_input_files=2)
     with _pytest.raises(CommitConflictError, match="no longer live"):
         eng.sql("CALL demo.system.publish_changes('default.c', 'd1')")
     t = eng.table("default.c")
