@@ -23,6 +23,10 @@ Equality/range semantics over strings use lexicographic order, matching
 parquet footer stats. Null-count stats additionally prune comparisons on
 all-NULL columns (parquet leaves min/max absent there, so bounds alone
 can't).
+
+``row_filter`` (end of module) evaluates a stricter subset of the same
+grammar row by row, as a pyarrow mask that must agree exactly with
+Spark's filter: the driver-side MOR erase and scans use it.
 """
 
 from __future__ import annotations
@@ -940,3 +944,193 @@ def candidate_files(
         ):
             out.append(e)
     return out
+
+
+# ------------------------------------------------------- row-level filter
+# Names Spark resolves to something other than a column reference.
+_NOT_COLUMNS = frozenset(
+    """true false null current_date current_time current_timestamp
+    current_user user session_user current_catalog current_database
+    current_schema""".split()
+)
+_IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+# a lone quoted string without escapes: Spark reads a backslash as an
+# escape and concatenates adjacent literals ('it''s' is 'its')
+_ROW_STR_RE = re.compile(r"^'([^'\\]*)'$")
+_ROW_INT_RE = re.compile(r"^-?\d+$")
+# an AND/OR with no operand on one side, which Spark refuses to parse
+# but _split_top would silently drop
+_DANGLING_RE = re.compile(
+    r"(?:^|\(|\b(?:AND|OR))\s*(?:AND|OR)\b|\b(?:AND|OR)\s*(?:\)|$)", re.I
+)
+_ROW_CMP = {
+    "=": "equal",
+    "<": "less",
+    "<=": "less_equal",
+    ">": "greater",
+    ">=": "greater_equal",
+}
+
+
+def _row_literal(text: str) -> tuple[str, Any] | None:
+    """('int', v), ('str', v), ('null', None), or None for any other
+    literal form (typed, float, escaped, hex, signed with a space)."""
+    text = text.strip()
+    if _ROW_INT_RE.match(text):
+        return "int", int(text)
+    m = _ROW_STR_RE.match(text)
+    if m:
+        return "str", m.group(1)
+    if text.upper() == "NULL":
+        return "null", None
+    return None
+
+
+def _row_leaf(leaf: str):
+    """One parsed leaf: ('cmp', col, op, lit) / ('between', col, lo, hi) /
+    ('in', col, lits) / ('null', col, negated), or None."""
+    m = _NULL_RE.match(leaf)
+    if m:
+        return "null", m.group("col"), bool(m.group("neg"))
+    m = _IN_RE.match(leaf)
+    if m:
+        items = _split_in_items(m.group("items"))
+        lits = [_row_literal(i) for i in items] if items is not None else [None]
+        if any(v is None for v in lits):
+            return None
+        return "in", m.group("col"), lits
+    m = _BETWEEN_RE.match(leaf)
+    if m:
+        lo, hi = _row_literal(m.group("lo")), _row_literal(m.group("hi"))
+        if lo is None or hi is None or "null" in (lo[0], hi[0]):
+            return None
+        return "between", m.group("col"), lo, hi
+    m = _CMP_RE.match(leaf)
+    if m:
+        lit = _row_literal(m.group("lit"))
+        if lit is None or lit[0] == "null":
+            return None
+        return "cmp", m.group("col"), m.group("op"), lit
+    return None
+
+
+def _row_tree(masked: str):
+    expr = _strip_parens(masked)
+    for op in ("OR", "AND"):
+        parts = _split_top(expr, op)
+        if len(parts) > 1:
+            kids = [_row_tree(p) for p in parts]
+            return None if None in kids else (op, kids)
+    leaf = _row_leaf(expr.replace(_BETWEEN_AND, "AND"))
+    if leaf is None or not _IDENT_RE.match(leaf[1]) or leaf[1].lower() in _NOT_COLUMNS:
+        return None
+    return leaf
+
+
+@functools.lru_cache(maxsize=256)
+def _row_filter_tree(predicate: str):
+    """The predicate's AND/OR tree of row_filter leaves, parsed once per
+    distinct predicate, or None when any part is outside its grammar."""
+    if _DANGLING_RE.search(re.sub(r"'[^']*'", "''", predicate)):
+        return None
+    return _row_tree(_mask_between(predicate))
+
+
+def _leaf_columns(node) -> set[str]:
+    if node[0] in ("OR", "AND"):
+        return set().union(*(_leaf_columns(k) for k in node[1]))
+    return {node[1]}
+
+
+def row_filter_columns(predicate: str) -> frozenset[str] | None:
+    """The columns row_filter reads for ``predicate``, or None when its
+    grammar declines the predicate (column types are checked later, by
+    row_filter against the table)."""
+    tree = _row_filter_tree(predicate)
+    return None if tree is None else frozenset(_leaf_columns(tree))
+
+
+def row_filter(predicate: str, table):
+    """``predicate`` evaluated over the pyarrow ``table`` as a boolean
+    mask with SQL's three-valued logic (NULL where the predicate is
+    NULL; ``table.filter(mask)`` drops those rows, as Spark's filter
+    does), or None when the translation might differ from
+    ``filter(F.expr(predicate))`` on the same rows.
+
+    Accepted: AND/OR trees (Kleene AND/OR) over ``col op literal``
+    (=, <, <=, >, >=), BETWEEN, IN over a literal list (NULL members
+    included) and IS [NOT] NULL, where ``col`` names exactly one column
+    of ``table`` as spelled there. Comparisons, BETWEEN and IN need a
+    signed integer column with integer literals inside its type's range,
+    or a string column with plain single-quoted literals, compared as
+    bytes (Spark's default UTF8_BINARY collation — a caller whose string
+    column is collated must not push it). IS [NOT] NULL takes any
+    column (NaN is not NULL on either side). Everything else declines:
+    floating, decimal and temporal columns, typed or cross-kind literals
+    (``int_col = '5'`` casts under ANSI), NOT, functions, arithmetic,
+    quoted identifiers and anything Spark would not parse."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tree = _row_filter_tree(predicate)
+    if tree is None:
+        return None
+    schema = table.schema
+    lower = [n.lower() for n in schema.names]
+
+    def column(name: str):
+        if lower.count(name.lower()) != 1 or name not in schema.names:
+            return None
+        return table.column(name)
+
+    def kind(typ) -> str | None:
+        if pa.types.is_signed_integer(typ):
+            return "int"
+        if pa.types.is_string(typ) or pa.types.is_large_string(typ):
+            return "str"
+        return None
+
+    def scalar(lit, typ):
+        k, v = lit
+        if k != kind(typ):
+            return None
+        if k == "int":
+            half = 1 << (typ.bit_width - 1)
+            if not -half <= v < half:
+                return None
+        return pa.scalar(v, typ)
+
+    def ev(node):
+        if node[0] in ("OR", "AND"):
+            masks = [ev(k) for k in node[1]]
+            if any(m is None for m in masks):
+                return None
+            combine = pc.or_kleene if node[0] == "OR" else pc.and_kleene
+            return functools.reduce(combine, masks)
+        col = column(node[1])
+        if col is None:
+            return None
+        if node[0] == "null":
+            return pc.is_valid(col) if node[2] else pc.is_null(col)
+        typ = col.type
+        if node[0] == "cmp":
+            lit = scalar(node[3], typ)
+            return None if lit is None else getattr(pc, _ROW_CMP[node[2]])(col, lit)
+        if node[0] == "between":
+            lo, hi = scalar(node[2], typ), scalar(node[3], typ)
+            if lo is None or hi is None:
+                return None
+            return pc.and_kleene(pc.greater_equal(col, lo), pc.less_equal(col, hi))
+        # IN: TRUE on a match; otherwise NULL when the value or a list
+        # member is NULL, else FALSE
+        vals = [scalar(lit, typ) for lit in node[2] if lit[0] != "null"]
+        if kind(typ) is None or any(v is None for v in vals):
+            return None
+        hit = pc.is_in(col, value_set=pa.array([v.as_py() for v in vals], typ))
+        null = pa.scalar(None, pa.bool_())
+        hit = pc.if_else(pc.is_valid(col), hit, null)
+        if len(vals) < len(node[2]):
+            hit = pc.if_else(hit, pa.scalar(True), null)
+        return hit
+
+    return ev(tree)

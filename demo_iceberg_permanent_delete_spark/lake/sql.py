@@ -233,7 +233,12 @@ class LakeEngine:
         statement's own WHERE above the view is the single evaluation,
         so a non-deterministic conjunct (rand()) is never drawn twice,
         and the only layer that must be sound is the conservative pruner
-        (unevaluable leaves keep every file). None when the scan fails.
+        (unevaluable leaves keep every file). A predicate the row filter
+        translates for the table's types (LakeTable._pushable_columns)
+        is a deterministic set of literal comparisons, so the scan
+        applies it too: a driver read then hands Spark just the matches,
+        filtered in pyarrow, not whole candidate files. None when the
+        scan fails.
 
         Candidates within the driver budget come back driver-read (a
         LocalRelation holding the rows, LakeTable._driver_read). Those
@@ -243,7 +248,9 @@ class LakeEngine:
         df = self._scan_cache.get(key)
         if df is None:
             try:
-                df = t.scan(predicate, prune_only=True)
+                df = t.scan(
+                    predicate, prune_only=t._pushable_columns(predicate) is None
+                )
             except Exception:
                 # never cache a failure under the predicate key (a
                 # transient error must not pin the unpruned read for the

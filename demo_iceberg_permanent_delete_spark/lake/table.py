@@ -22,6 +22,7 @@ Reference behaviors mirrored:
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import os
 from collections.abc import Iterable
 from typing import Any
@@ -59,6 +60,24 @@ _BROADCAST_DELETES_MAX_BYTES = 256 * 1024 * 1024
 # skips the per-call footer-inference Spark job of a bare read.parquet.
 _POS_DELETE_SCHEMA = "file_path string, pos long"
 _DV_SCHEMA = "file_path string, positions array<bigint>, cardinality bigint"
+
+
+@functools.lru_cache(maxsize=256)
+def _schema_json(ddl: str, timestamp_type: str) -> str:
+    """``ddl`` parsed by Spark, as schema JSON. Spark's parser reads the
+    active session's conf (a bare ``timestamp`` parses as
+    TimestampNTZType under spark.sql.timestampType=TIMESTAMP_NTZ), so
+    that conf value, read by the caller, is part of the key."""
+    return T._parse_datatype_string(ddl).json()
+
+
+@functools.lru_cache(maxsize=4)
+def _active_sql_conf(jvm):
+    """``SQLConf.get`` of the JVM (the conf of the session active on the
+    calling thread, which Spark's parser reads), resolved once per
+    gateway view: py4j resolves a dotted name one reflection call per
+    segment."""
+    return jvm.org.apache.spark.sql.internal.SQLConf.get
 
 
 def _distinct_keys_arrow(paths: list[str], on: list[str]):
@@ -306,7 +325,16 @@ class LakeTable:
         return self
 
     def schema(self) -> T.StructType:
-        return T._parse_datatype_string(self.metadata.schema_ddl)
+        """The declared schema: a fresh StructType (it is mutable) from
+        the JSON of Spark's parse, which runs once per (DDL, timestamp
+        type of the session the parser reads) — _schema_json."""
+        conf = _active_sql_conf(self.spark._jvm)()
+        return T._parse_datatype_json_string(
+            _schema_json(
+                self.metadata.schema_ddl,
+                conf.getConfString("spark.sql.timestampType"),
+            )
+        )
 
     def empty_frame(self) -> DataFrame:
         return _empty_frame(self.spark, self.metadata.schema_ddl)
@@ -1008,6 +1036,7 @@ class LakeTable:
         *,
         positions: bool = False,
         lineage: bool = False,
+        columns: set[str] | frozenset[str] | None = None,
     ):
         """The merged read of ``data_entries`` as one pyarrow Table built
         on the driver, or None when it is past the driver budget or a type
@@ -1021,9 +1050,11 @@ class LakeTable:
         The files go through the DataSource's per-file MOR reader
         (sources/lake_datasource.py read_entries_arrow: the same delete,
         rename, default, widening and lineage resolution its executor
-        tasks run). Columns: the declared schema, then the lineage columns
-        with ``lineage``, then ``__fp``/``__pos`` with ``positions`` (the
-        positioned executor read's column set)."""
+        tasks run). Columns: the declared schema (only its ``columns``
+        when given: each file is then read for those and what its deletes
+        need), then the lineage columns with ``lineage``, then
+        ``__fp``/``__pos`` with ``positions`` (the positioned executor
+        read's column set)."""
         from demo_iceberg_permanent_delete_spark.sources.lake_datasource import (
             delete_reads,
             read_entries_arrow,
@@ -1044,6 +1075,7 @@ class LakeTable:
                 to_arrow_schema(self.schema()),
                 positions=positions,
                 lineage=lineage,
+                columns=columns,
             )
         except (pa.ArrowException, TypeError, ValueError):
             # a conversion pyarrow does not do (the executor reader's
@@ -1056,12 +1088,19 @@ class LakeTable:
         delete_files: list[ManifestEntry],
         *,
         positions: bool = False,
+        predicate: str | Column | None = None,
     ) -> DataFrame | None:
         """_driver_read_arrow's table as ``createDataFrame(arrow_table)``,
         a LocalRelation, or None: Spark folds a statement's filter and
         projection over it and collects the result with no job, where the
         parquet scan plus the delete anti-join costs one or two per
-        statement."""
+        statement.
+
+        ``predicate``: the frame holds only the rows it keeps. When
+        pruning.row_filter translates it (_row_mask), pyarrow filters the
+        rows before createDataFrame, so the LocalRelation holds just the
+        matches rather than every row of the candidate files; otherwise
+        Spark filters the LocalRelation."""
         table = self._driver_read_arrow(
             data_entries, delete_files, positions=positions
         )
@@ -1070,16 +1109,69 @@ class LakeTable:
         import pyarrow as pa
 
         fields = list(self.schema().fields)
+        mask = (
+            self._row_mask(predicate, table, fields)
+            if isinstance(predicate, str)
+            else None
+        )
+        if mask is not None:
+            table = table.filter(mask)
         if positions:
             fields += [
                 T.StructField("__fp", T.StringType()),
                 T.StructField("__pos", T.LongType()),
             ]
         try:
-            return self.spark.createDataFrame(table, T.StructType(fields))
+            df = self.spark.createDataFrame(table, T.StructType(fields))
         except (pa.ArrowException, TypeError, ValueError):
             # a conversion Spark's Arrow bridge does not do
             return None
+        if predicate is not None and mask is None:
+            df = df.filter(self._as_column(predicate))
+        return df
+
+    def _row_mask(self, predicate: str, table, fields: list[T.StructField]):
+        """pruning.row_filter's mask of ``predicate`` over ``table``, or
+        None — also when a column it reads is declared (``fields``, the
+        table schema's) a collated, char or varchar string, where Spark
+        does not compare plain bytes."""
+        from demo_iceberg_permanent_delete_spark.lake.pruning import (
+            row_filter,
+            row_filter_columns,
+        )
+
+        cols = row_filter_columns(predicate)
+        if cols is None:
+            return None
+        for f in fields:
+            if (
+                f.name in cols
+                and isinstance(f.dataType, (T.StringType, T.CharType, T.VarcharType))
+                and f.dataType != T.StringType()
+            ):
+                return None
+        return row_filter(predicate, table)
+
+    def _pushable_columns(self, predicate: str) -> frozenset[str] | None:
+        """The columns ``predicate`` reads when _row_mask translates it
+        for this table's declared column types (checked on an empty table
+        of those types, before anything is read), else None."""
+        from demo_iceberg_permanent_delete_spark.lake.pruning import (
+            row_filter_columns,
+        )
+
+        cols = row_filter_columns(predicate)
+        if cols is None:
+            return None
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        fields = [f for f in self.schema().fields if f.name in cols]
+        try:
+            typed = to_arrow_schema(T.StructType(fields)).empty_table()
+        except (pa.ArrowException, TypeError, ValueError):
+            return None
+        return None if self._row_mask(predicate, typed, fields) is None else cols
 
     def _attach_lineage(
         self, with_pos: DataFrame, data_entries: list[ManifestEntry]
@@ -1645,7 +1737,10 @@ class LakeTable:
         (_driver_read) and come back as a LocalRelation, which Spark
         filters, projects and collects without a job; past the budget
         the executor read (parquet scan + delete anti-join) is built.
-        Both apply the same deletes, renames, defaults and widening.
+        Both apply the same deletes, renames, defaults and widening. The
+        driver read filters in pyarrow when pruning.row_filter
+        translates the predicate, so its LocalRelation then holds the
+        matches rather than whole candidate files.
 
         ``prune_only=True`` skips the final row filter and returns the
         candidate-file SUPERSET (pruning is conservative) — for callers
@@ -1661,52 +1756,19 @@ class LakeTable:
         snap = self.metadata.current_snapshot()
         if snap is None:
             return self.empty_frame()
-        from demo_iceberg_permanent_delete_spark.lake.metadata import CONTENT_DATA
-        from demo_iceberg_permanent_delete_spark.lake.pruning import candidate_files
-
-        # manifest-LEVEL pruning first: whole delta manifest files whose
-        # header-recorded bounds can't match are never even opened
-        # (metadata.scoped_manifest — superset of matching data files plus
-        # ALL delete files), then the per-file pruner narrows within the
-        # deltas that were read. Lenient spec parse, hoisted once: this is
-        # a pruning-only consumer — an unknown legacy transform must not
-        # fail a read that plain read() serves (round-6 review finding),
-        # it just doesn't prune.
-        from demo_iceberg_permanent_delete_spark.lake.transforms import (
-            parse_partition_by,
-        )
-
-        part_fields = parse_partition_by(
-            self.metadata.partition_by, lenient=True
-        )
-        scoped = self.metadata.scoped_manifest(
-            snap,
-            predicate if isinstance(predicate, str) else None,
-            part_fields,
-            aliases=self.metadata.renames,
-        )
-        data_entries = [e for e in scoped if e.content == CONTENT_DATA]
-        entries = (
-            candidate_files(
-                data_entries,
-                predicate,
-                part_fields,
-                aliases=self.metadata.renames,
-            )
-            if isinstance(predicate, str)
-            else data_entries
-        )
+        pred_str = predicate if isinstance(predicate, str) else None
+        entries, delete_files = self._scoped_candidates(snap, pred_str)
         if not entries:
             return self.empty_frame()
-        delete_files = self._scope_deletes(
-            [e for e in scoped if e.content != CONTENT_DATA], entries
+        df = self._driver_read(
+            entries, delete_files, predicate=None if prune_only else predicate
         )
-        df = self._driver_read(entries, delete_files)
-        if df is None:
-            df = self._read_data_entries(entries, positions=bool(delete_files))
-            if delete_files:
-                df = self._apply_delete_files(df, delete_files, entries)
-            df = df.select(*[f.name for f in self.schema().fields])
+        if df is not None:
+            return df
+        df = self._read_data_entries(entries, positions=bool(delete_files))
+        if delete_files:
+            df = self._apply_delete_files(df, delete_files, entries)
+        df = df.select(*[f.name for f in self.schema().fields])
         return df if prune_only else df.filter(self._as_column(predicate))
 
     def _scope_deletes(
@@ -2454,40 +2516,13 @@ class LakeTable:
             return self.empty_frame().withColumns(
                 {"__fp": F.lit(None).cast("string"), "__pos": F.lit(None).cast("long")}
             ), 0
-        from demo_iceberg_permanent_delete_spark.lake.metadata import CONTENT_DATA
-
-        # manifest-level skip first (whole out-of-scope delta files are
-        # never opened), per-file pruning within what was read. Lenient
-        # spec parse, hoisted once — pruning-only consumer (see scan())
-        from demo_iceberg_permanent_delete_spark.lake.transforms import (
-            parse_partition_by,
-        )
-
-        part_fields = parse_partition_by(
-            self.metadata.partition_by, lenient=True
-        )
-        scoped = self.metadata.scoped_manifest(
-            snap, prune_for, part_fields, aliases=self.metadata.renames
-        )
-        data_entries = [e for e in scoped if e.content == CONTENT_DATA]
-        if prune_for is not None and data_entries:
-            from demo_iceberg_permanent_delete_spark.lake.pruning import candidate_files
-
-            data_entries = candidate_files(
-                data_entries,
-                prune_for,
-                part_fields,
-                aliases=self.metadata.renames,
-            )
+        data_entries, delete_files = self._scoped_candidates(snap, prune_for)
         row_bound = sum(e.record_count for e in data_entries)
         if not data_entries:
             empty = self.empty_frame().withColumns(
                 {"__fp": F.lit(None).cast("string"), "__pos": F.lit(None).cast("long")}
             )
             return (self._null_lineage(empty) if lineage else empty), 0
-        delete_files = self._scope_deletes(
-            [e for e in scoped if e.content != CONTENT_DATA], data_entries
-        )
         if driver and not lineage:
             local = self._driver_read(data_entries, delete_files, positions=True)
             if local is not None:
@@ -2500,6 +2535,43 @@ class LakeTable:
                 with_pos, delete_files, data_entries
             )
         return with_pos, row_bound
+
+    def _scoped_candidates(
+        self, snap: Snapshot, predicate: str | None
+    ) -> tuple[list[ManifestEntry], list[ManifestEntry]]:
+        """(candidate data files, delete files that may mask them) of
+        ``snap`` for a read scoped by ``predicate``: manifest-level skip
+        first (metadata.scoped_manifest: whole out-of-scope delta files
+        are never opened; it keeps every delete file), then per-file
+        pruning (candidate_files) within what was read, then delete-file
+        scoping against the candidates (_scope_deletes). The partition
+        spec parse is lenient: an unknown legacy transform must not fail
+        a read that plain read() serves, it just doesn't prune."""
+        from demo_iceberg_permanent_delete_spark.lake.pruning import candidate_files
+        from demo_iceberg_permanent_delete_spark.lake.transforms import (
+            parse_partition_by,
+        )
+
+        self.last_delete_scope = {"planned": 0, "skipped": 0}
+        part_fields = parse_partition_by(
+            self.metadata.partition_by, lenient=True
+        )
+        scoped = self.metadata.scoped_manifest(
+            snap, predicate, part_fields, aliases=self.metadata.renames
+        )
+        data_entries = [e for e in scoped if e.content == CONTENT_DATA]
+        if predicate is not None and data_entries:
+            data_entries = candidate_files(
+                data_entries,
+                predicate,
+                part_fields,
+                aliases=self.metadata.renames,
+            )
+        if not data_entries:
+            return [], []
+        return data_entries, self._scope_deletes(
+            [e for e in scoped if e.content != CONTENT_DATA], data_entries
+        )
 
     # --------------------------------------------------------------- DML
     @property
@@ -2910,32 +2982,47 @@ class LakeTable:
         if branch == "main":
             branch = None
         self._check_branch_wap(branch, wap_id)
-        pred = self._as_column(predicate)
-        pred_str = predicate if isinstance(predicate, str) else None
         mode = self.properties.get("write.delete.mode", "copy-on-write")
         if mode == "merge-on-read":
-            return self._delete_mor(pred, pred_str, branch=branch, wap_id=wap_id)
-        return self._delete_cow(pred, pred_str, branch=branch, wap_id=wap_id)
+            return self._delete_mor(predicate, branch=branch, wap_id=wap_id)
+        pred_str = predicate if isinstance(predicate, str) else None
+        return self._delete_cow(
+            self._as_column(predicate), pred_str, branch=branch, wap_id=wap_id
+        )
 
     def _delete_mor(
         self,
-        pred: Column,
-        pred_str: str | None = None,
+        predicate: str | Column,
         *,
         branch: str | None = None,
         wap_id: str | None = None,
     ) -> Snapshot | None:
+        """MOR DELETE: position-delete files holding the (file_path, pos)
+        of every live row that matches ``predicate``.
+
+        Under the deletion-vector layout, a string predicate that
+        pruning.row_filter translates is matched with no Spark plan
+        (_erase_on_driver): the candidate files, within the driver
+        budget, are read on the driver projected to the predicate's
+        columns, masked in pyarrow, and the matches go straight to the DV
+        writer. Otherwise the positioned match read (on the driver within
+        the budget under the DV layout, on executors else) is filtered
+        by Spark and written by _write_position_deletes, whose DV writer
+        takes small match sets on the driver too."""
         snap, parent_id = self._branch_base(branch)
-        # the DV writer takes small match sets on the driver, so a
-        # driver-read match scan makes the whole delete jobless
-        rows, row_bound = self._read_positions_bounded(
-            snap, pred_str, driver=self._dv_deletes
-        )
-        matches = rows.filter(pred).select(
-            F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
-        )
+        pred_str = predicate if isinstance(predicate, str) else None
+        delete_entries = self._erase_on_driver(snap, pred_str)
+        if delete_entries is None:
+            rows, row_bound = self._read_positions_bounded(
+                snap, pred_str, driver=self._dv_deletes
+            )
+            matches = rows.filter(self._as_column(predicate)).select(
+                F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
+            )
+            delete_entries = self._write_position_deletes(
+                matches, row_bound=row_bound
+            )
         base = list(snap.manifest) if snap else []
-        delete_entries = self._write_position_deletes(matches, row_bound=row_bound)
         if not delete_entries:
             return None  # nothing matched — no commit (Iceberg behavior)
         snapshot = self._commit_dml(
@@ -2950,6 +3037,45 @@ class LakeTable:
             e.added_snapshot_id = snapshot.snapshot_id
         self.metadata.commit()
         return snapshot
+
+    def _erase_on_driver(
+        self, snap: Snapshot | None, pred_str: str | None
+    ) -> list[ManifestEntry] | None:
+        """The MOR DELETE's deletion-vector entries, matched on the
+        driver, or None for the caller's general path: no snapshot, the
+        plain layout, a predicate pruning.row_filter declines for this
+        table's column types, or candidate reads past the driver budget
+        (the unchanged fits_driver_reads, via _driver_read_arrow).
+
+        Each candidate file is read for the predicate's columns only
+        (plus what its deletes need, see _conformed_file) with its
+        ``__fp``/``__pos``, the mask selects the matches, and their
+        (file_path, pos) pairs are written by _write_dv_table: the same
+        DV file the general path writes, with no Spark plan and no
+        LocalRelation. [] when nothing matches."""
+        from demo_iceberg_permanent_delete_spark.lake.pruning import row_filter
+
+        if snap is None or pred_str is None or not self._dv_deletes:
+            return None
+        cols = self._pushable_columns(pred_str)
+        if cols is None:
+            return None
+        import pyarrow as pa
+
+        data_entries, delete_files = self._scoped_candidates(snap, pred_str)
+        if not data_entries:
+            return []
+        table = self._driver_read_arrow(
+            data_entries, delete_files, positions=True, columns=cols
+        )
+        if table is None:
+            return None
+        hits = table.filter(row_filter(pred_str, table))
+        return self._write_dv_table(
+            pa.table(
+                {"file_path": hits.column("__fp"), "pos": hits.column("__pos")}
+            )
+        )
 
     def _delete_cow(
         self,

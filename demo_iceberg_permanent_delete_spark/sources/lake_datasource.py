@@ -55,7 +55,7 @@ from __future__ import annotations
 import os
 import uuid
 from dataclasses import dataclass, field
-from typing import Any, Iterator, Sequence
+from typing import Any, Collection, Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -273,12 +273,25 @@ def _conformed_file(
     row_groups: tuple[int, int] | None = None,
     row_offset: int = 0,
     with_positions: bool = False,
+    columns: Collection[str] | None = None,
 ):
     """(conformed visible table, raw visible table) of one data file: the
     per-file MOR read every reader shares — deletes applied, then
     renames, widening, null-fill and initial defaults resolved against
     ``arrow_schema``. The raw table keeps ``__gpos`` and any
-    materialized lineage columns for callers that need them."""
+    materialized lineage columns for callers that need them.
+
+    ``columns`` projects the read: the conformed table holds only those
+    columns of ``arrow_schema``, and the file is read for them plus the
+    equality-delete key columns, each under its current and historical
+    (renamed) physical names; defaults are injected for the same set."""
+    physical = None
+    if columns is not None:
+        need = {*columns, *(c for _, keys in eq_deletes for c in keys)}
+        physical = {
+            n for c in need for n in (c, *((renames or {}).get(c, ())))
+        }
+        defaults = tuple((c, v) for c, v in defaults if c in need)
     raw = _visible_table(
         path,
         pos_delete_paths,
@@ -289,7 +302,12 @@ def _conformed_file(
         row_offset=row_offset,
         defaults_typed=_typed_defaults(arrow_schema, defaults),
         with_positions=with_positions,
+        columns=physical,
     )
+    if columns is not None:
+        import pyarrow as pa
+
+        arrow_schema = pa.schema([f for f in arrow_schema if f.name in columns])
     return _apply_defaults(_conform(raw, arrow_schema, renames), defaults), raw
 
 
@@ -320,6 +338,7 @@ def read_entries_arrow(
     *,
     positions: bool = False,
     lineage: bool = False,
+    columns: Collection[str] | None = None,
 ):
     """Driver-side MOR read of manifest-listed data files into ONE
     pyarrow Table conformed to ``arrow_schema``: the batch reader's
@@ -330,12 +349,18 @@ def read_entries_arrow(
     resolved per row by _resolve_lineage (the table read's
     _attach_lineage rule). ``positions`` then appends ``__fp`` (the
     manifest path) and ``__pos`` (the row's file-global position), the
-    keys position deletes are written against."""
+    keys position deletes are written against.
+
+    ``columns`` keeps only those columns of ``arrow_schema`` (before the
+    lineage and position columns), and each file is read for just them
+    and what its deletes need (_conformed_file)."""
     import pyarrow as pa
 
     pos_for, dv_for, eq_for = _visibility(
         meta, None, entries=[*data_entries, *delete_entries]
     )
+    if columns is not None and lineage:
+        columns = {*columns, "_row_id", "_last_updated_sequence_number"}
     parts = []
     for e in data_entries:
         tbl, raw = _conformed_file(
@@ -347,6 +372,7 @@ def read_entries_arrow(
             dv_for(e),
             _defaults_for(meta, e),
             with_positions=positions or lineage,
+            columns=columns,
         )
         if lineage:
             rid, seq = _resolve_lineage(raw, e.first_row_id, e.sequence_number)
@@ -354,7 +380,7 @@ def read_entries_arrow(
             tbl = tbl.append_column("_last_updated_sequence_number", seq)
         if positions:
             tbl = tbl.append_column(
-                "__fp", pa.array([e.file_path] * tbl.num_rows, pa.string())
+                "__fp", pa.repeat(pa.scalar(e.file_path, pa.string()), tbl.num_rows)
             )
             tbl = tbl.append_column("__pos", raw.column("__gpos"))
         parts.append(tbl)
@@ -621,6 +647,7 @@ def _visible_table(
     row_offset: int = 0,
     defaults_typed: Sequence[tuple[str, object, object]] = (),
     with_positions: bool = False,
+    columns: Collection[str] | None = None,
 ):
     """Executor-side MOR read of one data file → visible pyarrow Table
     (position/DV/equality deletes applied, NOT yet schema-conformed).
@@ -641,17 +668,27 @@ def _visible_table(
     row's FILE-GLOBAL position before any delete filtering — the
     surviving rows then carry the positions row-lineage inheritance
     needs (_row_id = first_row_id + position; lake/table.py
-    _attach_lineage is the table-side twin)."""
+    _attach_lineage is the table-side twin).
+
+    ``columns``: read only the file's columns of this set of physical
+    names (all of them when None)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if row_groups is None:
+    if row_groups is None and columns is None:
         tbl = pq.read_table(path)
     else:
-        tbl = pq.ParquetFile(path).read_row_groups(
-            list(range(row_groups[0], row_groups[1]))
-        )
+        pf = pq.ParquetFile(path)
+        read = None
+        if columns is not None:
+            read = [c for c in pf.schema_arrow.names if c in columns]
+        if row_groups is None:
+            tbl = pf.read(columns=read)
+        else:
+            tbl = pf.read_row_groups(
+                list(range(row_groups[0], row_groups[1])), columns=read
+            )
     if with_positions:
         tbl = tbl.append_column(
             "__gpos",

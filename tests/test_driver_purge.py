@@ -114,6 +114,7 @@ def _encoded_location(spark, cat):
     with pytest.MonkeyPatch.context() as m:
         m.setattr(LakeTable, "_with_position", staticmethod(_encoded_position))
         m.setattr(LakeTable, "_driver_read", lambda *a, **k: None)
+        m.setattr(LakeTable, "_erase_on_driver", lambda *a, **k: None)
         _erase(t, 47, 90)
     assert any(
         "%20" in r

@@ -258,6 +258,7 @@ def test_mor_delete_under_url_encoded_location(spark, tmp_path, monkeypatch, rea
         monkeypatch.setattr(
             LakeTable, "_driver_read", lambda *a, **k: None, raising=False
         )
+        monkeypatch.setattr(LakeTable, "_erase_on_driver", lambda *a, **k: None)
     lake_datasource.register(spark)
     cat = Catalog(spark, str(tmp_path / "wh with space %25 a+b"))
     cat.create_namespace("default")
@@ -297,6 +298,7 @@ def test_encoded_tombstones_written_before_the_fix_still_apply(
     with monkeypatch.context() as m:
         m.setattr(LakeTable, "_with_position", staticmethod(encoded_position))
         m.setattr(LakeTable, "_driver_read", lambda *a, **k: None)
+        m.setattr(LakeTable, "_erase_on_driver", lambda *a, **k: None)
         t.delete("k = 3")
     (dv,) = t.metadata.current_snapshot().delete_files()
     assert "%20" in dv.referenced_files[0]
@@ -347,3 +349,135 @@ def test_facade_scan_cache_keeps_no_driver_rows(spark, tmp_path, monkeypatch):
         assert eng.sql(f"SELECT k FROM default.t WHERE k = {k}").collect()
     assert len(eng._scan_cache) == 5
     assert not any(df.isLocal() for df in eng._scan_cache.values())
+
+
+def _erase_table(spark, wh):
+    cat = Catalog(spark, wh)
+    cat.create_namespace("default")
+    t = cat.create_table("default.t", "k bigint, a string", properties=MOR)
+    _insert(t, spark, 0, 100, "k", "concat('a', k) AS a")
+    _insert(t, spark, 100, 200, "k", "concat('a', k) AS a")
+    return t
+
+
+def test_pushed_erase_reads_projected_columns_and_builds_no_frame(
+    spark, tmp_path, monkeypatch
+):
+    """A predicate the row filter translates is matched in pyarrow: no
+    Spark job, no createDataFrame, and each candidate file is read for
+    the predicate's column only."""
+    t = _erase_table(spark, str(tmp_path / "wh"))
+    frames, reads = [], []
+    real_frame = spark.createDataFrame
+    real_visible = lake_datasource._visible_table
+
+    def frame_spy(*args, **kwargs):
+        frames.append(1)
+        return real_frame(*args, **kwargs)
+
+    def visible_spy(path, *args, **kwargs):
+        reads.append((path, kwargs.get("columns")))
+        return real_visible(path, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", frame_spy)
+    monkeypatch.setattr(lake_datasource, "_visible_table", visible_spy)
+    snap = jobless(spark, lambda: t.delete("k = 150"))
+    assert snap is not None and frames == []
+    (candidate,) = [
+        e.file_path
+        for e in snap.data_files()
+        if e.min_values["k"] <= 150 <= e.max_values["k"]
+    ]
+    assert reads == [(candidate, {"k"})]
+    # a second erase reads through the first one's DV, still projected
+    reads.clear()
+    jobless(spark, lambda: t.delete("k IN (151, 152) OR k = 150"))
+    assert reads == [(candidate, {"k"})] and frames == []
+    assert sorted(r["k"] for r in t.read().collect()) == [
+        k for k in range(200) if k not in (150, 151, 152)
+    ]
+
+
+def test_declined_erase_takes_the_local_relation_path(spark, tmp_path, monkeypatch):
+    """A predicate the row filter declines is matched by Spark over the
+    driver read's LocalRelation, as before; both paths write the same
+    rows and manifests."""
+    pushed = _erase_table(spark, str(tmp_path / "a"))
+    declined = _erase_table(spark, str(tmp_path / "b"))
+    frames = []
+    real_frame = spark.createDataFrame
+
+    def frame_spy(*args, **kwargs):
+        frames.append(1)
+        return real_frame(*args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", frame_spy)
+    pushed.delete("k = 150 OR a = 'a7'")
+    assert frames == []
+    declined.delete("k + 0 = 150 OR a = 'a7'")
+    assert frames == [1]
+    assert _rows(pushed.read()) == _rows(declined.read())
+    assert _manifests(pushed) == _manifests(declined)
+
+
+def test_schema_parse_is_memoised_per_timestamp_type(spark, tmp_path, monkeypatch):
+    """LakeTable.schema() gives the answer of Spark's DDL parse, which
+    reads spark.sql.timestampType from the session active in the JVM, and
+    parses each (DDL, timestamp type) pair once."""
+    from pyspark.sql import types as T
+
+    from demo_iceberg_permanent_delete_spark.lake import table as table_mod
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.create_namespace("default")
+    t = cat.create_table("default.t", "k bigint, ts timestamp")
+    ddl = t.metadata.schema_ddl
+    ntz = spark.newSession()
+    ntz.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
+    on_ntz = LakeTable(ntz, t.metadata)
+    parses = []
+    real = T._parse_datatype_string
+
+    def spy(s):
+        parses.append(s)
+        return real(s)
+
+    table_mod._schema_json.cache_clear()
+    monkeypatch.setattr(T, "_parse_datatype_string", spy)
+    jvm_session = spark._jvm.SparkSession
+    answers = {}
+    for name, active in (("ltz", spark), ("ntz", ntz)):
+        jvm_session.setActiveSession(active._jsparkSession)
+        try:
+            want = real(ddl)
+            for handle in (t, on_ntz, t):
+                got = handle.schema()
+                assert got == want
+                got.fields.clear()  # a fresh object per call
+            answers[name] = want
+        finally:
+            jvm_session.setActiveSession(spark._jsparkSession)
+    assert answers["ltz"]["ts"].dataType == T.TimestampType()
+    assert answers["ntz"]["ts"].dataType == T.TimestampNTZType()
+    assert parses == [ddl, ddl]
+
+
+def test_facade_lookup_hands_spark_only_the_matches(spark, tmp_path, monkeypatch):
+    """A lookup whose WHERE the row filter translates is filtered in
+    pyarrow before createDataFrame: the LocalRelation holds the matching
+    row, not the candidate file's 100. A predicate it declines still
+    hands over the whole candidate file."""
+    eng = LakeEngine(spark, str(tmp_path / "wh"))
+    _erase_table(spark, str(tmp_path / "wh"))
+    sizes = []
+    real_frame = spark.createDataFrame
+
+    def frame_spy(data, *args, **kwargs):
+        sizes.append(data.num_rows)
+        return real_frame(data, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", frame_spy)
+    rows = jobless(spark, lambda: eng.sql("SELECT a FROM default.t WHERE k = 151").collect())
+    assert [r["a"] for r in rows] == ["a151"] and sizes == [1]
+    rows = eng.sql("SELECT a FROM default.t WHERE k + 0 = 151 AND k >= 100").collect()
+    assert [r["a"] for r in rows] == ["a151"] and sizes == [1, 100]

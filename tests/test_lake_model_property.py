@@ -23,7 +23,7 @@ import pytest
 
 pytestmark = pytest.mark.slow  # ~160 s of randomized DML sequences
 
-from demo_iceberg_permanent_delete_spark.lake import Catalog, datafiles
+from demo_iceberg_permanent_delete_spark.lake import Catalog, datafiles, pruning
 
 DDL = "k bigint, v bigint, s string"
 FUTURE = dt.datetime(2100, 1, 1)
@@ -31,7 +31,9 @@ FUTURE = dt.datetime(2100, 1, 1)
 N_SEEDS = 5
 N_STEPS = 14
 # seeds also run with a driver budget of 0 (every driver-collect site
-# takes its executor path), checked against a default-budget run
+# takes its executor path) and with the row filter declining every
+# predicate (driver reads match through Spark), each checked against a
+# default-budget run
 BUDGET0_SEEDS = (0, 1)
 
 
@@ -90,6 +92,15 @@ def test_random_dml_sequences_match_model(
         return
     want_rows, want_snaps = _fingerprint(
         _run_sequence(spark, tmp_path / "default", seed)
+    )
+    with monkeypatch.context() as m:
+        m.setattr(pruning, "row_filter", lambda predicate, table: None)
+        got_rows, got_snaps = _fingerprint(
+            _run_sequence(spark, tmp_path / "declined", seed)
+        )
+    assert got_rows == want_rows
+    assert got_snaps == want_snaps, (
+        f"seed {seed}: declining the row filter wrote different manifests"
     )
     monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", budget)
     got_rows, got_snaps = _fingerprint(
