@@ -1209,7 +1209,11 @@ class TableMetadata:
                 self._written_deltas.add(sid)
         path = self.metadata_file(self.version)
         self.metadata_log.append({"metadata_file": path, "timestamp_ms": now_ms()})
-        document = json.dumps(self.to_json(), indent=1, default=str)
+        # compact separators and no indent: json.dumps then runs the C
+        # encoder (an indent forces the pure-Python one, ~4x slower here)
+        document = json.dumps(
+            self.to_json(), separators=(",", ":"), default=str
+        )
         try:
             get_service().claim_version(self.location, self.version, document)
         except Exception:

@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from demo_iceberg_permanent_delete_spark.lake.catalog import Catalog
+from demo_iceberg_permanent_delete_spark.lake.pruning import _IDENT_RE, _NOT_COLUMNS
 from demo_iceberg_permanent_delete_spark.lake.table import METADATA_VIEWS as _META_VIEWS
 from demo_iceberg_permanent_delete_spark.lake.table import LakeTable
 
@@ -113,6 +114,12 @@ class LakeEngine:
     ``catalog_name`` mirrors the reference's ``spark.sql.defaultCatalog=demo``
     (docker-compose.yml:24): a leading ``demo.`` on table identifiers is
     accepted and stripped.
+
+    A point lookup (``SELECT cols FROM t WHERE <literal comparisons>``,
+    the reference's ``WHERE case_id = 'case-2'`` read) is answered by
+    one projected ``LakeTable.scan``, with no temp view and no
+    spark.sql (_point_lookup); other queries register their tables as
+    temp views and run through spark.sql (_select).
     """
 
     def __init__(self, spark: SparkSession, warehouse: str, catalog_name: str = "demo"):
@@ -152,11 +159,12 @@ class LakeEngine:
         wb = self._active_read_branch()
         return name if wb is None else f"{name}@{wb}"
 
-    def _cached_table(self, name: str) -> LakeTable:
+    def _cached_table(self, name: str, reg: dict | None = None) -> LakeTable:
         """Version-checked cached LakeTable for SELECT paths. One registry
-        read + one listdir + one stat when unchanged. The full read is
-        not built here (_cached_read): a statement whose WHERE scopes the
-        table registers its pruned scan instead.
+        read (none when the statement passes its snapshot ``reg``) + one
+        listdir + one stat when unchanged. The full read is not built
+        here (_cached_read): a statement whose WHERE scopes the table
+        registers its pruned scan instead.
 
         The version number alone is not table identity: DROP PURGE +
         CREATE of the same name reuses the deterministic location and
@@ -173,7 +181,8 @@ class LakeEngine:
             doc_identity,
         )
 
-        reg = self.catalog._read_registry()
+        if reg is None:
+            reg = self.catalog._read_registry()
         entry = reg["tables"].get(name)
         cache_key = self._cache_key(name)
         cached = self._table_cache.get(cache_key)
@@ -223,7 +232,11 @@ class LakeEngine:
         return cached[3]
 
     def _cached_scan(
-        self, name: str, t: LakeTable, predicate: str
+        self,
+        name: str,
+        t: LakeTable,
+        predicate: str,
+        columns: tuple[str, ...] | None = None,
     ) -> DataFrame | None:
         """Manifest-pruned read for a statement whose WHERE provably
         scopes this table's single scan (lake/scanscope.py): files whose
@@ -240,16 +253,22 @@ class LakeEngine:
         filtered in pyarrow, not whole candidate files. None when the
         scan fails.
 
+        ``columns`` (the point lookup, whose predicate translates) is
+        the statement's projection: the scan is then the whole answer.
+
         Candidates within the driver budget come back driver-read (a
         LocalRelation holding the rows, LakeTable._driver_read). Those
         are rebuilt per statement and never cached: the cache holds
         executor scans, which are plans, so it pins no table data."""
-        key = (name, t.metadata.version, predicate)
+        key = (name, t.metadata.version, predicate, columns)
         df = self._scan_cache.get(key)
         if df is None:
             try:
                 df = t.scan(
-                    predicate, prune_only=t._pushable_columns(predicate) is None
+                    predicate,
+                    prune_only=columns is None
+                    and t._pushable_columns(predicate) is None,
+                    columns=columns,
                 )
             except Exception:
                 # never cache a failure under the predicate key (a
@@ -1645,7 +1664,7 @@ class LakeEngine:
         T.BooleanType, T.DecimalType,
     )
 
-    def _metadata_aggregates(self, items_text: str, ident: str):
+    def _metadata_aggregates(self, items_text: str, ident: str, reg: dict):
         """Iceberg's aggregate pushdown (SparkScanBuilder.pushAggregation)
         re-expressed at the facade: an unfiltered aggregate-only SELECT of
         COUNT(*) / COUNT(col) / MIN(col) / MAX(col) answers from manifest
@@ -1677,7 +1696,7 @@ class LakeEngine:
             # main manifest — defer to the general (branch-routed) path
             return None
         try:
-            t = self._cached_table(self._strip_catalog(ident))
+            t = self._cached_table(self._strip_catalog(ident), reg)
         except Exception:
             return None
         parsed: list[tuple[str, str, str | None]] = []
@@ -1778,6 +1797,57 @@ class LakeEngine:
             [tuple(out_row)], T.StructType(out_fields)
         )
 
+    _POINT = re.compile(
+        r"SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<tbl>[\w.]+)\s+WHERE\s+(?P<pred>.+)$",
+        re.I | re.S,
+    )
+    # select-list words Spark reads as something other than a column
+    _NOT_SELECT_COLUMNS = _NOT_COLUMNS | {"all", "distinct", "from", "select", "where"}
+
+    def _point_lookup(self, stmt: str, reg: dict) -> DataFrame | None:
+        """``SELECT <* | col, …> FROM <table> WHERE <pred>`` as the table's
+        projected scan (LakeTable.scan with ``columns``), or None for the
+        general path. Taken only when the answer is exactly what spark.sql
+        would compute over the registered scan: no session read branch, a
+        registry table (not a view, a metadata table or time travel),
+        schema columns spelled exactly, listed once and unambiguous
+        case-insensitively, and a WHERE that _pushable_columns accepts
+        whole (deterministic literal comparisons, which the scan already
+        applies in pyarrow). So the statement registers no temp view and
+        runs no SQL parse, no scan estimate and no codegen: Spark would
+        re-apply the same comparisons to the same matches, compiling the
+        filter once per distinct literal."""
+        m = self._POINT.match(stmt)
+        if m is None or self._active_read_branch() is not None:
+            return None
+        name = self._strip_catalog(m.group("tbl"))
+        if name not in reg["tables"] or name in reg.get("views", {}):
+            return None
+        pred = m.group("pred")
+        try:
+            t = self._cached_table(name, reg)
+            schema = t.schema()
+            pushed = t._pushable_columns(pred, schema)
+        except Exception:
+            return None
+        names = schema.names
+        items = [c.strip() for c in m.group("items").split(",")]
+        cols = tuple(names) if items == ["*"] else tuple(items)
+        lower = [n.lower() for n in names]
+        if (
+            pushed is None
+            or len({c.lower() for c in cols}) != len(cols)
+            or any(
+                not _IDENT_RE.match(c)
+                or c.lower() in self._NOT_SELECT_COLUMNS
+                or c not in names
+                or lower.count(c.lower()) != 1
+                for c in {*cols, *pushed}
+            )
+        ):
+            return None
+        return self._cached_scan(name, t, pred, cols)
+
     def _select(self, stmt: str, _depth: int = 0) -> DataFrame:
         """Plain SQL: rewrite lake-table identifiers (and their metadata
         relations) to freshly registered temp views, then spark.sql.
@@ -1786,18 +1856,26 @@ class LakeEngine:
         first, and only outside single-quoted string literals — a naive
         substring replace would mangle a table whose name prefixes another
         (default.pii inside default.pii_data) or rewrite literals.
+
+        Two shapes answer without spark.sql: an unfiltered aggregate of
+        COUNT/MIN/MAX from manifest stats (_metadata_aggregates), and a
+        point lookup whose WHERE translates to a pyarrow mask
+        (_point_lookup).
         """
+        # ONE registry snapshot per statement — the rewrites and table
+        # loads below used to each re-read catalog.json
+        reg = self.catalog._read_registry()
         if _depth == 0:
             m = self._AGG_ONLY.match(stmt)
             if m:
                 fast = self._metadata_aggregates(
-                    m.group("items"), m.group("tbl")
+                    m.group("items"), m.group("tbl"), reg
                 )
                 if fast is not None:
                     return fast
-        # ONE registry snapshot per statement — the rewrites below used
-        # to each re-read catalog.json (4 reads/statement)
-        reg = self.catalog._read_registry()
+            fast = self._point_lookup(stmt, reg)
+            if fast is not None:
+                return fast
         table_names = sorted(reg["tables"])
         stmt = self._expand_views(stmt, _depth, views=reg.get("views", {}))
         stmt = self._rewrite_time_travel(stmt, tables=set(table_names))
@@ -1859,7 +1937,7 @@ class LakeEngine:
         )
 
         loaded: dict[str, LakeTable] = {
-            name: self._cached_table(name) for name in needed
+            name: self._cached_table(name, reg) for name in needed
         }
         rewritten = "".join(segments)
         try:

@@ -24,7 +24,7 @@ from __future__ import annotations
 import datetime as dt
 import functools
 import os
-from collections.abc import Iterable
+from collections.abc import Iterable, Sequence
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -1037,6 +1037,7 @@ class LakeTable:
         positions: bool = False,
         lineage: bool = False,
         columns: set[str] | frozenset[str] | None = None,
+        schema: T.StructType | None = None,
     ):
         """The merged read of ``data_entries`` as one pyarrow Table built
         on the driver, or None when it is past the driver budget or a type
@@ -1054,7 +1055,8 @@ class LakeTable:
         when given: each file is then read for those and what its deletes
         need), then the lineage columns with ``lineage``, then
         ``__fp``/``__pos`` with ``positions`` (the positioned executor
-        read's column set)."""
+        read's column set). ``schema``: the caller's self.schema(), which
+        saves the JVM round trips of reading it again."""
         from demo_iceberg_permanent_delete_spark.sources.lake_datasource import (
             delete_reads,
             read_entries_arrow,
@@ -1072,7 +1074,7 @@ class LakeTable:
                 self.metadata,
                 data_entries,
                 delete_files,
-                to_arrow_schema(self.schema()),
+                to_arrow_schema(self.schema() if schema is None else schema),
                 positions=positions,
                 lineage=lineage,
                 columns=columns,
@@ -1089,6 +1091,7 @@ class LakeTable:
         *,
         positions: bool = False,
         predicate: str | Column | None = None,
+        columns: Sequence[str] | None = None,
     ) -> DataFrame | None:
         """_driver_read_arrow's table as ``createDataFrame(arrow_table)``,
         a LocalRelation, or None: Spark folds a statement's filter and
@@ -1100,15 +1103,28 @@ class LakeTable:
         pruning.row_filter translates it (_row_mask), pyarrow filters the
         rows before createDataFrame, so the LocalRelation holds just the
         matches rather than every row of the candidate files; otherwise
-        Spark filters the LocalRelation."""
+        Spark filters the LocalRelation.
+
+        ``columns``: the frame holds only those, in that order. With a
+        predicate _pushable_columns accepts, each file is read for them
+        and the predicate's columns only, and pyarrow projects the
+        matches; otherwise every column is read and Spark projects after
+        its filter."""
+        schema = self.schema()
+        pushed = (
+            self._pushable_columns(predicate, schema)
+            if columns is not None and isinstance(predicate, str)
+            else None
+        )
+        read = None if pushed is None else {*columns, *pushed}
         table = self._driver_read_arrow(
-            data_entries, delete_files, positions=positions
+            data_entries, delete_files, positions=positions, columns=read, schema=schema
         )
         if table is None:
             return None
         import pyarrow as pa
 
-        fields = list(self.schema().fields)
+        fields = [f for f in schema.fields if read is None or f.name in read]
         mask = (
             self._row_mask(predicate, table, fields)
             if isinstance(predicate, str)
@@ -1116,6 +1132,10 @@ class LakeTable:
         )
         if mask is not None:
             table = table.filter(mask)
+            if columns is not None:
+                by_name = {f.name: f for f in fields}
+                fields = [by_name[c] for c in columns]
+                table = table.select(list(columns))
         if positions:
             fields += [
                 T.StructField("__fp", T.StringType()),
@@ -1126,8 +1146,11 @@ class LakeTable:
         except (pa.ArrowException, TypeError, ValueError):
             # a conversion Spark's Arrow bridge does not do
             return None
-        if predicate is not None and mask is None:
-            df = df.filter(self._as_column(predicate))
+        if mask is None:
+            if predicate is not None:
+                df = df.filter(self._as_column(predicate))
+            if columns is not None:
+                df = df.select(*columns)
         return df
 
     def _row_mask(self, predicate: str, table, fields: list[T.StructField]):
@@ -1152,10 +1175,13 @@ class LakeTable:
                 return None
         return row_filter(predicate, table)
 
-    def _pushable_columns(self, predicate: str) -> frozenset[str] | None:
+    def _pushable_columns(
+        self, predicate: str, schema: T.StructType | None = None
+    ) -> frozenset[str] | None:
         """The columns ``predicate`` reads when _row_mask translates it
         for this table's declared column types (checked on an empty table
-        of those types, before anything is read), else None."""
+        of those types, before anything is read), else None. ``schema``:
+        the caller's self.schema(), as in _driver_read_arrow."""
         from demo_iceberg_permanent_delete_spark.lake.pruning import (
             row_filter_columns,
         )
@@ -1166,7 +1192,9 @@ class LakeTable:
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        fields = [f for f in self.schema().fields if f.name in cols]
+        if schema is None:
+            schema = self.schema()
+        fields = [f for f in schema.fields if f.name in cols]
         try:
             typed = to_arrow_schema(T.StructType(fields)).empty_table()
         except (pa.ArrowException, TypeError, ValueError):
@@ -1726,6 +1754,7 @@ class LakeTable:
         predicate: str | Column | None = None,
         *,
         prune_only: bool = False,
+        columns: Sequence[str] | None = None,
     ) -> DataFrame:
         """Predicate-pushed read: manifest min/max stats prune whole files
         before Spark opens them (SURVEY.md §4 — the Iceberg-manifest
@@ -1742,26 +1771,45 @@ class LakeTable:
         translates the predicate, so its LocalRelation then holds the
         matches rather than whole candidate files.
 
+        ``columns`` projects the result to those schema columns, in that
+        order. A driver read whose predicate translates then reads each
+        candidate file for them and the predicate's columns only (the SQL
+        facade's point lookup is this call); otherwise the projection
+        follows the row filter.
+
         ``prune_only=True`` skips the final row filter and returns the
         candidate-file SUPERSET (pruning is conservative) — for callers
         that re-apply the predicate themselves, like the SQL facade's
         view registration, where applying it here too would evaluate a
-        non-deterministic predicate (rand()) twice and change results."""
+        non-deterministic predicate (rand()) twice and change results.
+        It takes no ``columns``: the caller's filter may read others."""
+        if prune_only and columns is not None:
+            raise ValueError(
+                "scan(prune_only=True) takes no columns: the caller's "
+                "filter may need the dropped ones"
+            )
         # reset FIRST so every early return (predicate-less delegation to
         # read(), no snapshot, everything pruned) leaves honest counts,
         # never a PREVIOUS scan's (review catches ×2)
         self.last_delete_scope = {"planned": 0, "skipped": 0}
+
+        def project(df: DataFrame) -> DataFrame:
+            return df if columns is None else df.select(*columns)
+
         if predicate is None:
-            return self.read()
+            return project(self.read())
         snap = self.metadata.current_snapshot()
         if snap is None:
-            return self.empty_frame()
+            return project(self.empty_frame())
         pred_str = predicate if isinstance(predicate, str) else None
         entries, delete_files = self._scoped_candidates(snap, pred_str)
         if not entries:
-            return self.empty_frame()
+            return project(self.empty_frame())
         df = self._driver_read(
-            entries, delete_files, predicate=None if prune_only else predicate
+            entries,
+            delete_files,
+            predicate=None if prune_only else predicate,
+            columns=columns,
         )
         if df is not None:
             return df
@@ -1769,7 +1817,7 @@ class LakeTable:
         if delete_files:
             df = self._apply_delete_files(df, delete_files, entries)
         df = df.select(*[f.name for f in self.schema().fields])
-        return df if prune_only else df.filter(self._as_column(predicate))
+        return df if prune_only else project(df.filter(self._as_column(predicate)))
 
     def _scope_deletes(
         self,
@@ -3057,7 +3105,8 @@ class LakeTable:
 
         if snap is None or pred_str is None or not self._dv_deletes:
             return None
-        cols = self._pushable_columns(pred_str)
+        schema = self.schema()
+        cols = self._pushable_columns(pred_str, schema)
         if cols is None:
             return None
         import pyarrow as pa
@@ -3066,7 +3115,7 @@ class LakeTable:
         if not data_entries:
             return []
         table = self._driver_read_arrow(
-            data_entries, delete_files, positions=True, columns=cols
+            data_entries, delete_files, positions=True, columns=cols, schema=schema
         )
         if table is None:
             return None

@@ -3,11 +3,12 @@
 Random operation sequences — inserts, MOR/COW deletes, COW updates,
 rollbacks, compaction, tombstone consolidation, snapshot expiry — run
 against both the LakeTable and a plain in-memory Python model, asserting
-``read()`` equivalence after EVERY step. Write modes (merge-on-read vs
-copy-on-write, deletion vectors on/off) flip randomly mid-sequence, so
-mixed-layout snapshots (row tombstones + DVs + rewritten files) are
-exercised together. Maintenance ops must never change the visible table;
-rollback must restore exactly the model's recorded state.
+``read()`` equivalence after EVERY step, plus a SQL-facade point lookup
+of a random live key and of a random deleted key. Write modes
+(merge-on-read vs copy-on-write, deletion vectors on/off) flip randomly
+mid-sequence, so mixed-layout snapshots (row tombstones + DVs + rewritten
+files) are exercised together. Maintenance ops must never change the
+visible table; rollback must restore exactly the model's recorded state.
 
 This is the strongest kind of check the snapshot layer can get short of
 a second engine: any divergence between the metadata machinery and the
@@ -23,7 +24,7 @@ import pytest
 
 pytestmark = pytest.mark.slow  # ~160 s of randomized DML sequences
 
-from demo_iceberg_permanent_delete_spark.lake import Catalog, datafiles, pruning
+from demo_iceberg_permanent_delete_spark.lake import Catalog, LakeEngine, datafiles, pruning
 
 DDL = "k bigint, v bigint, s string"
 FUTURE = dt.datetime(2100, 1, 1)
@@ -119,6 +120,10 @@ def _run_sequence(spark, tmp_path, seed):
     cat = Catalog(spark, str(tmp_path / f"wh{seed}"))
     cat.create_namespace("default")
     t = cat.create_table("default.model", DDL)
+    eng = LakeEngine(spark, str(tmp_path / f"wh{seed}"))
+    # lookup keys come from their own stream: the DML sequence of a seed
+    # stays what it was without them
+    look = random.Random(7000 + seed)
 
     model: dict[int, tuple[int, str]] = {}  # k -> (v, s)
     next_k = 0
@@ -147,6 +152,17 @@ def _run_sequence(spark, tmp_path, seed):
             f"engine-only: {sorted(set(got) - set(want))[:5]}\n"
             f"model-only: {sorted(set(want) - set(got))[:5]}"
         )
+        if model:
+            k = look.choice(sorted(model))
+            got = eng.sql(f"SELECT k, v, s FROM default.model WHERE k = {k}").collect()
+            assert [tuple(r) for r in got] == [(k, *model[k])], (
+                f"seed {seed} step {step} after {op}: lookup of k={k}"
+            )
+        gone = sorted(set(range(next_k)) - set(model))
+        if gone:
+            k = look.choice(gone)
+            got = eng.sql(f"SELECT s, k FROM default.model WHERE k = {k}").collect()
+            assert got == [], f"seed {seed} step {step} after {op}: k={k} deleted"
         rids = [rid for rid, _ in lin.values()]
         assert len(rids) == len(set(rids)), (
             f"seed {seed} step {step} after {op}: duplicate _row_id"

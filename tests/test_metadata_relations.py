@@ -7,6 +7,8 @@ these relations encode as first-class tables)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from demo_iceberg_permanent_delete_spark.lake import Catalog
@@ -300,3 +302,32 @@ def test_snapshot_summary_running_totals(spark, tmp_path):
     )
     assert row["summary"]["total-records"] == "0"
     assert row["summary"]["total-data-files"] == "0"
+
+
+def test_committed_document_round_trips(spark, tmp_path):
+    """The committed table document is compact JSON (no indent, so
+    json.dumps runs its C encoder) and reloads to the same document:
+    snapshots with position deletes, a rename, a default and properties
+    included."""
+    import json
+
+    from demo_iceberg_permanent_delete_spark.lake.metadata import (
+        TableMetadata,
+    )
+
+    t = _table(spark, tmp_path)
+    t.delete("id IN (3, 14)")
+    t.rename_column("v", "w")
+    t.add_column("d", "int", default=7)
+    t.set_properties({"write.delete.vector.enabled": "true"})
+    t.delete("id = 5")
+
+    loc = t.metadata.location
+    version = TableMetadata.latest_version(loc)
+    with open(os.path.join(loc, "metadata", f"v{version}.json")) as fh:
+        text = fh.read()
+    assert text == json.dumps(json.loads(text), separators=(",", ":"))
+    loaded = TableMetadata.load(loc)
+    assert loaded.version == t.metadata.version == version
+    assert loaded.to_json() == t.metadata.to_json()
+    assert json.loads(text) == t.metadata.to_json()

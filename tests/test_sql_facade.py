@@ -1949,3 +1949,227 @@ def test_review_fixes_ddl_atomicity_and_namespaces(spark, tmp_path):
     eng.sql("INSERT INTO demo.default.dq VALUES (10.50), (100.00)")
     got = eng.sql("SELECT * FROM demo.default.dq WHERE x = '10.50'").collect()
     assert [str(r["x"]) for r in got] == ["10.50"]
+
+
+# ------------------------------------------------- point-lookup fast path
+_LOOKUP_MOR = {
+    "write.delete.mode": "merge-on-read",
+    "write.update.mode": "merge-on-read",
+}
+
+
+def _lookup_tables(spark, tmp_path):
+    """Two tables with the same history, one per delete layout (deletion
+    vectors, position-delete files): an int column widened to bigint, a
+    renamed column, a column added with an initial default, NULLs,
+    double/decimal/date columns, row deletes and an equality delete."""
+    eng = LakeEngine(spark, str(tmp_path / "wh"))
+    eng.sql("CREATE NAMESPACE IF NOT EXISTS default")
+    for name, dv in (("dv", "true"), ("pos", "false")):
+        t = eng.catalog.create_table(
+            f"default.{name}",
+            "k int, a string, n bigint, f double, p decimal(10,2), dt date",
+            properties={**_LOOKUP_MOR, "write.delete.vector.enabled": dv},
+        )
+        t.insert(
+            spark.range(0, 40, numPartitions=1).selectExpr(
+                "cast(id AS int) AS k",
+                "CASE WHEN id % 6 = 0 THEN NULL ELSE concat('a', id % 5) END AS a",
+                "CASE WHEN id % 4 = 0 THEN NULL ELSE id * 10 END AS n",
+                "id / 4 AS f",
+                "cast(id * 1.25 AS decimal(10,2)) AS p",
+                "date_add(DATE'2024-01-01', cast(id AS int)) AS dt",
+            )
+        )
+        t.alter_column_type("k", "bigint")
+        t.rename_column("a", "b")
+        t.add_column("d", "int", default=7)
+        t.insert(
+            spark.range(40, 80, numPartitions=1).selectExpr(
+                "id AS k",
+                "CASE WHEN id % 6 = 0 THEN NULL ELSE concat('a', id % 5) END AS b",
+                "id * 10 AS n",
+                "id / 4 AS f",
+                "cast(id * 1.25 AS decimal(10,2)) AS p",
+                "date_add(DATE'2024-01-01', cast(id AS int)) AS dt",
+                "cast(id % 3 AS int) AS d",
+            )
+        )
+        t.delete("k % 7 = 0")
+        t.equality_delete(spark.range(10, 13).selectExpr("id AS k"), ["k"])
+    eng.catalog.create_table("default.empty", "k bigint, b string")
+    return eng
+
+
+_FAST = [
+    "SELECT * FROM default.{t} WHERE k = 5",
+    "SELECT d, k FROM default.{t} WHERE k >= 30 AND k < 50",
+    "SELECT b, n FROM default.{t} WHERE b = 'a1'",
+    "SELECT k, n, b FROM default.{t} WHERE b IS NULL OR n IS NULL",
+    "SELECT k FROM default.{t} WHERE k IN (10, 11, 13, 14, 21, 22)",
+    "SELECT n, b, p FROM demo.default.{t} WHERE d = 7 AND k BETWEEN 35 AND 38",
+    "SELECT dt, f FROM default.{t} WHERE d = 1 OR b = 'a3'",
+    "select k,b from default.{t}\n where k < 3",
+    "SELECT k FROM default.{t} WHERE k = 999",
+    "SELECT * FROM default.empty WHERE k = 1",
+]
+
+
+def _spy_point_lookup(monkeypatch):
+    """Records whether each facade statement took the fast path."""
+    taken = []
+    real = LakeEngine._point_lookup
+
+    def spy(self, stmt, reg):
+        out = real(self, stmt, reg)
+        taken.append(out is not None)
+        return out
+
+    monkeypatch.setattr(LakeEngine, "_point_lookup", spy)
+    return taken
+
+
+def _answer(df):
+    return (
+        [(f.name, f.dataType, f.nullable) for f in df.schema.fields],
+        [tuple(r) for r in df.collect()],
+    )
+
+
+@pytest.mark.parametrize("budget", [None, 0], ids=["default", "budget0"])
+def test_point_lookup_matches_the_view_path(spark, tmp_path, monkeypatch, budget):
+    """Each fast-path statement returns the rows (in order), column names,
+    types and nullability of the same statement forced through the
+    temp-view + spark.sql path; at budget 0 the scan is the executor
+    read, projected after its filter."""
+    eng = _lookup_tables(spark, tmp_path)
+    if budget is not None:
+        monkeypatch.setattr(datafiles, "DRIVER_MAX_ROWS", budget)
+    taken = _spy_point_lookup(monkeypatch)
+    for q in _FAST:
+        for t in ("dv", "pos"):
+            stmt = q.format(t=t)
+            fast = _answer(eng.sql(stmt))
+            assert taken[-1], stmt
+            with monkeypatch.context() as m:
+                m.setattr(LakeEngine, "_point_lookup", lambda *a: None)
+                slow = _answer(eng.sql(stmt))
+            assert fast == slow, stmt
+    assert eng.sql("SELECT k FROM default.dv WHERE k IN (10, 11, 13, 14)").collect() == [
+        (13,)
+    ]
+
+
+_DECLINED = [
+    "SELECT DISTINCT b FROM default.dv WHERE k < 20",
+    "SELECT k AS x FROM default.dv WHERE k = 1",
+    "SELECT k FROM default.dv WHERE k < 20 LIMIT 3",
+    "SELECT k FROM default.dv WHERE k < 20 ORDER BY k DESC",
+    "SELECT b FROM default.dv WHERE k < 20 GROUP BY b",
+    "SELECT k FROM default.dv WHERE k = 1 UNION SELECT k FROM default.dv WHERE k = 2",
+    "SELECT k FROM default.dv WHERE k = 1 ORDER BY n",
+    "SELECT k FROM default.dv WHERE b = 'a1' ORDER BY 'b'",
+    "SELECT K FROM default.dv WHERE k = 1",
+    "SELECT k FROM default.dv WHERE K = 1",
+    "SELECT k, k FROM default.dv WHERE k = 1",
+    "SELECT k FROM default.v WHERE k = 1",
+    "SELECT operation FROM default.dv.snapshots WHERE operation = 'append'",
+    "SELECT k FROM default.dv VERSION AS OF {sid} WHERE k = 1",
+    "SELECT k FROM default.dv WHERE f > 1.5",
+    "SELECT k FROM default.dv WHERE p = 2.50",
+    "SELECT k FROM default.dv WHERE dt >= DATE'2024-01-05'",
+    "SELECT k FROM default.dv WHERE dt >= '2024-01-05'",
+    "SELECT k FROM default.dv WHERE NOT k = 1",
+    "SELECT k FROM default.dv WHERE abs(k) = 1",
+    "SELECT k FROM default.dv WHERE k + 1 = 2",
+    "SELECT k FROM default.dv WHERE k = '1'",
+    "SELECT count(*) FROM default.dv WHERE k = 1",
+    "SELECT k FROM default.dv t WHERE k = 1",
+]
+
+
+def test_point_lookup_declines_other_shapes(spark, tmp_path, monkeypatch):
+    """Every other statement shape, column spelling, relation or
+    predicate falls through to the view path unchanged, and an unknown
+    column still raises Spark's AnalysisException."""
+    from pyspark.errors import AnalysisException
+
+    eng = _lookup_tables(spark, tmp_path)
+    eng.sql("CREATE VIEW default.v AS SELECT k, b FROM default.dv")
+    sid = eng.table("default.dv").metadata.snapshots[1].snapshot_id
+    taken = _spy_point_lookup(monkeypatch)
+    for q in _DECLINED:
+        eng.sql(q.format(sid=sid)).collect()
+        assert taken == [False], q
+        taken.clear()
+    for q in (
+        "SELECT _row_id FROM default.dv WHERE k = 1",
+        "SELECT _last_updated_sequence_number FROM default.dv WHERE k = 1",
+        "SELECT nope FROM default.dv WHERE k = 1",
+        "SELECT k FROM default.dv WHERE nope = 1",
+    ):
+        with pytest.raises(AnalysisException):
+            eng.sql(q).collect()
+        assert taken == [False], q
+        taken.clear()
+    spark.conf.set("spark.wap.branch", "audit")
+    try:
+        assert eng.sql("SELECT b FROM default.dv WHERE k = 1").collect() == [("a1",)]
+    finally:
+        spark.conf.unset("spark.wap.branch")
+    assert taken == [False]
+
+
+def test_point_lookup_is_one_projected_scan(spark, tmp_path, monkeypatch):
+    """A fast-path lookup starts no Spark job, compiles no codegen class,
+    registers no temp view, runs no spark.sql and no scan estimate, and
+    reads each candidate file for the projected and predicate columns
+    only. The table is read from catalog.json once per statement."""
+    from pyspark.sql import DataFrame
+
+    from demo_iceberg_permanent_delete_spark.lake import planner
+    from demo_iceberg_permanent_delete_spark.lake.catalog import Catalog
+
+    eng = _lookup_tables(spark, tmp_path)
+    eng.sql("SELECT n FROM default.dv WHERE k = 33").collect()  # warm
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+    calls = []
+    reads = []
+
+    def banned(what):
+        def spy(*args, **kwargs):
+            calls.append(what)
+            raise AssertionError(what)
+
+        return spy
+
+    monkeypatch.setattr(DataFrame, "createOrReplaceTempView", banned("view"))
+    monkeypatch.setattr(spark, "sql", banned("spark.sql"))
+    monkeypatch.setattr(planner, "scan_estimate", banned("scan_estimate"))
+    real_read = lake_datasource.read_entries_arrow
+
+    def read_spy(*args, **kwargs):
+        reads.append(kwargs["columns"])
+        return real_read(*args, **kwargs)
+
+    monkeypatch.setattr(lake_datasource, "read_entries_arrow", read_spy)
+    registry_reads = []
+    real_registry = Catalog._read_registry
+
+    def registry_spy(self):
+        registry_reads.append(1)
+        return real_registry(self)
+
+    monkeypatch.setattr(Catalog, "_read_registry", registry_spy)
+    before = compiled.getCount()
+    for k, want in ((34, [(340,)]), (51, [(510,)]), (56, [])):
+        rows = jobless(
+            spark, lambda k=k: eng.sql(f"SELECT n FROM default.dv WHERE k = {k}").collect()
+        )
+        assert rows == want
+    assert compiled.getCount() == before
+    assert calls == []
+    assert reads == [{"n", "k"}] * 3
+    assert len(registry_reads) == 3
