@@ -139,17 +139,15 @@ def _target_snapshot(table, branch: str | None):
     snapshot, or a named branch's head (branch-scoped maintenance — the
     companion Iceberg gives Flink WAP upsert pipelines, where eq-delete
     accumulation lives on the ingest branch and must be compacted THERE,
-    not on main). Returns ``(snapshot, head_id)``; head_id None = main.
-    ``branch='main'`` IS main (Iceberg's implicit main branch — callers
-    must also treat it so when committing)."""
+    not on main). ``branch='main'`` IS main (Iceberg's implicit main
+    branch — callers must also treat it so when committing)."""
     meta = table.metadata
     if branch is None or branch == "main":
-        return meta.current_snapshot(), None
+        return meta.current_snapshot()
     ref = meta.refs.get(branch)
     if ref is None or ref["type"] != "branch":
         raise KeyError(f"unknown branch {branch!r}")
-    head = int(ref["snapshot_id"])
-    return meta.snapshot_by_id(head), head
+    return meta.snapshot_by_id(int(ref["snapshot_id"]))
 
 
 def _commit_maintenance(meta, snapshot_args, branch: str | None):
@@ -431,23 +429,23 @@ def remove_orphan_files(
     return sorted(orphans)
 
 
-def _sorted_rewrite_on_driver(table, data, deletes, keys, want, lineage):
-    """The hierarchical-sort rewrite of ``data`` done on the driver: the
-    shared pyarrow MOR reader reads it (deletes applied, lineage
-    resolved), pyarrow sorts it ascending with nulls first and NaN last
-    (Spark's ascending order) and writes it as at most ``want`` files of
-    about equal rows, each cut moved forward to the next change of the
-    sort key so equal keys never straddle two files — the guarantee the
-    executor path's ``repartitionByRange`` gives. Returns the new
-    entries, or None when the read is past the driver budget, the table
-    has parquet writer options, or a key is missing or not sortable in
-    pyarrow: the caller then runs the executor rewrite."""
+def _sorted_rewrite_on_driver(table, plan, keys, want, lineage):
+    """The hierarchical-sort rewrite of ``plan``'s files done on the
+    driver: the shared pyarrow MOR reader reads them (deletes applied,
+    lineage resolved), pyarrow sorts the rows ascending with nulls first
+    and NaN last (Spark's ascending order) and writes them as at most
+    ``want`` files of about equal rows, each cut moved forward to the
+    next change of the sort key so equal keys never straddle two files —
+    the guarantee the executor path's ``repartitionByRange`` gives.
+    Returns the new entries, or None when the read is past the driver
+    budget, the table has parquet writer options, or a key is missing or
+    not sortable in pyarrow: the caller then runs the executor rewrite."""
     import numpy as np
     import pyarrow as pa
 
     if table._parquet_write_options():
         return None
-    tbl = table._driver_read_arrow(data, deletes, lineage=lineage)
+    tbl = table._driver_read_arrow(plan, lineage=lineage)
     if tbl is None or not set(keys) <= set(tbl.column_names):
         return None
     try:
@@ -513,38 +511,18 @@ def _key_starts(tbl, keys):
 
 def _rewrite_on_executors(
     table,
-    data,
-    deletes,
+    plan,
     *,
-    head_id,
     lineage,
     sort_order,
     want,
     target_file_size_bytes,
 ):
-    """The executor rewrite of ``data``'s rows into new files: a full
-    read of snapshot ``head_id`` when given, else the delete-merged read
-    of ``data``; range-clustered into ``want`` sorted partitions or
+    """The executor rewrite of ``plan``'s rows (its delete-merged read)
+    into new files: range-clustered into ``want`` sorted partitions or
     z-ordered when ``sort_order`` is set, else bin-packed to the size
     target by the write."""
-    if head_id is not None:
-        # delete-merge applied; branch rewrites read the branch head
-        merged = table.read(snapshot_id=head_id, lineage=lineage)
-    else:
-        wp = table._read_data_entries(
-            data, lineage=lineage, positions=bool(deletes)
-        )
-        out_cols = [f.name for f in table.schema().fields]
-        if lineage:
-            from demo_iceberg_permanent_delete_spark.lake.table import (
-                LAST_UPDATED_COL,
-                ROW_ID_COL,
-            )
-
-            out_cols += [ROW_ID_COL, LAST_UPDATED_COL]
-        merged = (
-            table._apply_delete_files(wp, deletes, data) if deletes else wp
-        ).select(*out_cols)
+    merged = table._read_data_entries(plan, lineage=lineage)
     if sort_order is None:
         return table._write_data(
             merged, target_file_size_bytes=target_file_size_bytes
@@ -627,35 +605,26 @@ def rewrite_data_files(
     """
     branch = None if branch == "main" else branch
     meta = table.metadata
-    snap, head_id = _target_snapshot(table, branch)
+    snap = _target_snapshot(table, branch)
     if snap is None:
         return {"rewritten_data_files_count": 0, "added_data_files_count": 0}
     prior_data = snap.data_files()
     prior_deletes = snap.delete_files()
     if not rewrite_all and not prior_deletes:
         return {"rewritten_data_files_count": 0, "added_data_files_count": 0}
-    kept: list = []
     scoped = where is not None or files is not None
     if files is not None:
-        want = set(files)
-        cand = [e for e in prior_data if e.file_path in want]
-        kept = [e for e in prior_data if e.file_path not in want]
-        if not cand:
-            return {"rewritten_data_files_count": 0, "added_data_files_count": 0}
-        prior_data = cand
-    elif where is not None:
-        from demo_iceberg_permanent_delete_spark.lake.pruning import (
-            candidate_files,
+        chosen = set(files)
+        plan = table._scan_plan(
+            snap, data=[e for e in prior_data if e.file_path in chosen]
         )
-
-        cand = candidate_files(
-            prior_data, where, table._partition_fields, aliases=meta.renames
-        )
-        cand_paths = {e.file_path for e in cand}
-        kept = [e for e in prior_data if e.file_path not in cand_paths]
-        if not cand:
-            return {"rewritten_data_files_count": 0, "added_data_files_count": 0}
-        prior_data = cand
+    else:
+        plan = table._scan_plan(snap, where, data=prior_data)
+    if scoped and not plan.files:
+        return {"rewritten_data_files_count": 0, "added_data_files_count": 0}
+    rewritten = {f.file_path for f in plan.files}
+    kept = [e for e in prior_data if e.file_path not in rewritten]
+    prior_data = plan.entries
 
     # lineage: compaction only MOVES rows — the fresh files materialize
     # each row's _row_id/_last_updated_sequence_number so identity
@@ -671,14 +640,12 @@ def rewrite_data_files(
     new_entries = None
     if want is not None and not isinstance(sort_order, str):
         new_entries = _sorted_rewrite_on_driver(
-            table, prior_data, prior_deletes, list(sort_order), want, lin
+            table, plan, list(sort_order), want, lin
         )
     if new_entries is None:
         new_entries = _rewrite_on_executors(
             table,
-            prior_data,
-            prior_deletes,
-            head_id=None if scoped else head_id,
+            plan,
             lineage=lin,
             sort_order=sort_order,
             want=want,
@@ -863,33 +830,29 @@ def rewrite_manifests(table, *, min_count_to_rewrite: int = 2) -> dict[str, int]
     }
 
 
-def _live_dvs_on_driver(table, data, pos_deletes):
+def _live_dvs_on_driver(table, plan):
     """Consolidation under the deletion-vector layout, done on the
     driver: each live data file's tombstones as the reader interprets
-    them (_visibility's referenced-files scoping, _tombstone_positions'
-    path spellings, either input layout) go to the DV writer as one
-    (file_path, pos) table, so the output is one DV file naming only
-    live files. Returns the new entries, or None when reading the delete
-    files each data file sees is past the driver budget: the caller
-    then consolidates on the executors."""
+    them (the plan's per-file position and DV deletes,
+    _tombstone_positions' path spellings, either input layout) go to
+    the DV writer as one (file_path, pos) table, so the output is one DV
+    file naming only live files. Returns the new entries, or None when
+    reading the delete files each data file sees is past the driver
+    budget: the caller then consolidates on the executors."""
     import numpy as np
     import pyarrow as pa
 
     from demo_iceberg_permanent_delete_spark.sources.lake_datasource import (
         _tombstone_positions,
-        _visibility,
-        delete_reads,
     )
 
-    if not fits_driver_reads(delete_reads(table.metadata, data, pos_deletes)):
+    reads = [e for e in plan.reads if e.content == CONTENT_POSITION_DELETES]
+    if not fits_driver_reads(reads):
         return None
-    pos_for, dv_for, _ = _visibility(
-        table.metadata, None, entries=[*data, *pos_deletes]
-    )
     paths, positions = [], []
-    for e in data:
-        drop = _tombstone_positions(e.file_path, pos_for(e), dv_for(e))
-        paths += [e.file_path] * drop.size
+    for f in plan.files:
+        drop = _tombstone_positions(f.file_path, f.pos_deletes, f.dv_deletes)
+        paths += [f.file_path] * drop.size
         positions.append(drop)
     tombstones = pa.table(
         {
@@ -915,7 +878,7 @@ def rewrite_position_delete_files(
     the plain row layout and larger delete sets run on the executors."""
     branch = None if branch == "main" else branch
     meta = table.metadata
-    snap, _ = _target_snapshot(table, branch)
+    snap = _target_snapshot(table, branch)
     if snap is None:
         return {"rewritten_delete_files_count": 0, "added_delete_files_count": 0}
     delete_entries = [
@@ -929,7 +892,7 @@ def rewrite_position_delete_files(
         return {"rewritten_delete_files_count": 0, "added_delete_files_count": 0}
 
     new_entries = (
-        _live_dvs_on_driver(table, snap.data_files(), delete_entries)
+        _live_dvs_on_driver(table, table._scan_plan(snap))
         if table._dv_deletes
         else None
     )
@@ -1294,7 +1257,7 @@ def plan_compaction(
     rewrite (MOR read-merge cost has outgrown its write savings).
     """
     branch = None if branch == "main" else branch
-    snap, _ = _target_snapshot(table, branch)
+    snap = _target_snapshot(table, branch)
     if snap is None:
         return {"groups": [], "ungrouped": None, "delete_pressure": None}
     data = snap.data_files()
@@ -1491,7 +1454,7 @@ def compact(
             "rewritten_data_files_count"
         ]
         summary["added_data_files_count"] += stats["added_data_files_count"]
-    snap, _ = _target_snapshot(table, branch)
+    snap = _target_snapshot(table, branch)
     if summary["groups_compacted"] and snap is not None and any(
         e.content == CONTENT_POSITION_DELETES for e in snap.delete_files()
     ):

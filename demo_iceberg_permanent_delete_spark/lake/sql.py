@@ -61,7 +61,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from demo_iceberg_permanent_delete_spark.lake.catalog import Catalog
-from demo_iceberg_permanent_delete_spark.lake.pruning import _IDENT_RE, _NOT_COLUMNS
+from demo_iceberg_permanent_delete_spark.lake.pruning import (
+    _IDENT_RE,
+    _NOT_COLUMNS,
+    row_filter_columns,
+)
 from demo_iceberg_permanent_delete_spark.lake.table import METADATA_VIEWS as _META_VIEWS
 from demo_iceberg_permanent_delete_spark.lake.table import LakeTable
 
@@ -237,6 +241,7 @@ class LakeEngine:
         t: LakeTable,
         predicate: str,
         columns: tuple[str, ...] | None = None,
+        plan=None,
     ) -> DataFrame | None:
         """Manifest-pruned read for a statement whose WHERE provably
         scopes this table's single scan (lake/scanscope.py): files whose
@@ -246,15 +251,15 @@ class LakeEngine:
         statement's own WHERE above the view is the single evaluation,
         so a non-deterministic conjunct (rand()) is never drawn twice,
         and the only layer that must be sound is the conservative pruner
-        (unevaluable leaves keep every file). A predicate the row filter
-        translates for the table's types (LakeTable._pushable_columns)
-        is a deterministic set of literal comparisons, so the scan
-        applies it too: a driver read then hands Spark just the matches,
-        filtered in pyarrow, not whole candidate files. None when the
-        scan fails.
+        (unevaluable leaves keep every file). A predicate the scan plan
+        pushes (the row filter translates it for the table's types) is a
+        deterministic set of literal comparisons, so the scan applies it
+        too: a driver read then hands Spark just the matches, filtered in
+        pyarrow, not whole candidate files. None when the scan fails.
 
-        ``columns`` (the point lookup, whose predicate translates) is
-        the statement's projection: the scan is then the whole answer.
+        ``columns`` (the point lookup, whose predicate is pushed) is the
+        statement's projection: the scan is then the whole answer.
+        ``plan``: the caller's scan plan for ``predicate``, if it made one.
 
         Candidates within the driver budget come back driver-read (a
         LocalRelation holding the rows, LakeTable._driver_read). Those
@@ -264,11 +269,13 @@ class LakeEngine:
         df = self._scan_cache.get(key)
         if df is None:
             try:
+                if plan is None:
+                    plan = t._scan_plan(t.metadata.current_snapshot(), predicate)
                 df = t.scan(
                     predicate,
-                    prune_only=columns is None
-                    and t._pushable_columns(predicate) is None,
+                    prune_only=columns is None and plan.pushed is None,
                     columns=columns,
+                    plan=plan,
                 )
             except Exception:
                 # never cache a failure under the predicate key (a
@@ -1811,7 +1818,7 @@ class LakeEngine:
         would compute over the registered scan: no session read branch, a
         registry table (not a view, a metadata table or time travel),
         schema columns spelled exactly, listed once and unambiguous
-        case-insensitively, and a WHERE that _pushable_columns accepts
+        case-insensitively, and a WHERE the scan plan pushes
         whole (deterministic literal comparisons, which the scan already
         applies in pyarrow). So the statement registers no temp view and
         runs no SQL parse, no scan estimate and no codegen: Spark would
@@ -1824,13 +1831,14 @@ class LakeEngine:
         if name not in reg["tables"] or name in reg.get("views", {}):
             return None
         pred = m.group("pred")
+        if row_filter_columns(pred) is None:
+            return None  # outside the row filter's grammar: plan nothing
         try:
             t = self._cached_table(name, reg)
-            schema = t.schema()
-            pushed = t._pushable_columns(pred, schema)
+            plan = t._scan_plan(t.metadata.current_snapshot(), pred)
         except Exception:
             return None
-        names = schema.names
+        pushed, names = plan.pushed, plan.schema.names
         items = [c.strip() for c in m.group("items").split(",")]
         cols = tuple(names) if items == ["*"] else tuple(items)
         lower = [n.lower() for n in names]
@@ -1846,7 +1854,7 @@ class LakeEngine:
             )
         ):
             return None
-        return self._cached_scan(name, t, pred, cols)
+        return self._cached_scan(name, t, pred, cols, plan)
 
     def _select(self, stmt: str, _depth: int = 0) -> DataFrame:
         """Plain SQL: rewrite lake-table identifiers (and their metadata

@@ -46,9 +46,9 @@ from demo_iceberg_permanent_delete_spark.lake.metadata import (
     ManifestEntry,
     Snapshot,
     TableMetadata,
-    entry_sequence,
     plain_path,
 )
+from demo_iceberg_permanent_delete_spark.lake.scanplan import ScanPlan, plan_scan
 
 # A broadcast of the delete set is safe well past this size; beyond it we let
 # AQE choose the join strategy (at 100 TB a pathological delete set could be
@@ -300,8 +300,6 @@ class LakeTable:
     def __init__(self, spark: SparkSession, metadata: TableMetadata):
         self.spark = spark
         self.metadata = metadata
-        # diagnostics of the last delete-file scoping pass (_scope_deletes)
-        self.last_delete_scope: dict[str, int] = {"planned": 0, "skipped": 0}
 
     # ------------------------------------------------------------ basics
     @property
@@ -904,9 +902,6 @@ class LakeTable:
             self._lineage_guard()
         if snapshot_id is None:
             snap = self.metadata.current_snapshot()
-            if snap is None:
-                base = self.empty_frame()
-                return self._null_lineage(base) if lineage else base
         else:
             snap = self.metadata.snapshot_by_id(snapshot_id)
         return self._read_snapshot(
@@ -915,24 +910,27 @@ class LakeTable:
 
     def _read_snapshot(
         self,
-        snap: Snapshot,
+        snap: Snapshot | None,
         apply_deletes: bool = True,
         lineage: bool = False,
     ) -> DataFrame:
-        data_files = snap.data_files()
-        if not data_files:
-            base = self.empty_frame()
-            return self._null_lineage(base) if lineage else base
-        delete_files = snap.delete_files() if apply_deletes else []
-        out = self._read_data_entries(
-            data_files, lineage=lineage, positions=bool(delete_files)
+        if snap is not None and not apply_deletes:
+            plan = self._scan_plan(None, data=snap.data_files())
+        else:
+            plan = self._scan_plan(snap)
+        return self._read_data_entries(plan, lineage=lineage)
+
+    def _scan_plan(
+        self,
+        snap: Snapshot | None,
+        predicate: str | None = None,
+        *,
+        data: list[ManifestEntry] | None = None,
+    ) -> ScanPlan:
+        """scanplan.plan_scan over this table, for its declared schema."""
+        return plan_scan(
+            self.metadata, snap, predicate, data=data, schema=self.schema()
         )
-        cols = [f.name for f in self.schema().fields]
-        if lineage:
-            cols += [ROW_ID_COL, LAST_UPDATED_COL]
-        if delete_files:
-            out = self._apply_delete_files(out, delete_files, data_files)
-        return out.select(*cols)
 
     @staticmethod
     def _with_position(df: DataFrame, paths: list[str]) -> DataFrame:
@@ -953,118 +951,100 @@ class LakeTable:
 
     def _read_data_entries(
         self,
-        entries: list[ManifestEntry],
+        plan: ScanPlan,
         *,
         lineage: bool = False,
         positions: bool = False,
     ) -> DataFrame:
-        """THE manifest-listed data-file read — every scan funnels here so
-        the cross-cutting read semantics compose uniformly:
+        """THE Spark read of a scan plan — every executor read funnels
+        here so the cross-cutting read semantics compose uniformly:
 
         - schema conformance (declared schema, rename-chain coalesce);
-        - ``positions``: physical (__fp, __pos) for delete merging / DML
-          (``lineage`` implies it);
-        - initial column defaults (Iceberg v3 ADD COLUMN … DEFAULT):
-          entries whose sequence predates the column's add read the
-          default — implemented as a PLAN split, one parquet scan per
-          distinct pre-add column set with a literal projection, unioned
-          by name: no join, no per-row conditional, and a table with no
-          defaults takes the single-scan path unchanged;
+        - initial column defaults (Iceberg v3 ADD COLUMN … DEFAULT): the
+          files that predate a column (the plan's per-file defaults) read
+          it as a literal — a PLAN split, one parquet scan per distinct
+          defaulted column set, unioned by name: no join, no per-row
+          conditional, and a table with no defaults takes the single-scan
+          path unchanged;
+        - the plan's delete files, as anti-joins on the physical
+          (__fp, __pos) and on equality keys (_apply_delete_files);
         - ``lineage``: the _row_id/_last_updated_sequence_number columns,
           resolved per _attach_lineage.
-        """
-        positions = positions or lineage
-        defaults = self.metadata.column_defaults
-        declared = {f.name: f.dataType for f in self.schema().fields}
-        live_defaults = {c: d for c, d in defaults.items() if c in declared}
-        # rename-aware physical names per defaulted column: a pre-rename
-        # file carries the OLD physical name — it HAS the column
-        phys_names = {
-            c: {c, *self.metadata.renames.get(c, [])} for c in live_defaults
-        }
 
-        def _missing(e: ManifestEntry) -> frozenset[str]:
-            # Presence first (exact — Iceberg's field-id rule: covers a
-            # writer racing the ADD COLUMN, whose file commits with a
-            # post-watermark sequence yet physically lacks the column);
-            # sequence-watermark fallback when the harvest is unknown
-            # (None sequence = pre-upgrade = predates any default).
-            out = []
-            for c, d in live_defaults.items():
-                if e.columns is not None:
-                    if not (phys_names[c] & set(e.columns)):
-                        out.append(c)
-                elif (
-                    e.sequence_number is None
-                    or e.sequence_number <= d["added_seq"]
-                ):
-                    out.append(c)
-            return frozenset(out)
-
-        groups: dict[frozenset[str], list[str]] = {}
-        if live_defaults:
-            for e in entries:
-                groups.setdefault(_missing(e), []).append(e.file_path)
-        else:
-            groups[frozenset()] = [e.file_path for e in entries]
-
-        parts: list[DataFrame] = []
-        for missing, paths in groups.items():
-            df = self._data_reader(lineage=lineage).parquet(*paths)
+        Columns: the declared schema, then the lineage columns; with
+        ``positions`` (the DML planning input) the frame also keeps
+        __fp/__pos, and the columns of the positioned scan stay in its
+        order."""
+        declared = {f.name: f.dataType for f in plan.schema.fields}
+        cols = list(declared)
+        if lineage:
+            cols += [ROW_ID_COL, LAST_UPDATED_COL]
+        if not plan.files:
+            out = self.empty_frame()
+            if lineage:
+                out = self._null_lineage(out)
             if positions:
+                out = out.withColumns(
+                    {
+                        "__fp": F.lit(None).cast("string"),
+                        "__pos": F.lit(None).cast("long"),
+                    }
+                )
+            return out
+        positioned = positions or lineage or bool(plan.deletes)
+        groups: dict[tuple[str, ...], tuple[dict, list[str]]] = {}
+        for f in plan.files:
+            defaults = {c: v for c, v in f.defaults if c in declared}
+            groups.setdefault(tuple(defaults), (defaults, []))[1].append(f.file_path)
+        parts: list[DataFrame] = []
+        for defaults, paths in groups.values():
+            df = self._data_reader(lineage=lineage).parquet(*paths)
+            if positioned:
                 # before the union: _metadata resolves only on the scan
                 df = self._with_position(df, paths)
-            if missing:
+            if defaults:
                 df = df.withColumns(
-                    {
-                        c: F.lit(live_defaults[c]["value"]).cast(declared[c])
-                        for c in missing
-                    }
+                    {c: F.lit(v).cast(declared[c]) for c, v in defaults.items()}
                 )
             parts.append(df)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         if lineage:
-            out = self._attach_lineage(out, entries)
-        return out
+            out = self._attach_lineage(out, plan)
+        if plan.deletes:
+            out = self._apply_delete_files(out, plan)
+        return out if positions else out.select(*cols)
 
     def _driver_read_arrow(
         self,
-        data_entries: list[ManifestEntry],
-        delete_files: list[ManifestEntry],
+        plan: ScanPlan,
         *,
         positions: bool = False,
         lineage: bool = False,
         columns: set[str] | frozenset[str] | None = None,
-        schema: T.StructType | None = None,
     ):
-        """The merged read of ``data_entries`` as one pyarrow Table built
-        on the driver, or None when it is past the driver budget or a type
-        does not convert through Arrow: the caller then takes its executor
-        path. The budget (fits_driver_reads) counts every file the read
-        opens, each time it opens it — the data files plus, per data file,
-        the delete files it sees (delete_reads) — so many small delete
-        files (one equality-delete file per streaming upsert) send the
-        read to the executor anti-join, which reads each of them once.
+        """The read of ``plan`` as one pyarrow Table built on the driver,
+        or None when it is past the driver budget or a type does not
+        convert through Arrow: the caller then takes its executor path.
+        The budget (fits_driver_reads) counts every file the read opens,
+        each time it opens it (the plan's reads: the data files plus, per
+        data file, the delete files it sees), so many small delete files
+        (one equality-delete file per streaming upsert) send the read to
+        the executor anti-join, which reads each of them once.
 
         The files go through the DataSource's per-file MOR reader
-        (sources/lake_datasource.py read_entries_arrow: the same delete,
-        rename, default, widening and lineage resolution its executor
-        tasks run). Columns: the declared schema (only its ``columns``
-        when given: each file is then read for those and what its deletes
-        need), then the lineage columns with ``lineage``, then
-        ``__fp``/``__pos`` with ``positions`` (the positioned executor
-        read's column set). ``schema``: the caller's self.schema(), which
-        saves the JVM round trips of reading it again."""
+        (sources/lake_datasource.py read_entries_arrow), which its
+        executor tasks run too. Columns: the declared schema (only its
+        ``columns`` when given: each file is then read for those and what
+        its deletes need), then the lineage columns with ``lineage``,
+        then ``__fp``/``__pos`` with ``positions`` (the positioned
+        executor read's column set)."""
         from demo_iceberg_permanent_delete_spark.sources.lake_datasource import (
-            delete_reads,
             read_entries_arrow,
         )
 
-        if not fits_driver_reads(
-            [*data_entries, *delete_reads(self.metadata, data_entries, delete_files)]
-        ):
+        if not fits_driver_reads(plan.reads):
             return None
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -1072,9 +1052,8 @@ class LakeTable:
         try:
             return read_entries_arrow(
                 self.metadata,
-                data_entries,
-                delete_files,
-                to_arrow_schema(self.schema() if schema is None else schema),
+                plan.files,
+                to_arrow_schema(plan.schema),
                 positions=positions,
                 lineage=lineage,
                 columns=columns,
@@ -1086,10 +1065,8 @@ class LakeTable:
 
     def _driver_read(
         self,
-        data_entries: list[ManifestEntry],
-        delete_files: list[ManifestEntry],
+        plan: ScanPlan,
         *,
-        positions: bool = False,
         predicate: str | Column | None = None,
         columns: Sequence[str] | None = None,
     ) -> DataFrame | None:
@@ -1099,48 +1076,33 @@ class LakeTable:
         parquet scan plus the delete anti-join costs one or two per
         statement.
 
-        ``predicate``: the frame holds only the rows it keeps. When
-        pruning.row_filter translates it (_row_mask), pyarrow filters the
-        rows before createDataFrame, so the LocalRelation holds just the
-        matches rather than every row of the candidate files; otherwise
-        Spark filters the LocalRelation.
+        ``predicate``: the frame holds only the rows it keeps. When the
+        plan pushes it (pruning.row_filter translates it), pyarrow filters
+        the rows before createDataFrame, so the LocalRelation holds just
+        the matches rather than every row of the candidate files;
+        otherwise Spark filters the LocalRelation.
 
         ``columns``: the frame holds only those, in that order. With a
-        predicate _pushable_columns accepts, each file is read for them
-        and the predicate's columns only, and pyarrow projects the
-        matches; otherwise every column is read and Spark projects after
-        its filter."""
-        schema = self.schema()
-        pushed = (
-            self._pushable_columns(predicate, schema)
-            if columns is not None and isinstance(predicate, str)
-            else None
-        )
-        read = None if pushed is None else {*columns, *pushed}
-        table = self._driver_read_arrow(
-            data_entries, delete_files, positions=positions, columns=read, schema=schema
-        )
+        pushed predicate, each file is read for them and the predicate's
+        columns only, and pyarrow projects the matches; otherwise every
+        column is read and Spark projects after its filter."""
+        from demo_iceberg_permanent_delete_spark.lake.pruning import row_filter
+
+        masked = isinstance(predicate, str) and plan.pushed is not None
+        read = {*columns, *plan.pushed} if masked and columns is not None else None
+        table = self._driver_read_arrow(plan, columns=read)
         if table is None:
             return None
         import pyarrow as pa
 
-        fields = [f for f in schema.fields if read is None or f.name in read]
-        mask = (
-            self._row_mask(predicate, table, fields)
-            if isinstance(predicate, str)
-            else None
-        )
+        fields = [f for f in plan.schema.fields if read is None or f.name in read]
+        mask = row_filter(predicate, table) if masked else None
         if mask is not None:
             table = table.filter(mask)
             if columns is not None:
                 by_name = {f.name: f for f in fields}
                 fields = [by_name[c] for c in columns]
                 table = table.select(list(columns))
-        if positions:
-            fields += [
-                T.StructField("__fp", T.StringType()),
-                T.StructField("__pos", T.LongType()),
-            ]
         try:
             df = self.spark.createDataFrame(table, T.StructType(fields))
         except (pa.ArrowException, TypeError, ValueError):
@@ -1153,57 +1115,7 @@ class LakeTable:
                 df = df.select(*columns)
         return df
 
-    def _row_mask(self, predicate: str, table, fields: list[T.StructField]):
-        """pruning.row_filter's mask of ``predicate`` over ``table``, or
-        None — also when a column it reads is declared (``fields``, the
-        table schema's) a collated, char or varchar string, where Spark
-        does not compare plain bytes."""
-        from demo_iceberg_permanent_delete_spark.lake.pruning import (
-            row_filter,
-            row_filter_columns,
-        )
-
-        cols = row_filter_columns(predicate)
-        if cols is None:
-            return None
-        for f in fields:
-            if (
-                f.name in cols
-                and isinstance(f.dataType, (T.StringType, T.CharType, T.VarcharType))
-                and f.dataType != T.StringType()
-            ):
-                return None
-        return row_filter(predicate, table)
-
-    def _pushable_columns(
-        self, predicate: str, schema: T.StructType | None = None
-    ) -> frozenset[str] | None:
-        """The columns ``predicate`` reads when _row_mask translates it
-        for this table's declared column types (checked on an empty table
-        of those types, before anything is read), else None. ``schema``:
-        the caller's self.schema(), as in _driver_read_arrow."""
-        from demo_iceberg_permanent_delete_spark.lake.pruning import (
-            row_filter_columns,
-        )
-
-        cols = row_filter_columns(predicate)
-        if cols is None:
-            return None
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        if schema is None:
-            schema = self.schema()
-        fields = [f for f in schema.fields if f.name in cols]
-        try:
-            typed = to_arrow_schema(T.StructType(fields)).empty_table()
-        except (pa.ArrowException, TypeError, ValueError):
-            return None
-        return None if self._row_mask(predicate, typed, fields) is None else cols
-
-    def _attach_lineage(
-        self, with_pos: DataFrame, data_entries: list[ManifestEntry]
-    ) -> DataFrame:
+    def _attach_lineage(self, with_pos: DataFrame, plan: ScanPlan) -> DataFrame:
         """Resolve the row-lineage columns on a positioned frame that was
         read with ``_data_reader(lineage=True)`` (so the MATERIALIZED
         ``_row_id`` / ``_last_updated_sequence_number`` columns exist,
@@ -1215,8 +1127,7 @@ class LakeTable:
         manifests (no first_row_id / sequence) resolve to NULL — honest
         unknown, not an invented id."""
         rows = [
-            (e.file_path, e.first_row_id, e.sequence_number)
-            for e in data_entries
+            (e.file_path, e.first_row_id, e.sequence_number) for e in plan.entries
         ]
         lin = F.broadcast(
             _local_frame(
@@ -1265,13 +1176,8 @@ class LakeTable:
                 "to read lineage"
             )
 
-    def _apply_delete_files(
-        self,
-        with_pos: DataFrame,
-        delete_files: list[ManifestEntry],
-        data_entries: list[ManifestEntry],
-    ) -> DataFrame:
-        """Mask rows per the snapshot's delete files, keeping __fp/__pos.
+    def _apply_delete_files(self, with_pos: DataFrame, plan: ScanPlan) -> DataFrame:
+        """Mask rows per the plan's delete files, keeping __fp/__pos.
 
         - content=1 (position deletes): anti-join on (file_path, pos).
         - content=2 (equality deletes): anti-join on the entry's equality
@@ -1280,8 +1186,8 @@ class LakeTable:
           number rule, using snapshot commit order as the sequence), so
           re-inserted keys survive later reads.
         """
-        pos_files = [e for e in delete_files if e.content == CONTENT_POSITION_DELETES]
-        eq_files = [e for e in delete_files if e.content == CONTENT_EQUALITY_DELETES]
+        pos_files = [e for e in plan.deletes if e.content == CONTENT_POSITION_DELETES]
+        eq_files = [e for e in plan.deletes if e.content == CONTENT_EQUALITY_DELETES]
         out = with_pos
         if pos_files:
             dels = self._pos_delete_rows(pos_files)
@@ -1289,7 +1195,7 @@ class LakeTable:
                 dels = F.broadcast(dels)
             out = out.join(dels, on=["__fp", "__pos"], how="left_anti")
         if eq_files:
-            out = self._apply_equality_deletes(out, eq_files, data_entries)
+            out = self._apply_equality_deletes(out, eq_files, plan)
         return out
 
     def _pos_delete_rows(self, pos_files: list[ManifestEntry]) -> DataFrame:
@@ -1700,22 +1606,18 @@ class LakeTable:
         self,
         with_pos: DataFrame,
         eq_files: list[ManifestEntry],
-        data_entries: list[ManifestEntry],
+        plan: ScanPlan,
     ) -> DataFrame:
         """Equality-delete merge. The per-row data sequence comes from a
         broadcast (file_path → sequence number) map — metadata-
-        proportional, never data-proportional. Sequences resolve through
-        metadata.entry_sequence: the PERSISTED per-entry sequence number
-        when the manifest carries one (survives snapshot expiry), else
-        the legacy snapshot-list commit order."""
-        snap_order = {s.snapshot_id: i for i, s in enumerate(self.metadata.snapshots)}
+        proportional, never data-proportional. Sequences are the plan's
+        (metadata.entry_sequence: the PERSISTED per-entry sequence number
+        when the manifest carries one, which survives snapshot expiry,
+        else the legacy snapshot-list commit order)."""
         seq_df = F.broadcast(
             _local_frame(
                 self.spark,
-                [
-                    (e.file_path, entry_sequence(e, snap_order))
-                    for e in data_entries
-                ],
+                [(e.file_path, plan.sequence(e)) for e in plan.entries],
                 "__fp string, __dataseq long",
             )
         )
@@ -1736,7 +1638,7 @@ class LakeTable:
                     .select(*[F.col(c).alias(f"__d_{c}") for c in cols])
                     .withColumn(
                         "__dseq",
-                        F.lit(entry_sequence(e, snap_order)).cast("long"),
+                        F.lit(plan.sequence(e)).cast("long"),
                     )
                 )
                 dels = d if dels is None else dels.unionByName(d)
@@ -1755,6 +1657,7 @@ class LakeTable:
         *,
         prune_only: bool = False,
         columns: Sequence[str] | None = None,
+        plan: ScanPlan | None = None,
     ) -> DataFrame:
         """Predicate-pushed read: manifest min/max stats prune whole files
         before Spark opens them (SURVEY.md §4 — the Iceberg-manifest
@@ -1766,13 +1669,13 @@ class LakeTable:
         (_driver_read) and come back as a LocalRelation, which Spark
         filters, projects and collects without a job; past the budget
         the executor read (parquet scan + delete anti-join) is built.
-        Both apply the same deletes, renames, defaults and widening. The
-        driver read filters in pyarrow when pruning.row_filter
-        translates the predicate, so its LocalRelation then holds the
-        matches rather than whole candidate files.
+        Both read the same scan plan. The driver read filters in pyarrow
+        when the plan pushes the predicate (pruning.row_filter translates
+        it), so its LocalRelation then holds the matches rather than
+        whole candidate files.
 
         ``columns`` projects the result to those schema columns, in that
-        order. A driver read whose predicate translates then reads each
+        order. A driver read whose predicate is pushed then reads each
         candidate file for them and the predicate's columns only (the SQL
         facade's point lookup is this call); otherwise the projection
         follows the row filter.
@@ -1782,71 +1685,35 @@ class LakeTable:
         that re-apply the predicate themselves, like the SQL facade's
         view registration, where applying it here too would evaluate a
         non-deterministic predicate (rand()) twice and change results.
-        It takes no ``columns``: the caller's filter may read others."""
+        It takes no ``columns``: the caller's filter may read others.
+
+        ``plan``: the caller's _scan_plan of the current snapshot for
+        ``predicate``, when it already made one."""
         if prune_only and columns is not None:
             raise ValueError(
                 "scan(prune_only=True) takes no columns: the caller's "
                 "filter may need the dropped ones"
             )
-        # reset FIRST so every early return (predicate-less delegation to
-        # read(), no snapshot, everything pruned) leaves honest counts,
-        # never a PREVIOUS scan's (review catches ×2)
-        self.last_delete_scope = {"planned": 0, "skipped": 0}
 
         def project(df: DataFrame) -> DataFrame:
             return df if columns is None else df.select(*columns)
 
         if predicate is None:
             return project(self.read())
-        snap = self.metadata.current_snapshot()
-        if snap is None:
-            return project(self.empty_frame())
-        pred_str = predicate if isinstance(predicate, str) else None
-        entries, delete_files = self._scoped_candidates(snap, pred_str)
-        if not entries:
+        if plan is None:
+            plan = self._scan_plan(
+                self.metadata.current_snapshot(),
+                predicate if isinstance(predicate, str) else None,
+            )
+        if not plan.files:
             return project(self.empty_frame())
         df = self._driver_read(
-            entries,
-            delete_files,
-            predicate=None if prune_only else predicate,
-            columns=columns,
+            plan, predicate=None if prune_only else predicate, columns=columns
         )
         if df is not None:
             return df
-        df = self._read_data_entries(entries, positions=bool(delete_files))
-        if delete_files:
-            df = self._apply_delete_files(df, delete_files, entries)
-        df = df.select(*[f.name for f in self.schema().fields])
+        df = self._read_data_entries(plan)
         return df if prune_only else project(df.filter(self._as_column(predicate)))
-
-    def _scope_deletes(
-        self,
-        delete_files: list[ManifestEntry],
-        data_entries: list[ManifestEntry],
-    ) -> list[ManifestEntry]:
-        """Drop delete files that provably cannot mask any candidate data
-        file (pruning.scope_delete_files: position deletes by referenced-
-        path bounds, equality deletes by key bounds + the sequence rule) —
-        a partition-scoped scan of a MOR-heavy table then plans O(relevant)
-        delete files instead of every live one (round-7 verdict item 3).
-        Records {planned, skipped} in ``last_delete_scope`` for tests and
-        planning diagnostics."""
-        from demo_iceberg_permanent_delete_spark.lake.pruning import (
-            scope_delete_files,
-        )
-
-        if not delete_files:
-            self.last_delete_scope = {"planned": 0, "skipped": 0}
-            return delete_files
-        snap_order = {
-            s.snapshot_id: i for i, s in enumerate(self.metadata.snapshots)
-        }
-        kept = scope_delete_files(delete_files, data_entries, snap_order)
-        self.last_delete_scope = {
-            "planned": len(kept),
-            "skipped": len(delete_files) - len(kept),
-        }
-        return kept
 
     def deleted_rows(self) -> DataFrame:
         """M6 audit companion (reference examine_delete_files,
@@ -1863,7 +1730,9 @@ class LakeTable:
         ]
         if snap is None or not pos_files or not snap.data_files():
             return self.empty_frame()
-        df = self._read_data_entries(snap.data_files(), positions=True)
+        df = self._read_data_entries(
+            self._scan_plan(None, data=snap.data_files()), positions=True
+        )
         dels = self._pos_delete_rows(pos_files)
         if _delete_set_size_estimate(pos_files) <= _BROADCAST_DELETES_MAX_BYTES:
             dels = F.broadcast(dels)
@@ -1916,9 +1785,7 @@ class LakeTable:
             for e in s.manifest
             if e.content == CONTENT_DATA and e.added_snapshot_id == s.snapshot_id
         ]
-        if not added:
-            return self.empty_frame()
-        return self._read_data_entries(added)
+        return self._read_data_entries(self._scan_plan(None, data=added))
 
     def changes(
         self,
@@ -2053,7 +1920,7 @@ class LakeTable:
             added_data = [e for e in delta.added if e.content == CONTENT_DATA]
             if added_data:
                 inserts = self._read_data_entries(
-                    added_data, lineage=lineage
+                    self._scan_plan(None, data=added_data), lineage=lineage
                 ).select(*cols)
 
             parent_by_path = (
@@ -2069,15 +1936,10 @@ class LakeTable:
                     and parent_by_path[p].content == CONTENT_DATA
                 ]
                 if removed_data:
-                    pdels = parent.delete_files()
-                    df = self._read_data_entries(
-                        removed_data,
+                    deletes = self._read_data_entries(
+                        self._scan_plan(parent, data=removed_data),
                         lineage=lineage,
-                        positions=bool(pdels),
-                    )
-                    if pdels:
-                        df = self._apply_delete_files(df, pdels, removed_data)
-                    deletes = df.select(*cols)
+                    ).select(*cols)
 
             pos_added = [
                 e for e in delta.added if e.content == CONTENT_POSITION_DELETES
@@ -2111,7 +1973,9 @@ class LakeTable:
                     ]
                     masked = (
                         self._read_data_entries(
-                            ref_entries, lineage=lineage, positions=True
+                            self._scan_plan(None, data=ref_entries),
+                            lineage=lineage,
+                            positions=True,
                         )
                         .join(dels, on=["__fp", "__pos"], how="left_semi")
                         .select(*cols)
@@ -2540,86 +2404,8 @@ class LakeTable:
         ``_last_updated_sequence_number`` (see read()) — the row-carrying
         rewrite paths read through this so the ids they MATERIALIZE into
         replacement files are the ones the rows already had."""
-        return self._read_positions_bounded(snap, prune_for, lineage=lineage)[0]
-
-    def _read_positions_bounded(
-        self,
-        snap: Snapshot | None,
-        prune_for: str | None,
-        *,
-        lineage: bool = False,
-        driver: bool = False,
-    ) -> tuple[DataFrame, int]:
-        """read_with_positions() plus a metadata-only upper bound on the
-        rows it can produce (the candidate files' record_count sum): the
-        MOR writers hand it to the DV writer so an over-budget delete
-        skips the driver collect without partially executing the match
-        scan. ``driver=True`` (the MOR DELETE match read under the DV
-        layout) reads candidate files that fit the driver budget on the
-        driver (_driver_read); every other caller keeps the executor
-        read."""
-        self.last_delete_scope = {"planned": 0, "skipped": 0}
-        snap = snap or self.metadata.current_snapshot()
-        if snap is None:
-            return self.empty_frame().withColumns(
-                {"__fp": F.lit(None).cast("string"), "__pos": F.lit(None).cast("long")}
-            ), 0
-        data_entries, delete_files = self._scoped_candidates(snap, prune_for)
-        row_bound = sum(e.record_count for e in data_entries)
-        if not data_entries:
-            empty = self.empty_frame().withColumns(
-                {"__fp": F.lit(None).cast("string"), "__pos": F.lit(None).cast("long")}
-            )
-            return (self._null_lineage(empty) if lineage else empty), 0
-        if driver and not lineage:
-            local = self._driver_read(data_entries, delete_files, positions=True)
-            if local is not None:
-                return local, row_bound
-        with_pos = self._read_data_entries(
-            data_entries, lineage=lineage, positions=True
-        )
-        if delete_files:
-            with_pos = self._apply_delete_files(
-                with_pos, delete_files, data_entries
-            )
-        return with_pos, row_bound
-
-    def _scoped_candidates(
-        self, snap: Snapshot, predicate: str | None
-    ) -> tuple[list[ManifestEntry], list[ManifestEntry]]:
-        """(candidate data files, delete files that may mask them) of
-        ``snap`` for a read scoped by ``predicate``: manifest-level skip
-        first (metadata.scoped_manifest: whole out-of-scope delta files
-        are never opened; it keeps every delete file), then per-file
-        pruning (candidate_files) within what was read, then delete-file
-        scoping against the candidates (_scope_deletes). The partition
-        spec parse is lenient: an unknown legacy transform must not fail
-        a read that plain read() serves, it just doesn't prune."""
-        from demo_iceberg_permanent_delete_spark.lake.pruning import candidate_files
-        from demo_iceberg_permanent_delete_spark.lake.transforms import (
-            parse_partition_by,
-        )
-
-        self.last_delete_scope = {"planned": 0, "skipped": 0}
-        part_fields = parse_partition_by(
-            self.metadata.partition_by, lenient=True
-        )
-        scoped = self.metadata.scoped_manifest(
-            snap, predicate, part_fields, aliases=self.metadata.renames
-        )
-        data_entries = [e for e in scoped if e.content == CONTENT_DATA]
-        if predicate is not None and data_entries:
-            data_entries = candidate_files(
-                data_entries,
-                predicate,
-                part_fields,
-                aliases=self.metadata.renames,
-            )
-        if not data_entries:
-            return [], []
-        return data_entries, self._scope_deletes(
-            [e for e in scoped if e.content != CONTENT_DATA], data_entries
-        )
+        plan = self._scan_plan(snap or self.metadata.current_snapshot(), prune_for)
+        return self._read_data_entries(plan, lineage=lineage, positions=True)
 
     # --------------------------------------------------------------- DML
     @property
@@ -3048,27 +2834,28 @@ class LakeTable:
         """MOR DELETE: position-delete files holding the (file_path, pos)
         of every live row that matches ``predicate``.
 
-        Under the deletion-vector layout, a string predicate that
-        pruning.row_filter translates is matched with no Spark plan
-        (_erase_on_driver): the candidate files, within the driver
-        budget, are read on the driver projected to the predicate's
-        columns, masked in pyarrow, and the matches go straight to the DV
-        writer. Otherwise the positioned match read (on the driver within
-        the budget under the DV layout, on executors else) is filtered
-        by Spark and written by _write_position_deletes, whose DV writer
-        takes small match sets on the driver too."""
+        Under the deletion-vector layout, a predicate the scan plan
+        pushes (pruning.row_filter translates it) is matched with no
+        Spark plan (_erase_on_driver): the candidate files, within the
+        driver budget, are read on the driver projected to the
+        predicate's columns, masked in pyarrow, and the matches go
+        straight to the DV writer. Otherwise the positioned executor read
+        is filtered by Spark and written by _write_position_deletes,
+        whose DV writer takes small match sets on the driver too."""
         snap, parent_id = self._branch_base(branch)
         pred_str = predicate if isinstance(predicate, str) else None
-        delete_entries = self._erase_on_driver(snap, pred_str)
+        plan = self._scan_plan(snap, pred_str)
+        delete_entries = (
+            self._erase_on_driver(plan, pred_str) if self._dv_deletes else None
+        )
         if delete_entries is None:
-            rows, row_bound = self._read_positions_bounded(
-                snap, pred_str, driver=self._dv_deletes
-            )
-            matches = rows.filter(self._as_column(predicate)).select(
-                F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
+            matches = (
+                self._read_data_entries(plan, positions=True)
+                .filter(self._as_column(predicate))
+                .select(F.col("__fp").alias("file_path"), F.col("__pos").alias("pos"))
             )
             delete_entries = self._write_position_deletes(
-                matches, row_bound=row_bound
+                matches, row_bound=plan.record_count
             )
         base = list(snap.manifest) if snap else []
         if not delete_entries:
@@ -3087,13 +2874,12 @@ class LakeTable:
         return snapshot
 
     def _erase_on_driver(
-        self, snap: Snapshot | None, pred_str: str | None
+        self, plan: ScanPlan, pred_str: str | None
     ) -> list[ManifestEntry] | None:
         """The MOR DELETE's deletion-vector entries, matched on the
-        driver, or None for the caller's general path: no snapshot, the
-        plain layout, a predicate pruning.row_filter declines for this
-        table's column types, or candidate reads past the driver budget
-        (the unchanged fits_driver_reads, via _driver_read_arrow).
+        driver, or None for the caller's general path: a predicate the
+        plan does not push, or candidate reads past the driver budget
+        (fits_driver_reads, via _driver_read_arrow).
 
         Each candidate file is read for the predicate's columns only
         (plus what its deletes need, see _conformed_file) with its
@@ -3103,20 +2889,13 @@ class LakeTable:
         LocalRelation. [] when nothing matches."""
         from demo_iceberg_permanent_delete_spark.lake.pruning import row_filter
 
-        if snap is None or pred_str is None or not self._dv_deletes:
+        if plan.pushed is None:
             return None
-        schema = self.schema()
-        cols = self._pushable_columns(pred_str, schema)
-        if cols is None:
-            return None
+        if not plan.files:
+            return []
         import pyarrow as pa
 
-        data_entries, delete_files = self._scoped_candidates(snap, pred_str)
-        if not data_entries:
-            return []
-        table = self._driver_read_arrow(
-            data_entries, delete_files, positions=True, columns=cols, schema=schema
-        )
+        table = self._driver_read_arrow(plan, positions=True, columns=plan.pushed)
         if table is None:
             return None
         hits = table.filter(row_filter(pred_str, table))
@@ -3761,16 +3540,18 @@ class LakeTable:
 
         lin = self._lineage_ok()
         snap, parent_id = self._branch_base(branch)
-        rows, row_bound = self._read_positions_bounded(
-            snap, pred_str, lineage=lin
+        plan = self._scan_plan(snap, pred_str)
+        matches = (
+            self._read_data_entries(plan, lineage=lin, positions=True)
+            .filter(pred)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        matches = rows.filter(pred).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             pos_entries = self._write_position_deletes(
                 matches.select(
                     F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
                 ),
-                row_bound=row_bound,
+                row_bound=plan.record_count,
             )
             if not pos_entries:
                 return None  # nothing matched — no commit (Iceberg behavior)
@@ -4199,7 +3980,7 @@ class LakeTable:
         # Scan fallback, scoped to EXACTLY the foreign/pre-upgrade files:
         # transformed under the DEFAULT spec's fields, last-updated info
         # joined in from a manifest-sized local frame keyed by file path.
-        df = self._read_data_entries(uncovered)
+        df = self._read_data_entries(self._scan_plan(None, data=uncovered))
         types = {f.name: f.dataType for f in df.schema.fields}
         kvs: list[Column] = []
         for fld in fields:

@@ -311,39 +311,19 @@ def _conformed_file(
     return _apply_defaults(_conform(raw, arrow_schema, renames), defaults), raw
 
 
-def delete_reads(meta, data_entries, delete_entries) -> list:
-    """The delete entries read_entries_arrow opens for ``data_entries``,
-    once per data file that sees each (_visibility): what a driver read
-    of those files costs beyond the data files themselves."""
-    pos_for, dv_for, eq_for = _visibility(
-        meta, None, entries=[*data_entries, *delete_entries]
-    )
-    by_path = {d.file_path: d for d in delete_entries}
-    return [
-        by_path[p]
-        for e in data_entries
-        for p in (
-            *pos_for(e),
-            *dv_for(e),
-            *(q for paths, _ in eq_for(e) for q in paths),
-        )
-    ]
-
-
 def read_entries_arrow(
     meta,
-    data_entries,
-    delete_entries,
+    files,
     arrow_schema,
     *,
     positions: bool = False,
     lineage: bool = False,
     columns: Collection[str] | None = None,
 ):
-    """Driver-side MOR read of manifest-listed data files into ONE
-    pyarrow Table conformed to ``arrow_schema``: the batch reader's
-    per-file read (_visibility → _conformed_file), run in-process over
-    each entry with the delete files ``delete_entries`` it can see.
+    """Driver-side MOR read of a scan plan's files (lake/scanplan.py
+    FileScan: a data file with the deletes and defaults it reads) into
+    ONE pyarrow Table conformed to ``arrow_schema``: the batch reader's
+    per-file read (_conformed_file), run in-process over each file.
 
     ``lineage`` appends ``_row_id`` and ``_last_updated_sequence_number``
     resolved per row by _resolve_lineage (the table read's
@@ -356,31 +336,30 @@ def read_entries_arrow(
     and what its deletes need (_conformed_file)."""
     import pyarrow as pa
 
-    pos_for, dv_for, eq_for = _visibility(
-        meta, None, entries=[*data_entries, *delete_entries]
-    )
     if columns is not None and lineage:
         columns = {*columns, "_row_id", "_last_updated_sequence_number"}
     parts = []
-    for e in data_entries:
+    for f in files:
         tbl, raw = _conformed_file(
-            e.file_path,
+            f.file_path,
             arrow_schema,
-            pos_for(e),
-            eq_for(e),
+            f.pos_deletes,
+            f.eq_deletes,
             meta.renames,
-            dv_for(e),
-            _defaults_for(meta, e),
+            f.dv_deletes,
+            f.defaults,
             with_positions=positions or lineage,
             columns=columns,
         )
         if lineage:
-            rid, seq = _resolve_lineage(raw, e.first_row_id, e.sequence_number)
+            rid, seq = _resolve_lineage(
+                raw, f.entry.first_row_id, f.entry.sequence_number
+            )
             tbl = tbl.append_column("_row_id", rid)
             tbl = tbl.append_column("_last_updated_sequence_number", seq)
         if positions:
             tbl = tbl.append_column(
-                "__fp", pa.repeat(pa.scalar(e.file_path, pa.string()), tbl.num_rows)
+                "__fp", pa.repeat(pa.scalar(f.file_path, pa.string()), tbl.num_rows)
             )
             tbl = tbl.append_column("__pos", raw.column("__gpos"))
         parts.append(tbl)
@@ -421,8 +400,8 @@ def _apply_defaults(tbl, defaults: Sequence[tuple[str, object]]):
 
 def _resolve_lineage(tbl, first_row_id, file_sequence):
     """(_row_id, _last_updated_sequence_number) int64 arrays for a raw
-    (pre-conform) table carrying ``__gpos`` file-global positions —
-    executor-side twin of lake/table.py _attach_lineage: the file's
+    (pre-conform) table carrying ``__gpos`` file-global positions, by
+    the rule lake/table.py _attach_lineage applies in Spark: the file's
     MATERIALIZED lineage column value wins per row (rewrites carry ids
     forward that way), a NULL inherits first_row_id + position / the
     file's data sequence number, and a pre-upgrade file (both None)
@@ -667,8 +646,7 @@ def _visible_table(
     ``with_positions``: append a ``__gpos`` int64 column holding each
     row's FILE-GLOBAL position before any delete filtering — the
     surviving rows then carry the positions row-lineage inheritance
-    needs (_row_id = first_row_id + position; lake/table.py
-    _attach_lineage is the table-side twin).
+    needs (_row_id = first_row_id + position, _resolve_lineage).
 
     ``columns``: read only the file's columns of this set of physical
     names (all of them when None)."""
@@ -753,10 +731,11 @@ def _visible_table(
 
 @dataclass
 class LakeFilePartition(InputPartition):
+    # one file of a scan plan (lake/scanplan.py FileScan) as plain paths:
+    # the module ships to workers by value, the plan's classes do not
     file_path: str | None
     pos_delete_paths: tuple[str, ...] = ()
-    # ((delete file paths…), (equality key columns…)) — already
-    # sequence-filtered for this data file on the driver
+    # ((delete file paths…), (equality key columns…))
     eq_deletes: tuple[tuple[tuple[str, ...], tuple[str, ...]], ...] = ()
     # deletion-vector-layout position-delete files (content=1, dv=True)
     dv_paths: tuple[str, ...] = ()
@@ -765,7 +744,7 @@ class LakeFilePartition(InputPartition):
     row_groups: tuple[int, int] | None = None
     row_offset: int = 0
     # initial defaults (v3 ADD COLUMN … DEFAULT) this file predates:
-    # (column, value) pairs, sequence-decided on the driver
+    # (column, value) pairs
     defaults: tuple[tuple[str, object], ...] = ()
 
 
@@ -774,30 +753,6 @@ class LakeFilePartition(InputPartition):
 # Files WE write target ~128 MiB, so this only bites add_files-migrated
 # foreign parquet — which would otherwise pin a single task per huge file.
 DEFAULT_SPLIT_BYTES = 128 * 1024 * 1024
-
-
-def _defaults_for(meta, entry) -> tuple[tuple[str, object], ...]:
-    """Initial defaults (v3 ADD COLUMN … DEFAULT) that apply to this
-    entry's rows — the SAME rule as table._read_data_entries: physical
-    column presence when the write-time harvest is known (exact, covers
-    writers racing the ADD COLUMN), else the sequence-watermark fallback
-    (None sequence / None entry = pre-add era). Driver-side,
-    metadata-proportional; the executor task just overwrites the
-    null-filled column."""
-    out = []
-    for c, d in getattr(meta, "column_defaults", {}).items():
-        phys = {c, *meta.renames.get(c, [])}
-        if entry is None:
-            out.append((c, d["value"]))
-        elif entry.columns is not None:
-            if not (phys & set(entry.columns)):
-                out.append((c, d["value"]))
-        elif (
-            entry.sequence_number is None
-            or entry.sequence_number <= d["added_seq"]
-        ):
-            out.append((c, d["value"]))
-    return tuple(out)
 
 
 def _file_splits(entry, split_bytes: int) -> list:
@@ -959,59 +914,28 @@ class LakeBatchReader(DataSourceReader):
         return filters  # none handled exactly — Spark keeps them all
 
     def partitions(self) -> Sequence[InputPartition]:
+        from demo_iceberg_permanent_delete_spark.lake.scanplan import plan_scan
+
         meta = self._meta_or_load()
         snap = self._resolve_read_snapshot(meta)
-        if snap is None:
-            return [LakeFilePartition(None)]
-        from demo_iceberg_permanent_delete_spark.lake.transforms import (
-            parse_partition_by,
-        )
-
-        # lenient: partitions() only PRUNES on these fields, and an
-        # unparseable legacy spec must not fail the whole read (round-6
-        # review finding — the strict call regressed unpredicated reads
-        # of such tables, which used to skip parsing entirely)
-        part_fields = parse_partition_by(meta.partition_by, lenient=True)
-        # manifest-level skip first (out-of-scope delta files never
-        # opened; keeps all delete files), then per-file pruning
-        scoped = meta.scoped_manifest(
-            snap, self._predicate, part_fields, aliases=meta.renames
-        )
-        data_entries = [e for e in scoped if e.content == 0]
-        if self._predicate:
-            from demo_iceberg_permanent_delete_spark.lake.pruning import (
-                candidate_files,
-            )
-
-            data_entries = candidate_files(
-                data_entries,
-                self._predicate,
-                part_fields,
-                aliases=meta.renames,
-            )
-        if not data_entries:
-            return [LakeFilePartition(None)]
-
-        pos_for, dv_for, eq_for = _visibility(meta, snap, entries=scoped)
+        plan = plan_scan(meta, snap, self._predicate)
         split_bytes = int(
             self._options.get("split-size", DEFAULT_SPLIT_BYTES)
         )
-        parts: list[LakeFilePartition] = []
-        for e in data_entries:
-            pos, eq, dv = pos_for(e), eq_for(e), dv_for(e)
-            for rg, offset in _file_splits(e, split_bytes):
-                parts.append(
-                    LakeFilePartition(
-                        e.file_path,
-                        pos,
-                        eq,
-                        dv,
-                        row_groups=rg,
-                        row_offset=offset,
-                        defaults=_defaults_for(meta, e),
-                    )
-                )
-        return parts
+        parts = [
+            LakeFilePartition(
+                f.file_path,
+                f.pos_deletes,
+                f.eq_deletes,
+                f.dv_deletes,
+                row_groups=rg,
+                row_offset=offset,
+                defaults=f.defaults,
+            )
+            for f in plan.files
+            for rg, offset in _file_splits(f.entry, split_bytes)
+        ]
+        return parts or [LakeFilePartition(None)]
 
     def read(self, partition: LakeFilePartition) -> Iterator:
         if partition.file_path is None:
@@ -1100,75 +1024,6 @@ def _ancestry_chain(meta, start_id: int, end_id: int):
             )
     chain.reverse()
     return chain
-
-
-def _visibility(meta, snap, entries=None):
-    """A snapshot's delete files split for the executor-side MOR read, as
-    PER-DATA-FILE resolvers: (pos_for(entry), dv_for(entry),
-    eq_for(entry)). A position-delete/DV file ships to a task only when
-    its ``referenced_files`` set (recorded at write time) contains the
-    task's data file — or when the set is unknown (too many targets,
-    pre-upgrade manifest), in which case it ships to every task as
-    before. At 100 TB this turns "every task opens every delete file"
-    into "every task opens the delete files that reference ITS file".
-    ``eq_for`` applies the Iceberg sequence rule (an equality delete only
-    masks data files committed strictly before it). ``entries`` supplies
-    a pre-resolved manifest (e.g. metadata.scoped_manifest, which keeps
-    ALL delete files) so callers that already resolved don't force a
-    second full resolution."""
-    from demo_iceberg_permanent_delete_spark.lake.metadata import (
-        CONTENT_EQUALITY_DELETES,
-        CONTENT_POSITION_DELETES,
-        entry_sequence,
-        path_spellings,
-    )
-
-    deletes = [
-        e
-        for e in (entries if entries is not None else snap.manifest)
-        if e.content != 0
-    ]
-    # index once: target path → referencing delete paths, plus the
-    # always-ship list for entries without a recorded set. Each pos_for/
-    # dv_for call is then O(result), not O(all delete files) per data
-    # file (review catch: the linear scan made planning
-    # O(data_files × delete_files))
-    def _index(dv_flag: bool):
-        always: list[str] = []
-        by_target: dict[str, list[str]] = {}
-        for e in deletes:
-            if e.content != CONTENT_POSITION_DELETES or e.dv != dv_flag:
-                continue
-            refs = getattr(e, "referenced_files", None) or ()
-            if refs:
-                targets = {q for r in refs for q in path_spellings(r)}
-                for r in targets:
-                    by_target.setdefault(r, []).append(e.file_path)
-            else:
-                always.append(e.file_path)
-        return always, by_target
-
-    pos_always, pos_by_target = _index(False)
-    dv_always, dv_by_target = _index(True)
-
-    def pos_for(entry):
-        return tuple(pos_always + pos_by_target.get(entry.file_path, []))
-
-    def dv_for(entry):
-        return tuple(dv_always + dv_by_target.get(entry.file_path, []))
-
-    order = {s.snapshot_id: i for i, s in enumerate(meta.snapshots)}
-
-    def eq_for(entry):
-        seq = entry_sequence(entry, order)
-        return tuple(
-            ((d.file_path,), tuple(d.equality_columns))
-            for d in deletes
-            if d.content == CONTENT_EQUALITY_DELETES
-            and entry_sequence(d, order) > seq
-        )
-
-    return pos_for, dv_for, eq_for
 
 
 class LakeStreamReader(DataSourceStreamReader):
@@ -1600,22 +1455,26 @@ class LakeStreamReader(DataSourceStreamReader):
             work.append((meta.snapshot_by_id(start_id), start_pos))
         if start_id != end_id:
             work.extend((s, 0) for s in _ancestry_chain(meta, start_id, end_id))
+        from demo_iceberg_permanent_delete_spark.lake.scanplan import plan_scan
+
         split_bytes = int(self._options.get("split-size", DEFAULT_SPLIT_BYTES))
         parts: list[LakeFilePartition] = []
         for snap, skip_n in work:
             units = self._append_units(meta, snap)
             if snap.snapshot_id == end_id and end_pos is not None:
                 units = units[:end_pos]
-            for e, _n in units[skip_n:]:
+            # appended rows as written: no delete applies to an append scan
+            plan = plan_scan(meta, None, data=[e for e, _n in units[skip_n:]])
+            for f in plan.files:
                 # offsets admit whole files; oversized files fan out to
                 # row-group splits here, WITHIN the batch
-                for rg, offset in _file_splits(e, split_bytes):
+                for rg, offset in _file_splits(f.entry, split_bytes):
                     parts.append(
                         LakeFilePartition(
-                            e.file_path,
+                            f.file_path,
                             row_groups=rg,
                             row_offset=offset,
-                            defaults=_defaults_for(meta, e),
+                            defaults=f.defaults,
                         )
                     )
         return parts or [LakeFilePartition(None)]
@@ -1777,8 +1636,10 @@ class LakeCdcStreamReader(LakeStreamReader):
             CONTENT_DATA,
             CONTENT_EQUALITY_DELETES,
             CONTENT_POSITION_DELETES,
+            ManifestEntry,
             path_spellings,
         )
+        from demo_iceberg_permanent_delete_spark.lake.scanplan import plan_scan
 
         start_id, end_id = start["snapshot_id"], end["snapshot_id"]
         if end_id == -1 and start_id != -1:
@@ -1793,6 +1654,33 @@ class LakeCdcStreamReader(LakeStreamReader):
         )
 
         parts: list[CdcPartition] = []
+
+        def emit(kind, f, common, **extra):
+            """One partition per split of the plan's file ``f``; parent-
+            visibility kinds pass the plan's deletes in ``extra``."""
+            for rg, off in _file_splits(f.entry, split_bytes):
+                parts.append(
+                    CdcPartition(
+                        kind=kind,
+                        file_path=f.file_path,
+                        change_type="INSERT" if kind == "insert" else "DELETE",
+                        row_groups=rg,
+                        row_offset=off,
+                        defaults=f.defaults,
+                        first_row_id=f.entry.first_row_id,
+                        file_sequence=f.entry.sequence_number,
+                        **extra,
+                        **common,
+                    )
+                )
+
+        def visible(f):
+            return {
+                "pos_delete_paths": f.pos_deletes,
+                "dv_paths": f.dv_deletes,
+                "eq_deletes": f.eq_deletes,
+            }
+
         ordinal = 0
         for snap in _ancestry_chain(meta, start_id, end_id):
             if snap.operation == "replace":
@@ -1808,50 +1696,33 @@ class LakeCdcStreamReader(LakeStreamReader):
                 "commit_id": snap.snapshot_id,
                 "lineage": self._lineage,
             }
-            emitted = False
-            for e in delta.added:
-                if e.content == CONTENT_DATA:
-                    for rg, off in _file_splits(e, split_bytes):
-                        parts.append(
-                            CdcPartition(
-                                kind="insert",
-                                file_path=e.file_path,
-                                change_type="INSERT",
-                                row_groups=rg,
-                                row_offset=off,
-                                defaults=_defaults_for(meta, e),
-                                first_row_id=e.first_row_id,
-                                file_sequence=e.sequence_number,
-                                **common,
-                            )
-                        )
-                    emitted = True
+            # added rows as written: no delete applies to an INSERT
+            added = [e for e in delta.added if e.content == CONTENT_DATA]
+            for f in plan_scan(meta, None, data=added).files:
+                emit("insert", f, common)
+            emitted = bool(added)
             if parent is not None:
-                pos_for, dv_for, eq_for = _visibility(meta, parent)
                 parent_by_path = {e.file_path: e for e in parent.manifest}
-                for p in delta.removed:
-                    ent = parent_by_path.get(p)
-                    if ent is None or ent.content != CONTENT_DATA:
-                        continue
-                    pos, dvp, eqd = pos_for(ent), dv_for(ent), eq_for(ent)
-                    for rg, off in _file_splits(ent, split_bytes):
-                        parts.append(
-                            CdcPartition(
-                                kind="delete",
-                                file_path=p,
-                                pos_delete_paths=pos,
-                                dv_paths=dvp,
-                                eq_deletes=eqd,
-                                change_type="DELETE",
-                                row_groups=rg,
-                                row_offset=off,
-                                defaults=_defaults_for(meta, ent),
-                                first_row_id=ent.first_row_id,
-                                file_sequence=ent.sequence_number,
-                                **common,
-                            )
-                        )
-                    emitted = True
+                removed = [
+                    parent_by_path[p]
+                    for p in delta.removed
+                    if p in parent_by_path
+                    and parent_by_path[p].content == CONTENT_DATA
+                ]
+                eq_added = [
+                    e
+                    for e in delta.added
+                    if e.content == CONTENT_EQUALITY_DELETES
+                ]
+                # the parent-visible rows of the files read below
+                visible_plan = plan_scan(
+                    meta, parent, data=parent.data_files() if eq_added else removed
+                )
+                by_path = {f.file_path: f for f in visible_plan.files}
+                for e in removed:
+                    f = by_path[e.file_path]
+                    emit("delete", f, common, **visible(f))
+                emitted = emitted or bool(removed)
                 mask_entries = [
                     e
                     for e in delta.added
@@ -1882,69 +1753,35 @@ class LakeCdcStreamReader(LakeStreamReader):
                                 .column("file_path")
                                 .to_pylist()
                             )
-                    for rp in sorted(refs):
-                        ent = parent_by_path.get(rp)
-                        for rg, off in (
-                            _file_splits(ent, split_bytes)
-                            if ent is not None
-                            else [(None, 0)]
-                        ):
-                            parts.append(
-                                CdcPartition(
-                                    kind="masked",
-                                    file_path=rp,
-                                    mask_pos_paths=mask_pos,
-                                    mask_dv_paths=mask_dv,
-                                    change_type="DELETE",
-                                    row_groups=rg,
-                                    row_offset=off,
-                                    defaults=_defaults_for(meta, ent),
-                                    first_row_id=getattr(
-                                        ent, "first_row_id", None
-                                    ),
-                                    file_sequence=getattr(
-                                        ent, "sequence_number", None
-                                    ),
-                                    **common,
-                                )
-                            )
+                    # a path missing from the parent (cannot normally
+                    # happen) reads as a bare sequence-less entry: NULL
+                    # lineage, pre-add defaults era
+                    targets = [
+                        parent_by_path.get(rp)
+                        or ManifestEntry(
+                            file_path=rp,
+                            content=CONTENT_DATA,
+                            record_count=0,
+                            file_size_in_bytes=0,
+                        )
+                        for rp in sorted(refs)
+                    ]
+                    for f in plan_scan(meta, None, data=targets).files:
+                        emit(
+                            "masked",
+                            f,
+                            common,
+                            mask_pos_paths=mask_pos,
+                            mask_dv_paths=mask_dv,
+                        )
                     emitted = emitted or bool(refs)
-                eq_added = [
-                    e
-                    for e in delta.added
-                    if e.content == CONTENT_EQUALITY_DELETES
-                ]
                 if eq_added:
                     eq_match = tuple(
                         ((e.file_path,), tuple(e.equality_columns))
                         for e in eq_added
                     )
-                    for ent in parent.manifest:
-                        if ent.content != CONTENT_DATA:
-                            continue
-                        pos, dvp, eqd = (
-                            pos_for(ent),
-                            dv_for(ent),
-                            eq_for(ent),
-                        )
-                        for rg, off in _file_splits(ent, split_bytes):
-                            parts.append(
-                                CdcPartition(
-                                    kind="eq",
-                                    file_path=ent.file_path,
-                                    pos_delete_paths=pos,
-                                    dv_paths=dvp,
-                                    eq_deletes=eqd,
-                                    eq_match=eq_match,
-                                    change_type="DELETE",
-                                    row_groups=rg,
-                                    row_offset=off,
-                                    defaults=_defaults_for(meta, ent),
-                                    first_row_id=ent.first_row_id,
-                                    file_sequence=ent.sequence_number,
-                                    **common,
-                                )
-                            )
+                    for f in visible_plan.files:
+                        emit("eq", f, common, eq_match=eq_match, **visible(f))
                     emitted = True
             if emitted:
                 ordinal += 1

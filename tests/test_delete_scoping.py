@@ -16,6 +16,11 @@ from demo_iceberg_permanent_delete_spark.lake.metadata import ManifestEntry
 from demo_iceberg_permanent_delete_spark.lake.pruning import scope_delete_files
 
 
+def _delete_scope(t, predicate):
+    """{planned, skipped} delete files of the scan plan for ``predicate``."""
+    return t._scan_plan(t.metadata.current_snapshot(), predicate).delete_scope
+
+
 @pytest.fixture
 def cat(spark, tmp_path):
     c = Catalog(spark, str(tmp_path / "wh"))
@@ -58,8 +63,9 @@ def test_scoped_scan_plans_fewer_position_delete_files(cat, dv):
     got = sorted(r["id"] for r in t2.scan("d = DATE '2024-05-02'").collect())
     assert got == [i for i in range(100, 120) if i != 105]
     # only the day-2 delete file is planned; the other days' are skipped
-    assert t2.last_delete_scope["planned"] == 1
-    assert t2.last_delete_scope["skipped"] == 2
+    scope = _delete_scope(t2, "d = DATE '2024-05-02'")
+    assert scope["planned"] == 1
+    assert scope["skipped"] == 2
 
     # differential: scoped ≡ full filter for every day
     for day in (1, 2, 3):
@@ -91,7 +97,7 @@ def test_equality_delete_scoping_by_key_bounds_and_sequence(cat):
     t3 = c.load_table("default.ds_eq")
     got3 = sorted(r["id"] for r in t3.scan("id = 99").collect())
     assert got3 == [99]
-    assert t3.last_delete_scope["skipped"] == 1
+    assert _delete_scope(t3, "id = 99")["skipped"] == 1
 
     # key-bounds disjointness: delete key z99 is outside every data
     # file's name range after a scoped scan on the first insert

@@ -221,3 +221,80 @@ def test_lake_builds_arrow_frames_in_one_helper():
         (name, fn) for name, tree in _lake_modules() for fn, _ in _arrow_frames(tree)
     ]
     assert owners == [("table.py", "_driver_read")]
+
+
+# The scan plan's decisions (lake/scanplan.py): the manifest-level skip,
+# delete-file scoping and the per-data-file delete index.
+_PLANNER_CALLS = {"scoped_manifest", "scope_delete_files", "_delete_index"}
+
+
+def _package_modules():
+    pkg_dir = os.path.dirname(LAKE_DIR)
+    for root, _, names in sorted(os.walk(pkg_dir)):
+        for name in sorted(names):
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path, encoding="utf-8") as f:
+                    tree = ast.parse(f.read(), filename=path)
+                yield os.path.relpath(path, pkg_dir), tree
+
+
+def _planner_calls(tree):
+    """(function, callee) of every call to one of _PLANNER_CALLS, by bare
+    name or as an attribute; the function is the outermost enclosing
+    def (None at module level)."""
+    owner = {}
+    for fn in ast.walk(tree):
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for node in ast.walk(fn):
+                owner.setdefault(node, fn.name)
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            func = node.func
+            name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+            if name in _PLANNER_CALLS:
+                found.append((owner.get(node), name))
+    return found
+
+
+def test_planner_guard_detects_planner_calls():
+    src = '''
+def plan_scan(meta, snap):
+    return meta.scoped_manifest(snap, None), scope_delete_files([], [])
+
+def partitions(meta, snap):
+    def inner():
+        return _delete_index([], {})
+    return pruning.scope_delete_files([], []), inner
+
+scoped = meta.scoped_manifest(None, None)
+'''
+    assert sorted(_planner_calls(ast.parse(src)), key=str) == sorted(
+        [
+            ("plan_scan", "scoped_manifest"),
+            ("plan_scan", "scope_delete_files"),
+            ("partitions", "_delete_index"),
+            ("partitions", "scope_delete_files"),
+            (None, "scoped_manifest"),
+        ],
+        key=str,
+    )
+
+
+def test_scan_plan_is_the_one_planner():
+    """Static guard: under the package, the manifest-level skip
+    (metadata.scoped_manifest), delete-file scoping
+    (pruning.scope_delete_files) and the per-file delete index are each
+    called once, by scanplan.plan_scan: every reader takes candidate
+    files and per-file deletes from the plan, so no second planner grows
+    back."""
+    calls = sorted(
+        (path, fn, name)
+        for path, tree in _package_modules()
+        for fn, name in _planner_calls(tree)
+    )
+    assert calls == [
+        (os.path.join("lake", "scanplan.py"), "plan_scan", name)
+        for name in sorted(_PLANNER_CALLS)
+    ]

@@ -299,9 +299,10 @@ def test_projected_driver_match_equals_spark_filter(spark, tmp_path, name):
     if name == "eq_deletes":
         assert snap.delete_files()
     for pred in preds:
-        data, deletes = t._scoped_candidates(snap, pred)
+        plan = t._scan_plan(snap, pred)
         cols = row_filter_columns(pred)
-        table = t._driver_read_arrow(data, deletes, positions=True, columns=cols)
+        assert plan.pushed == cols
+        table = t._driver_read_arrow(plan, positions=True, columns=cols)
         assert set(table.column_names) == cols | {"__fp", "__pos"}
         mask = row_filter(pred, table)
         assert mask is not None, pred

@@ -502,8 +502,11 @@ def test_sharded_fold_composes_with_compaction_and_delete_scoping(cat):
     t2 = c.load_table("default.sf11")
     got = sorted(r["id"] for r in t2.scan("d = DATE '2024-01-03'").collect())
     assert got == [200 + i for i in range(10)] + [250 + i for i in range(10)]
-    assert t2.last_delete_scope["planned"] == 0
-    assert t2.last_delete_scope["skipped"] == 1
+    scope = t2._scan_plan(
+        t2.metadata.current_snapshot(), "d = DATE '2024-01-03'"
+    ).delete_scope
+    assert scope["planned"] == 0
+    assert scope["skipped"] == 1
 
     # compaction over the sharded snapshot: plan + execute end-to-end
     plan = plan_compaction(t2, min_input_files=2)
