@@ -26,6 +26,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from demo_iceberg_permanent_delete_spark.lake.arrowframe import ArrowFrame
 from demo_iceberg_permanent_delete_spark.lake.metadata import (
     CONTENT_DATA,
     CONTENT_POSITION_DELETES,
@@ -160,12 +161,16 @@ def collect_if_small(df: DataFrame, row_bound: int | None = None):
     most DRIVER_MAX_ROWS + 1 rows to the driver. The collected batch
     is the result: on overflow it is discarded whole, so a
     non-deterministic source cannot split its rows across the two
-    paths. Any Spark or Arrow error also returns None. A frame whose
-    optimized plan is a LocalRelation is read with collect(), which
-    starts no job (_collect_local), under the same row rules."""
+    paths. Any Spark or Arrow error also returns None. A driver read's
+    ArrowFrame is its held table, with no py4j call; any other frame
+    whose optimized plan is a LocalRelation is read with collect(),
+    which starts no job (_collect_local), under the same row rules."""
     try:
         if row_bound is not None and not fits_driver(row_bound):
             return None
+        table = df.held_arrow() if isinstance(df, ArrowFrame) else None
+        if table is not None:
+            return table if fits_driver(table.num_rows) else None
         plan = df._jdf.queryExecution().optimizedPlan()
         if plan.getClass().getSimpleName() == "LocalRelation" and _rows_exact(
             df.schema
@@ -255,15 +260,15 @@ def _raw_decimal_bounds(stats):
 
 
 def _footer_stats(
-    path: str,
+    footer: str | pq.FileMetaData,
 ) -> tuple[int, dict[str, Any], dict[str, Any], dict[str, int]]:
-    """Record count, column min/max, and per-column null counts from the
-    parquet footer (no data read). A column whose null count is missing in
-    ANY row group is omitted from the null-count map (pruning must stay
-    conservative on partial stats). String bounds are truncated (sound:
-    lower prefix / upper rounded up — see _truncate_upper)."""
-    f = pq.ParquetFile(path)
-    meta = f.metadata
+    """Record count, column min/max, and per-column null counts from a
+    parquet footer, given as the file's path or as its FileMetaData (no
+    data read). A column whose null count is missing in ANY row group is
+    omitted from the null-count map (pruning must stay conservative on
+    partial stats). String bounds are truncated (sound: lower prefix /
+    upper rounded up — see _truncate_upper)."""
+    meta = pq.read_metadata(footer) if isinstance(footer, str) else footer
     mins: dict[str, Any] = {}
     maxs: dict[str, Any] = {}
     nulls: dict[str, int] = {}
@@ -317,6 +322,30 @@ def _footer_stats(
         if isinstance(v, str):
             maxs[name] = _truncate_upper(v)
     return meta.num_rows, mins, maxs, nulls
+
+
+def footer_schema(path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers for one parquet
+    file, from its footer with pyarrow: no Spark job, where the inferring
+    read runs one. Spark's own rules: a timestamp not adjusted to UTC is
+    TimestampNTZ, and a TIMESTAMP(NANOS) column is its raw long
+    (spark.sql.legacy.parquet.nanosAsLong, without which Spark rejects
+    the file). Fields keep the file's nullability; a read pinned to this
+    schema makes them nullable, as the inferring read does. Raises on a
+    type the Arrow bridge does not map (unsigned integers): callers then
+    let Spark infer."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    arrow = pa.schema(
+        [
+            f.with_type(pa.int64())
+            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+            else f
+            for f in pq.read_metadata(path).schema.to_arrow_schema()
+        ]
+    )
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
 
 
 def write_data_files(
@@ -408,25 +437,45 @@ def write_arrow_file(
     no Spark job. For frames collect_if_small() brought to the driver and
     for metadata-sized sidecar files (the streaming upsert's
     equality-delete key file: O(batch-keys) rows) where a Spark write
-    costs a job launch per micro-batch. The manifest entry is built
-    exactly like write_data_files' (``record_count_from`` included).
-    Returns [] for empty input (parity with the zero-row file drop
+    costs a job launch per micro-batch. The manifest entry is
+    write_data_files' (``record_count_from`` included), built from the
+    table and the footer the writer hands back, without reopening the
+    file. Returns [] for empty input (parity with the zero-row file drop
     there)."""
     if table.num_rows == 0:
         return []
     os.makedirs(target_dir, exist_ok=True)
     final = os.path.join(target_dir, f"{prefix}-{uuid.uuid4().hex}.parquet")
-    pq.write_table(table, final)
-    entry = _manifest_entry(final, content, record_count_from)
+    footer: list[pq.FileMetaData] = []
+    pq.write_table(table, final, metadata_collector=footer)
+    entry = _manifest_entry(
+        final, content, record_count_from, footer=footer[0], table=table
+    )
     return [entry] if entry is not None else []
 
 
 def _manifest_entry(
-    path: str, content: int, record_count_from: str | None
+    path: str,
+    content: int,
+    record_count_from: str | None,
+    *,
+    footer: pq.FileMetaData | None = None,
+    table=None,
 ) -> ManifestEntry | None:
-    """The manifest entry of the parquet file just written at ``path``,
-    from its footer; a zero-row file is removed and yields None."""
-    n_rows, mins, maxs, nulls = _footer_stats(path)
+    """The manifest entry of the parquet file just written at ``path``;
+    a zero-row file is removed and yields None. ``footer`` and ``table``
+    are the file's footer and rows when the caller wrote it from memory
+    (write_arrow_file): the entry is then built from them, with no read
+    of the file; otherwise both are read back from ``path``."""
+
+    def column(name: str):
+        if table is not None:
+            return table.column(name)
+        return pq.read_table(path, columns=[name]).column(0)
+
+    if footer is None:
+        footer = pq.read_metadata(path)
+    n_rows, mins, maxs, nulls = _footer_stats(footer)
     if n_rows == 0:
         os.remove(path)
         return None
@@ -442,13 +491,12 @@ def _manifest_entry(
     referenced: list[str] = []
     want_refs = content == CONTENT_POSITION_DELETES and fits_driver(n_rows)
     if record_count_from is not None:
-        col = pq.read_table(path, columns=[record_count_from])
-        n_rows = sum(v.as_py() or 0 for v in col.column(0))
+        n_rows = sum(v.as_py() or 0 for v in column(record_count_from))
     if want_refs:
         try:
             import pyarrow.compute as pc
 
-            uniq = pc.unique(pq.read_table(path, columns=["file_path"]).column(0))
+            uniq = pc.unique(column("file_path"))
             if len(uniq) <= _MAX_REFERENCED_FILES:
                 referenced = sorted(v for v in uniq.to_pylist() if v is not None)
         except Exception:
@@ -458,7 +506,7 @@ def _manifest_entry(
     # very wide schema doesn't bloat every manifest row — None falls
     # back to the sequence-watermark rule
     try:
-        names = [f.name for f in pq.read_schema(path)]
+        names = footer.schema.to_arrow_schema().names
         phys_cols = names if len(names) <= _COLUMNS_HARVEST_MAX else None
     except Exception:
         phys_cols = None

@@ -154,18 +154,19 @@ class LakeEngine:
         #   same views in consecutive statements
         self._meta_view_reg: set[tuple] = set()
 
-    def _cache_key(self, name: str) -> str:
+    @staticmethod
+    def _cache_key(name: str, wb: str | None) -> str:
         # the session read branch is part of table identity for reads:
         # the same name under spark.wap.branch serves the BRANCH head
         # (Iceberg's WAP read routing), so it caches under its own key —
         # branch commits bump the metadata version, which the staleness
         # probe in _cached_table already watches
-        wb = self._active_read_branch()
         return name if wb is None else f"{name}@{wb}"
 
-    def _cached_table(self, name: str, reg: dict | None = None) -> LakeTable:
-        """Version-checked cached LakeTable for SELECT paths. One registry
-        read (none when the statement passes its snapshot ``reg``) + one
+    def _cached_table(self, name: str, reg: dict, wb: str | None) -> LakeTable:
+        """Version-checked cached LakeTable for SELECT paths, under the
+        statement's registry snapshot ``reg`` and session read branch
+        ``wb`` (_active_read_branch, read once per statement). One
         listdir + one stat when unchanged. The full read is not built
         here (_cached_read): a statement whose WHERE scopes the table
         registers its pruned scan instead.
@@ -185,10 +186,8 @@ class LakeEngine:
             doc_identity,
         )
 
-        if reg is None:
-            reg = self.catalog._read_registry()
         entry = reg["tables"].get(name)
-        cache_key = self._cache_key(name)
+        cache_key = self._cache_key(name, wb)
         cached = self._table_cache.get(cache_key)
         if entry is not None and cached is not None:
             version, ident, t, _ = cached
@@ -224,15 +223,15 @@ class LakeEngine:
         }
         return t
 
-    def _cached_read(self, name: str, t: LakeTable) -> DataFrame:
-        """The full (session-branch) read of ``t``, built once per cached
-        table handle: for statements with no scoped predicate on it, and
-        as the fallback when the pruned scan fails."""
-        cached = self._table_cache.get(self._cache_key(name))
+    def _cached_read(self, name: str, t: LakeTable, wb: str | None) -> DataFrame:
+        """The full read of ``t`` on session read branch ``wb``, built
+        once per cached table handle: for statements with no scoped
+        predicate on it, and as the fallback when the pruned scan fails."""
+        cached = self._table_cache.get(self._cache_key(name, wb))
         if cached is None or cached[2] is not t:
-            return self._branch_read(t)
+            return self._branch_read(t, wb)
         if cached[3] is None:
-            cached[3] = self._branch_read(t)
+            cached[3] = self._branch_read(t, wb)
         return cached[3]
 
     def _cached_scan(
@@ -261,10 +260,11 @@ class LakeEngine:
         statement's projection: the scan is then the whole answer.
         ``plan``: the caller's scan plan for ``predicate``, if it made one.
 
-        Candidates within the driver budget come back driver-read (a
-        LocalRelation holding the rows, LakeTable._driver_read). Those
-        are rebuilt per statement and never cached: the cache holds
-        executor scans, which are plans, so it pins no table data."""
+        Candidates within the driver budget come back driver-read
+        (LakeTable._driver_read: an ArrowFrame holding the rows on the
+        driver, or a Spark filter over them). Those are rebuilt per
+        statement and never cached: the cache holds executor scans, which
+        are plans, so it pins no table data."""
         key = (name, t.metadata.version, predicate, columns)
         df = self._scan_cache.get(key)
         if df is None:
@@ -324,13 +324,12 @@ class LakeEngine:
         wb = self.spark.conf.get("spark.wap.branch", None) or None
         return None if wb == "main" else wb
 
-    def _branch_read(self, t: LakeTable) -> DataFrame:
-        """The session-branch read of ``t``: the branch head when the
-        branch exists, the table itself when it doesn't (Iceberg's
-        pre-first-write WAP shape — the branch is born at the first
-        write), and a loud error when the name is a TAG (mirrors the
-        write-side kind check)."""
-        wb = self._active_read_branch()
+    def _branch_read(self, t: LakeTable, wb: str | None) -> DataFrame:
+        """The read of ``t`` on session read branch ``wb``: the branch
+        head when the branch exists, the table itself when it doesn't
+        (Iceberg's pre-first-write WAP shape — the branch is born at the
+        first write), and a loud error when the name is a TAG (mirrors
+        the write-side kind check)."""
         if wb is None:
             return t.read()
         ref = t.metadata.refs.get(wb)
@@ -358,7 +357,7 @@ class LakeEngine:
         bare read follows it (Iceberg's WAP read routing)."""
         t = self.table(name)
         if snapshot_id is None and ref is None and as_of is None:
-            return self._branch_read(t)
+            return self._branch_read(t, self._active_read_branch())
         return t.read(snapshot_id=snapshot_id, ref=ref, as_of=as_of)
 
     # ---------------------------------------------------------------- sql
@@ -1671,7 +1670,9 @@ class LakeEngine:
         T.BooleanType, T.DecimalType,
     )
 
-    def _metadata_aggregates(self, items_text: str, ident: str, reg: dict):
+    def _metadata_aggregates(
+        self, items_text: str, ident: str, reg: dict, wb: str | None
+    ):
         """Iceberg's aggregate pushdown (SparkScanBuilder.pushAggregation)
         re-expressed at the facade: an unfiltered aggregate-only SELECT of
         COUNT(*) / COUNT(col) / MIN(col) / MAX(col) answers from manifest
@@ -1698,12 +1699,12 @@ class LakeEngine:
         Resolution goes through the version-checked SELECT cache, so
         repeated aggregate probes cost one registry read, not a
         metadata re-load per statement."""
-        if self._active_read_branch() is not None:
+        if wb is not None:
             # wap.branch reads serve the BRANCH head; this fold reads the
             # main manifest — defer to the general (branch-routed) path
             return None
         try:
-            t = self._cached_table(self._strip_catalog(ident), reg)
+            t = self._cached_table(self._strip_catalog(ident), reg, wb)
         except Exception:
             return None
         parsed: list[tuple[str, str, str | None]] = []
@@ -1811,21 +1812,22 @@ class LakeEngine:
     # select-list words Spark reads as something other than a column
     _NOT_SELECT_COLUMNS = _NOT_COLUMNS | {"all", "distinct", "from", "select", "where"}
 
-    def _point_lookup(self, stmt: str, reg: dict) -> DataFrame | None:
+    def _point_lookup(self, stmt: str, reg: dict, wb: str | None) -> DataFrame | None:
         """``SELECT <* | col, …> FROM <table> WHERE <pred>`` as the table's
         projected scan (LakeTable.scan with ``columns``), or None for the
         general path. Taken only when the answer is exactly what spark.sql
-        would compute over the registered scan: no session read branch, a
-        registry table (not a view, a metadata table or time travel),
-        schema columns spelled exactly, listed once and unambiguous
-        case-insensitively, and a WHERE the scan plan pushes
+        would compute over the registered scan: no session read branch
+        (``wb`` is None), a registry table (not a view, a metadata table
+        or time travel), schema columns spelled exactly, listed once and
+        unambiguous case-insensitively, and a WHERE the scan plan pushes
         whole (deterministic literal comparisons, which the scan already
         applies in pyarrow). So the statement registers no temp view and
         runs no SQL parse, no scan estimate and no codegen: Spark would
         re-apply the same comparisons to the same matches, compiling the
-        filter once per distinct literal."""
+        filter once per distinct literal. A driver-read answer is the
+        scan's ArrowFrame, whose collect() never enters the JVM."""
         m = self._POINT.match(stmt)
-        if m is None or self._active_read_branch() is not None:
+        if m is None or wb is not None:
             return None
         name = self._strip_catalog(m.group("tbl"))
         if name not in reg["tables"] or name in reg.get("views", {}):
@@ -1834,7 +1836,7 @@ class LakeEngine:
         if row_filter_columns(pred) is None:
             return None  # outside the row filter's grammar: plan nothing
         try:
-            t = self._cached_table(name, reg)
+            t = self._cached_table(name, reg, wb)
             plan = t._scan_plan(t.metadata.current_snapshot(), pred)
         except Exception:
             return None
@@ -1870,18 +1872,20 @@ class LakeEngine:
         point lookup whose WHERE translates to a pyarrow mask
         (_point_lookup).
         """
-        # ONE registry snapshot per statement — the rewrites and table
-        # loads below used to each re-read catalog.json
+        # ONE registry snapshot and one read of the session read branch
+        # per statement — the rewrites, table loads and cache keys below
+        # used to each re-read catalog.json and spark.wap.branch
         reg = self.catalog._read_registry()
+        wb = self._active_read_branch()
         if _depth == 0:
             m = self._AGG_ONLY.match(stmt)
             if m:
                 fast = self._metadata_aggregates(
-                    m.group("items"), m.group("tbl"), reg
+                    m.group("items"), m.group("tbl"), reg, wb
                 )
                 if fast is not None:
                     return fast
-            fast = self._point_lookup(stmt, reg)
+            fast = self._point_lookup(stmt, reg, wb)
             if fast is not None:
                 return fast
         table_names = sorted(reg["tables"])
@@ -1945,7 +1949,7 @@ class LakeEngine:
         )
 
         loaded: dict[str, LakeTable] = {
-            name: self._cached_table(name, reg) for name in needed
+            name: self._cached_table(name, reg, wb) for name in needed
         }
         rewritten = "".join(segments)
         try:
@@ -1963,7 +1967,7 @@ class LakeEngine:
         # the pruned-scan and estimate caches plan against the main head
         # (t.scan), so substituting them would swap in main's files —
         # keep the branch read as-is (correct first, fast later)
-        on_branch = self._active_read_branch() is not None
+        on_branch = wb is not None
         for name, views in needed.items():
             t = loaded[name]
             pred = None if on_branch else predicates.get(name.replace(".", "__"))
@@ -1972,7 +1976,7 @@ class LakeEngine:
             # Spark re-applies the statement's WHERE above the view
             df = None if pred is None else self._cached_scan(name, t, pred)
             if df is None:
-                df = self._cached_read(name, t)
+                df = self._cached_read(name, t, wb)
             if est is not None and 0 < est["bytes"] <= _broadcast_threshold(
                 self.spark, None
             ):

@@ -36,6 +36,7 @@ from demo_iceberg_permanent_delete_spark.lake.datafiles import (
     collect_if_small,
     fits_driver,
     fits_driver_reads,
+    footer_schema,
     write_arrow_file,
     write_data_files,
 )
@@ -214,19 +215,13 @@ def _local_frame(
 
 def _footer_pinned_reader(spark: SparkSession, path: str):
     """``spark.read`` pre-pinned to the file's OWN schema, read driver-side
-    from the parquet footer (pyarrow, no data scan) — a bare
-    ``read.parquet`` runs a footer-inference Spark JOB per call, which on
-    eq-delete application means one job per delete file per read
-    construction. prefer_timestamp_ntz mirrors Spark's own parquet
-    inference (isAdjustedToUTC=false → TimestampNTZ). Falls back to the
-    inference read on any surprise."""
+    from the parquet footer (datafiles.footer_schema: pyarrow, no data
+    scan) — a bare ``read.parquet`` runs a footer-inference Spark JOB per
+    call, which on eq-delete application means one job per delete file
+    per read construction. Falls back to the inference read on any
+    surprise."""
     try:
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        return spark.read.schema(
-            from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
-        )
+        return spark.read.schema(footer_schema(path))
     except Exception:
         return spark.read
 
@@ -1070,22 +1065,26 @@ class LakeTable:
         predicate: str | Column | None = None,
         columns: Sequence[str] | None = None,
     ) -> DataFrame | None:
-        """_driver_read_arrow's table as ``createDataFrame(arrow_table)``,
-        a LocalRelation, or None: Spark folds a statement's filter and
-        projection over it and collects the result with no job, where the
-        parquet scan plus the delete anti-join costs one or two per
-        statement.
+        """_driver_read_arrow's table as a DataFrame, or None: Spark folds
+        a statement's filter and projection over it and collects the
+        result with no job, where the parquet scan plus the delete
+        anti-join costs one or two per statement.
 
         ``predicate``: the frame holds only the rows it keeps. When the
         plan pushes it (pruning.row_filter translates it), pyarrow filters
-        the rows before createDataFrame, so the LocalRelation holds just
-        the matches rather than every row of the candidate files;
-        otherwise Spark filters the LocalRelation.
+        the rows; otherwise Spark filters the table's rows, shipped to
+        the JVM as a LocalRelation.
 
         ``columns``: the frame holds only those, in that order. With a
         pushed predicate, each file is read for them and the predicate's
         columns only, and pyarrow projects the matches; otherwise every
-        column is read and Spark projects after its filter."""
+        column is read and Spark projects after its filter.
+
+        When pyarrow has made the final rows (the predicate is pushed, or
+        there is none) the frame is an ArrowFrame: collect(), count() and
+        toArrow() answer from the table on the driver, and the JVM frame
+        is built only when a caller composes it."""
+        from demo_iceberg_permanent_delete_spark.lake.arrowframe import ArrowFrame
         from demo_iceberg_permanent_delete_spark.lake.pruning import row_filter
 
         masked = isinstance(predicate, str) and plan.pushed is not None
@@ -1097,20 +1096,23 @@ class LakeTable:
 
         fields = [f for f in plan.schema.fields if read is None or f.name in read]
         mask = row_filter(predicate, table) if masked else None
+        final = mask is not None or predicate is None
         if mask is not None:
             table = table.filter(mask)
-            if columns is not None:
-                by_name = {f.name: f for f in fields}
-                fields = [by_name[c] for c in columns]
-                table = table.select(list(columns))
+        if final and columns is not None:
+            by_name = {f.name: f for f in fields}
+            fields = [by_name[c] for c in columns]
+            table = table.select(list(columns))
+        df = ArrowFrame(self.spark, table, T.StructType(fields))
+        if final and df.served:
+            return df
         try:
-            df = self.spark.createDataFrame(table, T.StructType(fields))
+            df._jdf  # built now: a conversion failure takes the executor read
         except (pa.ArrowException, TypeError, ValueError):
             # a conversion Spark's Arrow bridge does not do
             return None
-        if mask is None:
-            if predicate is not None:
-                df = df.filter(self._as_column(predicate))
+        if not final:
+            df = df.filter(self._as_column(predicate))
             if columns is not None:
                 df = df.select(*columns)
         return df
@@ -1666,13 +1668,16 @@ class LakeTable:
         the predicate isn't a provably-prunable string.
 
         Candidate files within the driver budget are read on the driver
-        (_driver_read) and come back as a LocalRelation, which Spark
-        filters, projects and collects without a job; past the budget
-        the executor read (parquet scan + delete anti-join) is built.
-        Both read the same scan plan. The driver read filters in pyarrow
-        when the plan pushes the predicate (pruning.row_filter translates
-        it), so its LocalRelation then holds the matches rather than
-        whole candidate files.
+        (_driver_read); past the budget the executor read (parquet scan +
+        delete anti-join) is built. Both read the same scan plan. The
+        driver read filters in pyarrow when the plan pushes the predicate
+        (pruning.row_filter translates it) and then comes back as an
+        ArrowFrame holding just the matches: collect() and count() answer
+        from it on the driver, and the JVM sees the rows only when a
+        caller composes the frame. A predicate the plan does not push is
+        applied by Spark to the candidate files' rows, shipped to the JVM
+        as a LocalRelation, which Spark filters and collects without a
+        job.
 
         ``columns`` projects the result to those schema columns, in that
         order. A driver read whose predicate is pushed then reads each

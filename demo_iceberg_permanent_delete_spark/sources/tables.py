@@ -10,7 +10,8 @@ notebooks/iceberg_pii_deletion_demo.py:207 is DataFrame calls).
 Scans stay declarative (``spark.read.parquet``) so Catalyst gets
 predicate pushdown + column pruning for free — at 100 TB the parquet
 footer min/max stats and column projection are what keep the scan
-volume sane.
+volume sane. Each read is pinned to the schema Spark would infer, read
+from the file's footer, so a load runs no schema-inference job.
 """
 
 from __future__ import annotations
@@ -41,6 +42,24 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` pinned to the schema Spark would infer,
+    read from the footer on every call (datafiles.footer_schema): the
+    inferring read runs a Spark job per load. Spark infers when the
+    footer has a type the Arrow bridge does not map."""
+    import pyarrow as pa
+
+    from demo_iceberg_permanent_delete_spark.lake.datafiles import footer_schema
+
+    try:
+        schema = footer_schema(path)
+    except (pa.ArrowException, TypeError, ValueError, OSError):
+        # an unmapped type, or a footer pyarrow cannot read: Spark's
+        # inferring read decides (and reports what it rejects)
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -55,12 +74,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # DuckDB's ns→µs handling) or plain TIMESTAMP(MICROS) NTZ. Detect
         # from the decoded dtype and normalize to a session-UTC timestamp.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read(spark, table_path(sf_dir, name))
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read(spark, table_path(sf_dir, name))
 
 
 def load_tables(

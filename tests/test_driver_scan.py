@@ -488,9 +488,10 @@ def test_schema_parse_is_memoised_per_timestamp_type(spark, tmp_path, monkeypatc
 
 def test_facade_lookup_hands_spark_only_the_matches(spark, tmp_path, monkeypatch):
     """A lookup whose WHERE the row filter translates is filtered in
-    pyarrow before createDataFrame: the LocalRelation holds the matching
-    row, not the candidate file's 100. A predicate it declines still
-    hands over the whole candidate file."""
+    pyarrow: its collect() hands Spark nothing, and composing the frame
+    ships the matching row as the LocalRelation, not the candidate
+    file's 100. A predicate it declines still hands over the whole
+    candidate file."""
     eng = LakeEngine(spark, str(tmp_path / "wh"))
     _erase_table(spark, str(tmp_path / "wh"))
     sizes = []
@@ -501,7 +502,10 @@ def test_facade_lookup_hands_spark_only_the_matches(spark, tmp_path, monkeypatch
         return real_frame(data, *args, **kwargs)
 
     monkeypatch.setattr(spark, "createDataFrame", frame_spy)
-    rows = jobless(spark, lambda: eng.sql("SELECT a FROM default.t WHERE k = 151").collect())
-    assert [r["a"] for r in rows] == ["a151"] and sizes == [1]
+    df = eng.sql("SELECT a FROM default.t WHERE k = 151")
+    rows = jobless(spark, df.collect)
+    assert [r["a"] for r in rows] == ["a151"] and sizes == []
+    assert [r["a"] for r in df.filter("a IS NOT NULL").collect()] == ["a151"]
+    assert sizes == [1]
     rows = eng.sql("SELECT a FROM default.t WHERE k + 0 = 151 AND k >= 100").collect()
     assert [r["a"] for r in rows] == ["a151"] and sizes == [1, 100]

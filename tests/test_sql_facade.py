@@ -2020,8 +2020,8 @@ def _spy_point_lookup(monkeypatch):
     taken = []
     real = LakeEngine._point_lookup
 
-    def spy(self, stmt, reg):
-        out = real(self, stmt, reg)
+    def spy(self, *args):
+        out = real(self, *args)
         taken.append(out is not None)
         return out
 
@@ -2173,3 +2173,42 @@ def test_point_lookup_is_one_projected_scan(spark, tmp_path, monkeypatch):
     assert calls == []
     assert reads == [{"n", "k"}] * 3
     assert len(registry_reads) == 3
+
+
+def test_point_lookup_collect_stays_on_the_driver(spark, tmp_path, monkeypatch):
+    """A fast-path lookup plus collect() never ships its rows to the JVM:
+    at most 3 py4j calls (spark.wap.branch, read once per statement, and
+    the session's spark.sql.timestampType, which LakeTable.schema() parses
+    the stored DDL under: SQLConf.get and getConfString), no Spark job and
+    no codegen compile, on both delete layouts and for a miss."""
+    from py4j.clientserver import JavaClient
+
+    eng = _lookup_tables(spark, tmp_path)
+    eng.sql("SELECT n FROM default.dv WHERE k = 33").collect()  # warm
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+    sent = []
+    real = JavaClient.send_command
+
+    def spy(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):  # a GC'd proxy's release
+            sent.append(command)
+        return real(self, command, *args, **kwargs)
+
+    before = compiled.getCount()
+    for stmt, want in (
+        ("SELECT n, k FROM default.dv WHERE k = 34", [(340, 34)]),
+        ("SELECT * FROM default.pos WHERE k = 51", None),
+        ("SELECT n FROM default.dv WHERE k = 56", []),
+    ):
+        def lookup(stmt=stmt):
+            with monkeypatch.context() as m:
+                m.setattr(JavaClient, "send_command", spy)
+                return eng.sql(stmt).collect()
+
+        sent.clear()
+        rows = jobless(spark, lookup)
+        assert len(sent) <= 3, (stmt, sent)
+        assert want is None and len(rows) == 1 or [tuple(r) for r in rows] == want
+    assert compiled.getCount() == before
