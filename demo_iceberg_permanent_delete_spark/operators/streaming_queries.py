@@ -7,9 +7,17 @@ are fully deterministic and DuckDB-oracle-checkable — a stronger gate than
 rows-only. (The late-data/watermark semantics that CAN'T be expressed in
 batch SQL are exercised in tests/test_streaming.py with multi-batch
 triggers.)
+
+At these sizes a bounded run's cost is fixed per micro-batch and per state
+partition, not per row. Each query sizes its state partitions from the
+rows its source files declare (:func:`state_partitions_for`), and the
+append-mode composite runs without the trailing no-data batch, whose only
+work would be evicting state (``run_available_now_many``).
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,33 +25,53 @@ from pyspark.sql import functions as F
 from demo_iceberg_permanent_delete_spark.registry import query
 from demo_iceberg_permanent_delete_spark.sources.tables import table_path
 from demo_iceberg_permanent_delete_spark.streaming.pipelines import (
+    interval_join_stream,
+    probe_source,
     read_event_stream,
     run_available_now,
+    run_available_now_many,
     session_window_stream,
-    interval_join_stream,
     streaming_dedup,
     tumbling_count_stream,
     user_profile_stream,
 )
 
-# Stateful-operator partition count for these bounded contract runs: each
-# state partition costs a per-batch state-store commit (~50-200 ms of delta
-# file + fsync), so 32 partitions of fixed overhead dwarf the ≤100k-row
-# state itself (measured 7.1s → 1.9s on streaming_dedup at sf0.1). On an
-# unbounded production stream this would be sized to state volume instead
-# (see run_available_now docstring).
-_STATE_PARTITIONS = 4
-# applyInPandasWithState (the user-profile entry) prefers MORE state
-# partitions: its per-batch cost is the Python worker round-trip per
-# partition's groups, which parallelizes, where the JVM stateful ops'
-# cost is the per-partition state-store commit, which doesn't. Swept
-# round 12 (min-of-3, alternating): dedup+ivjoin 3.79 s @8 -> 2.57 s @4,
-# tumbling 1.03 -> 0.89, session 1.21 -> 1.10, but user_profiles
-# 1.78/2.33 @8 vs 2.48/3.12 @4 in both reps — so it keeps 8. RocksDB
-# provider re-measured and still loses at this scale (4.27 s on the
-# dedup composite). Full A/B table in BASELINE.md. Production sizing
-# unchanged: state volume, not this bounded-run constant.
-_PROFILE_STATE_PARTITIONS = 8
+ROWS_PER_STATE_PARTITION = 25_000
+
+
+def state_partitions_for(path: str) -> int:
+    """State partitions for a bounded run over ``path`` (a parquet file, a
+    directory or a glob): one per ``ROWS_PER_STATE_PARTITION`` rows the
+    source's footers declare, at least one.
+
+    Each state partition costs a per-batch state-store commit (~50-200 ms
+    of delta file + fsync), so many partitions of fixed overhead dwarf a
+    small bounded state (32 → 8 partitions took the sf0.1 dedup from
+    7.1 s to 1.9 s). ``applyInPandasWithState`` (the user-profile entry)
+    pays a Python worker round trip per partition instead, which
+    parallelizes, so it gains from more partitions on larger inputs. Two
+    hand-tuned constants used to encode this: 4 for the JVM stateful
+    operators and 8 for the profile operator (round-12 sweep: dedup +
+    interval join 3.79 s at 8 → 2.57 s at 4, tumbling 1.03 → 0.89,
+    session 1.21 → 1.10, user profiles 1.78 s at 8 vs 2.48 s at 4).
+
+    The rule follows the input, not the host's core count. Sweep, warm,
+    4-core host, trailing no-data batch already skipped for the dedup
+    composite; wall/CPU s at 1/2/4/8 partitions:
+
+    - sf0.01 (10k rows): dedup composite 1.76/2.24, 1.91/2.29, 2.17/2.87,
+      2.86/4.30; user profiles 1.64/2.05, 1.35/2.19, 1.28/3.05, 1.90/4.80;
+      session and tumbling windows cheapest at 1 (CPU 1.02 and 1.20).
+    - sf0.1 (100k rows): dedup 3.01/4.76, 2.74/5.50, 2.99/6.29,
+      3.43/6.37; user profiles 8.17/8.79, 4.91/9.43, 3.40/10.20,
+      3.69/11.09; tumbling cheapest at 4 (1.31/2.11), session at 2-4.
+
+    25k rows per partition gives 1 at sf0.01 and 4 at sf0.1. RocksDB was
+    measured and still loses at this scale (4.27 s on the dedup
+    composite, BASELINE.md). An unbounded production stream sizes its
+    state partitions from state volume instead.
+    """
+    return max(1, math.ceil(probe_source(path).rows / ROWS_PER_STATE_PARTITION))
 
 
 @query(
@@ -62,11 +90,11 @@ _PROFILE_STATE_PARTITIONS = 8
     """,
 )
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = read_event_stream(spark, table_path(sf_dir, "events"))
+    path = table_path(sf_dir, "events")
     return run_available_now(
-        tumbling_count_stream(stream),
+        tumbling_count_stream(read_event_stream(spark, path)),
         output_mode="complete",
-        state_partitions=_STATE_PARTITIONS,
+        state_partitions=state_partitions_for(path),
     )
 
 
@@ -102,11 +130,11 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = read_event_stream(spark, table_path(sf_dir, "events"))
+    path = table_path(sf_dir, "events")
     return run_available_now(
-        session_window_stream(stream),
+        session_window_stream(read_event_stream(spark, path)),
         output_mode="complete",
-        state_partitions=_STATE_PARTITIONS,
+        state_partitions=state_partitions_for(path),
     )
 
 
@@ -136,11 +164,11 @@ def streaming_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState, update mode): the
     per-user running profile. One bounded batch ⇒ each user emits exactly
     one row, equal to the batch aggregate the oracle computes."""
-    stream = read_event_stream(spark, table_path(sf_dir, "events"))
+    path = table_path(sf_dir, "events")
     return run_available_now(
-        user_profile_stream(stream),
+        user_profile_stream(read_event_stream(spark, path)),
         output_mode="update",
-        state_partitions=_PROFILE_STATE_PARTITIONS,
+        state_partitions=state_partitions_for(path),
     )
 
 
@@ -183,17 +211,13 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type") == "purchase"
     )
     activity = read_event_stream(spark, path)
-    from demo_iceberg_permanent_delete_spark.streaming.pipelines import (
-        run_available_now_many,
-    )
-
     dedup_sink, ivjoin_sink = run_available_now_many(
         [
             streaming_dedup(read_event_stream(spark, path)),
             interval_join_stream(purchases, activity),
         ],
         output_modes="append",
-        state_partitions=_STATE_PARTITIONS,
+        state_partitions=state_partitions_for(path),
     )
     deduped = dedup_sink.select(
         F.lit("dedup").alias("part"),

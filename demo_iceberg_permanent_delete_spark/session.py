@@ -81,33 +81,37 @@ class SessionConfOverride:
     mid-write). Depth and saved value are kept per session: a second
     SparkSession entering while the first holds the key still gets the
     conf set on its own session. An overlapping holder that wants a
-    DIFFERENT value cannot share one session conf and is refused."""
+    DIFFERENT value cannot share one session conf: it is refused, or
+    waits for the holders to leave when it asks to."""
 
     def __init__(self, key: str) -> None:
         self.key = key
-        self._lock = threading.Lock()
+        self._cond = threading.Condition()
         # session -> [depth, value, prior]; weak keys, so a stopped
         # session's entry is collected
         self._state: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
-    def enter(self, spark: SparkSession, value: str) -> None:
-        with self._lock:
-            st = self._state.get(spark)
+    def enter(self, spark: SparkSession, value: str, *, wait: bool = False) -> None:
+        """Hold the override at ``value``. An overlapping holder of another
+        value is refused with RuntimeError, or with ``wait`` waited out."""
+        with self._cond:
+            while (st := self._state.get(spark)) is not None and st[1] != value:
+                if not wait:
+                    raise RuntimeError(
+                        f"overlapping overrides of {self.key} on one session "
+                        f"requested different values ({st[1]} vs {value}); "
+                        "stagger them or use one value"
+                    )
+                self._cond.wait()
             if st is None:
                 prior = spark.conf.get(self.key, None)
                 if prior != value:
                     spark.conf.set(self.key, value)
                 st = self._state[spark] = [0, value, prior]
-            elif st[1] != value:
-                raise RuntimeError(
-                    f"overlapping overrides of {self.key} on one session "
-                    f"requested different values ({st[1]} vs {value}); "
-                    "stagger them or use one value"
-                )
             st[0] += 1
 
     def leave(self, spark: SparkSession) -> None:
-        with self._lock:
+        with self._cond:
             st = self._state[spark]
             st[0] -= 1
             if st[0] == 0:
@@ -117,10 +121,11 @@ class SessionConfOverride:
                     spark.conf.unset(self.key)
                 elif prior != value:
                     spark.conf.set(self.key, prior)
+                self._cond.notify_all()
 
     @contextlib.contextmanager
-    def __call__(self, spark: SparkSession, value: str):
-        self.enter(spark, value)
+    def __call__(self, spark: SparkSession, value: str, *, wait: bool = False):
+        self.enter(spark, value, wait=wait)
         try:
             yield
         finally:

@@ -21,11 +21,14 @@ Scale notes (100 TB/day story):
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import tempfile
 import uuid
+from typing import NamedTuple
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,28 +52,39 @@ EVENT_SCHEMA_MICROS = T.StructType(
 )
 
 
-def _ts_stored_as_nanos(path: str) -> bool:
-    """Metadata-only probe of one parquet footer: is ``ts`` physical nanos?
+class SourceProbe(NamedTuple):
+    ts_is_nanos: bool
+    rows: int
 
-    The streaming file source needs a declared schema up front; testdata has
-    shipped with both TIMESTAMP(NANOS) (readable only as raw long under
-    ``nanosAsLong``) and TIMESTAMP(MICROS). One footer read settles it.
+
+def probe_source(path: str) -> SourceProbe:
+    """Metadata-only probe of the parquet footers a file stream will read.
+
+    ``ts_is_nanos``: is ``ts`` physical nanos? The streaming file source
+    needs a declared schema up front; testdata has shipped with both
+    TIMESTAMP(NANOS) (readable only as raw long under ``nanosAsLong``) and
+    TIMESTAMP(MICROS). The first file's footer settles it.
+
+    ``rows``: the row count all footers declare, what a bounded run of the
+    source will feed its stateful operators (0 when nothing matches).
     """
     import glob as globmod
 
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        pattern = os.path.join(path, "**", "*.parquet")
-    elif os.path.isfile(path):
-        pattern = path
-    else:  # glob input (the tests stream `dir/*/*.parquet`)
-        pattern = path
-    matches = sorted(globmod.glob(pattern, recursive=True))
-    if not matches:
-        return False
-    field = pq.read_schema(matches[0]).field("ts")
-    return str(field.type) in ("timestamp[ns]", "int64")
+    # a directory is read recursively; a file or a glob (the tests stream
+    # `dir/*/*.parquet`) matches itself
+    pattern = os.path.join(path, "**", "*.parquet") if os.path.isdir(path) else path
+    footers = [pq.read_metadata(f) for f in sorted(globmod.glob(pattern, recursive=True))]
+    if not footers:
+        return SourceProbe(False, 0)
+    schema = footers[0].schema.to_arrow_schema()
+    ts_is_nanos = "ts" in schema.names and str(schema.field("ts").type) in (
+        "timestamp[ns]",
+        "int64",
+    )
+    return SourceProbe(ts_is_nanos, sum(f.num_rows for f in footers))
+
 
 WATERMARK = "10 minutes"
 WINDOW = "10 minutes"
@@ -89,7 +103,7 @@ def read_event_stream(
     batch loader (sources/tables.py).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_is_nanos = _ts_stored_as_nanos(path)
+    ts_is_nanos = probe_source(path).ts_is_nanos
     schema = EVENT_SCHEMA if ts_is_nanos else EVENT_SCHEMA_MICROS
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -592,10 +606,11 @@ def run_available_now(
     (``spark.sql.shuffle.partitions`` captured at query start — Spark pins
     it into the checkpoint, so it must be chosen *before* the first batch).
     Every state partition pays a per-batch state-store commit (delta file +
-    fsync); measured at sf0.1 this fixed cost dominates: 32 partitions →
-    7.1s, 8 → 1.9s for the same 100k-row dedup. Size it to expected state
-    volume: thousands on a real cluster, single digits for a bounded local
-    run. ``None`` keeps the session's setting."""
+    fsync), a fixed cost that dwarfs the work on a small bounded input:
+    size it from the rows the run will read, as the registered streaming
+    queries do (``operators.streaming_queries.state_partitions_for``), and
+    on an unbounded stream from the state volume. An explicit value is
+    used as given; ``None`` keeps the session's setting."""
     return run_available_now_many(
         [stream_df],
         output_modes=[output_mode],
@@ -609,6 +624,63 @@ def run_available_now(
 # session share the override, and a conflicting value is refused rather
 # than silently pinning the wrong state partitioning.
 _shuffle_partitions = SessionConfOverride("spark.sql.shuffle.partitions")
+# Held "false" by calls whose trailing no-data batch could emit nothing,
+# and Spark's default "true" by every other call, so that an overlapping
+# call never switches off the batch that closes another's windows.
+_no_data_batches = SessionConfOverride("spark.sql.streaming.noDataMicroBatches.enabled")
+
+# Analyzed-plan nodes that keep no state across micro-batches.
+_STATELESS_NODES = frozenset(
+    {
+        "EventTimeWatermark",
+        "Filter",
+        "Project",
+        "StreamingRelation",
+        "StreamingRelationV2",
+        "SubqueryAlias",
+        "Union",
+    }
+)
+# Stateful nodes that emit a row in the batch its input arrives in: their
+# state only suppresses later duplicates or finds later partners.
+_EMIT_ON_ARRIVAL_NODES = frozenset({"Deduplicate", "DeduplicateWithinWatermark"})
+
+
+def _emits_on_arrival(stream_df: DataFrame) -> bool:
+    """Whether an append-mode run of ``stream_df`` emits every row in the
+    batch its input arrives in, so that the no-data batch Spark appends
+    after the last input batch only evicts state and emits nothing.
+
+    True when each node of the analyzed plan is stateless, a dedup, or an
+    inner join (a stream-stream inner join emits a pair as soon as both
+    rows have arrived). Aggregations (windows, session windows), outer
+    joins, ``*WithState`` operators (timeouts fire in a no-data batch) and
+    any node not named here answer False."""
+    try:
+        nodes = json.loads(stream_df._jdf.queryExecution().analyzed().toJSON())
+    except (Py4JError, ValueError):  # a plan Spark cannot serialize
+        return False
+    for node in nodes:
+        cls = node["class"].rsplit(".", 1)[-1]
+        if cls == "Join":
+            join_type = (node.get("joinType") or {}).get("object", "")
+            if join_type.rsplit(".", 1)[-1] != "Inner$":
+                return False
+        elif cls not in _STATELESS_NODES and cls not in _EMIT_ON_ARRIVAL_NODES:
+            return False
+    return True
+
+
+def _hold_no_data_batches(spark: SparkSession, needed: bool) -> None:
+    """Enter ``_no_data_batches`` for one call's queries: at Spark's
+    default when the trailing no-data batch may emit rows, waiting out an
+    overlapping call that switched it off; at "false" when it cannot,
+    unless an overlapping call holds the default, which this call then
+    shares."""
+    try:
+        _no_data_batches.enter(spark, "true" if needed else "false", wait=needed)
+    except RuntimeError:
+        _no_data_batches.enter(spark, "true", wait=True)
 
 
 def run_available_now_many(
@@ -629,10 +701,18 @@ def run_available_now_many(
     the guide-§2.6 shape. Results are identical to running them one at a
     time: the queries share nothing but the session.
 
-    The shuffle-partition override is applied ONCE around starting all
-    queries and restored after the LAST one terminates (Spark pins the
-    setting into each checkpoint at first-batch planning): per-query
-    set/restore would race when the queries overlap."""
+    An append-mode run ends with a no-data batch that advances the
+    watermark, closing windows and firing timeouts. When every stream is
+    in append mode and emits on arrival (:func:`_emits_on_arrival`), that
+    batch can only evict state, so the call runs without it: one batch
+    and one state-store commit per partition fewer per query, identical
+    rows. Any other call keeps it.
+
+    Both conf overrides (shuffle partitions, no-data batches) are applied
+    ONCE around starting all queries and restored after the LAST one
+    terminates (Spark reads them at first-batch planning): per-query
+    set/restore would race when the queries overlap. Each memory-sink view
+    is dropped once its frame is resolved; the frame keeps the rows."""
     if isinstance(output_modes, str):
         output_modes = [output_modes] * len(stream_dfs)
     if len(output_modes) != len(stream_dfs):
@@ -640,18 +720,19 @@ def run_available_now_many(
     if not stream_dfs:
         return []
     spark = stream_dfs[0].sparkSession
+    trailing_needed = not (
+        all(mode == "append" for mode in output_modes)
+        and all(_emits_on_arrival(df) for df in stream_dfs)
+    )
     names = [f"sink_{uuid.uuid4().hex[:12]}" for _ in stream_dfs]
     ckpt_roots = [tempfile.mkdtemp(prefix="ckpt_") for _ in stream_dfs]
-    # Spark reads the shuffle-partition count at first-batch planning,
-    # not at .start() — keep it set until every bounded query terminates
-    override = (
-        contextlib.nullcontext()
-        if state_partitions is None
-        else _shuffle_partitions(spark, str(state_partitions))
-    )
     queries = []
     try:
-        with override:
+        with contextlib.ExitStack() as overrides:
+            if state_partitions is not None:
+                overrides.enter_context(_shuffle_partitions(spark, str(state_partitions)))
+            _hold_no_data_batches(spark, trailing_needed)
+            overrides.callback(_no_data_batches.leave, spark)
             for df, mode, name, root in zip(
                 stream_dfs, output_modes, names, ckpt_roots
             ):
@@ -673,10 +754,13 @@ def run_available_now_many(
                 for q in queries:
                     if q.isActive:
                         q.stop()
+        return [spark.table(name) for name in names]
     finally:
-        # the memory-sink tables are already materialized; the single-use
-        # checkpoints are dead weight (8 MB of state-store deltas per run
-        # that accumulate across repeated bench/test invocations)
+        # the single-use checkpoints are dead weight (8 MB of state-store
+        # deltas per run that accumulate across repeated bench/test
+        # invocations), and each sink view would hold its run's rows for
+        # the life of the session
         for root in ckpt_roots:
             shutil.rmtree(root, ignore_errors=True)
-    return [spark.table(name) for name in names]
+        for name in names:
+            spark.catalog.dropTempView(name)
