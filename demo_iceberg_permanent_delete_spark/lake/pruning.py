@@ -9,24 +9,34 @@ At 100 TB this is the difference between scanning 3 files and 800,000: the
 parquet row-group stats only help after a file is opened and its footer
 fetched; manifest pruning avoids the open entirely.
 
-Scope (sound, conservative): AND/OR trees (with parentheses, SQL
-precedence: AND binds tighter) over simple comparisons ``col <op>
-literal`` (op ∈ =, <, <=, >, >=), BETWEEN, literal IN-lists, and
-IS [NOT] NULL are evaluated against the stats — AND prunes when any
-branch is unsatisfiable, OR only when EVERY branch is (so
-``date = A OR date = B`` keeps exactly the A-files ∪ B-files).
-Anything else (NOT, functions, nested expressions) makes that leaf
-non-pruning. A file is skipped only when the tree is provably
-unsatisfiable on the file's [min, max] / null-count stats — missing
-stats keep the file.
+One parser reads each predicate text once (``_compiled``, cached per
+text) into an AND/OR tree, and every consumer reads that tree: the
+scalar ``can_match`` (the reference), the vectorized candidate mask, the
+pyarrow row mask (``row_filter``) and the bucket projection
+(transforms.bucket_conjuncts).
+
+Grammar: OR binds looser than AND, parentheses group, and BETWEEN's
+inner AND belongs to the BETWEEN. A leaf is ``col op literal`` (op ∈ =,
+<, <=, >, >=), ``col BETWEEN lit AND lit``, ``col IN (lit, …)`` or
+``col IS [NOT] NULL``; literals are integers, plain decimals, strings
+and ``DATE '…'`` / ``TIMESTAMP '…'``. A string literal is read only in a
+form Spark reads the same way: single-quoted, ``''`` standing for ``'``,
+no backslash. Any other run of tokens between top-level AND/OR (NOT,
+functions, arithmetic, ``<>``, quoted or qualified names, escaped or
+adjacent strings) is an opaque leaf, and a predicate that does not
+tokenize or parse (a dangling AND/OR, an unbalanced parenthesis, an
+unterminated quote, a comment) is opaque as a whole. Pruning keeps what
+an opaque leaf touches; ``row_filter`` declines the whole predicate.
+
+Pruning is sound and conservative: AND prunes when any branch is
+unsatisfiable, OR only when EVERY branch is (so ``date = A OR date = B``
+keeps exactly the A-files ∪ B-files). A file is skipped only when the
+tree is provably unsatisfiable on the file's [min, max] / null-count
+stats — missing stats keep the file.
 Equality/range semantics over strings use lexicographic order, matching
 parquet footer stats. Null-count stats additionally prune comparisons on
 all-NULL columns (parquet leaves min/max absent there, so bounds alone
 can't).
-
-``row_filter`` (end of module) evaluates a stricter subset of the same
-grammar row by row, as a pyarrow mask that must agree exactly with
-Spark's filter: the driver-side MOR erase and scans use it.
 """
 
 from __future__ import annotations
@@ -42,63 +52,6 @@ from demo_iceberg_permanent_delete_spark.lake.metadata import (
     path_spellings,
     plain_path,
 )
-
-_CMP_RE = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][\w]*)\s*(?P<op>>=|<=|=|<|>)\s*(?P<lit>.+?)\s*$"
-)
-_BETWEEN_RE = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][\w]*)\s+BETWEEN\s+(?P<lo>.+?)\s+AND\s+(?P<hi>.+?)\s*$",
-    re.I,
-)
-_IN_RE = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][\w]*)\s+IN\s*\((?P<items>[^()]*)\)\s*$",
-    re.I,
-)
-_NULL_RE = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][\w]*)\s+IS\s+(?P<neg>NOT\s+)?NULL\s*$",
-    re.I,
-)
-
-
-def _split_in_items(items: str) -> list[str] | None:
-    """Split an IN-list body on commas outside quotes; None if malformed."""
-    parts, cur, quote = [], [], False
-    for ch in items:
-        if quote:
-            cur.append(ch)
-            if ch == "'":
-                quote = False
-        elif ch == "'":
-            quote = True
-            cur.append(ch)
-        elif ch == ",":
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if quote:
-        return None
-    parts.append("".join(cur))
-    return parts
-
-
-def _parse_literal(text: str) -> Any | None:
-    text = text.strip()
-    # DATE '…' / TIMESTAMP '…' typed literals → inner string (temporal
-    # coercion happens in _coerce, alongside the stat side).
-    # A lone quoted literal only: the body may contain escaped quotes ('')
-    # but no bare quote — a greedy ^'(.*)'$ would swallow whole expressions
-    # like  'a' || 'b'  as the "literal" a' || 'b and prune unsoundly.
-    m = re.match(r"^(?:DATE|TIMESTAMP)\s+'((?:[^']|'')*)'$", text, re.I)
-    if not m:
-        m = re.match(r"^'((?:[^']|'')*)'$", text)
-    if m:
-        return m.group(1).replace("''", "'")  # SQL-escaped quote
-    if re.match(r"^-?\d+$", text):
-        return int(text)
-    if re.match(r"^-?\d+\.\d*$", text):
-        return float(text)
-    return None  # not a literal we understand → non-pruning
 
 
 def _to_dt(s: str) -> dt.datetime | None:
@@ -139,90 +92,195 @@ def _coerce(lit: Any, lo: Any, hi: Any) -> tuple[Any, Any, Any] | None:
     return None
 
 
-_BETWEEN_AND = "\x00BETWEEN_AND\x00"
+# ------------------------------------------------------------- the parser
+class _Opaque(Exception):
+    """The text does not tokenize or parse: the whole predicate is opaque."""
 
 
-def _mask_between(pred: str) -> str:
-    """Replace BETWEEN's inner AND with a sentinel so boolean splitting
-    never mistakes it for a conjunction. The lower bound may be a quoted
-    literal containing spaces (TIMESTAMP '2024-06-02 00:00:00'), so match
-    typed/quoted literals before falling back to a bare token."""
-    return re.sub(
-        r"(\bBETWEEN\b\s+(?:(?:DATE|TIMESTAMP)\s+'(?:[^']|'')*'|'(?:[^']|'')*'|\S+)\s+)AND\b",
-        rf"\1{_BETWEEN_AND}",
-        pred,
-        flags=re.I,
-    )
+# One token per match: a single-quoted string (a backslash escape stays
+# inside it, so a quote it escapes cannot end it), a word (identifier,
+# keyword or number; a '-' directly before it glues on: -5), a
+# comparison operator, or any other single character. Double-quoted
+# strings, backquoted names, comment openers and stray quotes take the
+# last branch.
+_TOKEN_RE = re.compile(
+    r"""\s*(?:
+      ('(?:[^'\\]|''|\\.)*')
+    | (-?[\w.]+)
+    | (<=>|<>|!=|==|>=|<=|=|<|>)
+    | ("(?:[^"\\]|""|\\.)*"|`(?:[^`]|``)*`|--|/\*|\S)
+    )""",
+    re.S | re.X,
+)
+_KEYWORDS = frozenset("AND OR BETWEEN IN IS NOT NULL CASE END".split())
+_IDENT_START = frozenset("ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz_")
+_CMP_OPS = frozenset(("=", "<", "<=", ">", ">="))
 
 
-def _split_top(pred: str, op: str) -> list[str]:
-    """Split ``pred`` on top-level (outside quotes/parens) AND or OR."""
-    pat = rf"\s+{op}\s+"
-    parts, depth, quote, cur = [], 0, None, []
-    tokens = re.split(r"(\s+AND\s+|\s+OR\s+|[()'])", pred, flags=re.I)
-    for tok in tokens:
-        if tok is None or tok == "":
-            continue
-        if quote:
-            cur.append(tok)
-            if tok == "'":
-                quote = None
-            continue
-        if tok == "'":
-            quote = "'"
-            cur.append(tok)
-        elif tok == "(":
-            depth += 1
-            cur.append(tok)
-        elif tok == ")":
-            depth -= 1
-            cur.append(tok)
-        elif depth == 0 and re.fullmatch(pat, tok, re.I):
-            parts.append("".join(cur))
-            cur = []
+def _tokens(text: str) -> list[tuple[str, Any]]:
+    """(kind, value) per token: ("str", text or None when a backslash
+    makes Spark read it otherwise), ("int"|"float", number), ("id", name),
+    ("kw", upper-case keyword), ("op", operator), ("(" | ")" | ",", _)
+    or ("x", text) for anything else."""
+    out: list[tuple[str, Any]] = []
+    for s, w, op, other in _TOKEN_RE.findall(text):
+        if s:
+            body = s[1:-1]
+            out.append(("str", None if "\\" in body else body.replace("''", "'")))
+        elif w:
+            u = w.upper()
+            d = w[1:] if w[0] == "-" else w
+            i, dot, f = d.partition(".")
+            if u in _KEYWORDS:
+                out.append(("kw", u))
+            elif d.isascii() and d.isdigit():
+                out.append(("int", int(w)))
+            elif d.isascii() and dot and i.isdigit() and (not f or f.isdigit()):
+                out.append(("float", float(w)))
+            elif w[0] in _IDENT_START and not dot:
+                out.append(("id", w))
+            else:
+                out.append(("x", w))
+        elif op:
+            out.append(("op", op))
+        elif other in ("(", ")", ","):
+            out.append((other, None))
+        elif other in ("'", '"', "`", "--", "/*"):
+            raise _Opaque  # unterminated quote, or a comment hiding text
         else:
-            cur.append(tok)
-    parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
+            out.append(("x", other))
+    return out
 
 
-def _strip_parens(expr: str) -> str:
-    """Remove balanced outer parentheses: '((a OR b))' → 'a OR b'."""
-    expr = expr.strip()
-    while expr.startswith("(") and expr.endswith(")"):
-        depth, quote = 0, False
-        wraps = True
-        for i, ch in enumerate(expr):
-            if quote:
-                if ch == "'":
-                    quote = False
-                continue
-            if ch == "'":
-                quote = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < len(expr) - 1:
-                    wraps = False  # ')' closes before the end: '(a) OR (b)'
+def _parse(text: str):
+    """The AND/OR tree of ``text``: ("and" | "or", [kids]) tuples over
+    _Leaf objects, same-operator children flattened. Raises _Opaque."""
+    toks = _tokens(text)
+    match: dict[int, int] = {}  # "(" index -> its ")" index
+    stack: list[int] = []
+    for i, (k, _) in enumerate(toks):
+        if k == "(":
+            stack.append(i)
+        elif k == ")":
+            if not stack:
+                raise _Opaque
+            match[stack.pop()] = i
+    if stack:
+        raise _Opaque
+
+    def run_end(i: int, hi: int) -> tuple[int, str | None]:
+        """The index of the top-level AND/OR ending the run at ``i``
+        (``hi`` at the end) and which one. BETWEEN claims the next AND;
+        CASE … END and parentheses hide theirs."""
+        between = case = 0
+        while i < hi:
+            k, v = toks[i]
+            if k == "(":
+                i = match[i]
+            elif k == "kw":
+                if v == "CASE":
+                    case += 1
+                elif v == "END" and case:
+                    case -= 1
+                elif case:
+                    pass
+                elif v == "BETWEEN":
+                    between += 1
+                elif v == "AND" and between:
+                    between -= 1
+                elif v in ("AND", "OR"):
                     break
-        if not wraps or depth != 0:
-            break
-        expr = expr[1:-1].strip()
-    return expr
+            i += 1
+        if case or between:
+            raise _Opaque
+        return i, (toks[i][1] if i < hi else None)
+
+    def expr(lo: int, hi: int):
+        disj, conj = [], []
+        while True:
+            j, sep = run_end(lo, hi)
+            if j == lo:
+                raise _Opaque  # empty operand: dangling AND/OR, "()"
+            if toks[lo][0] == "(" and match[lo] == j - 1:
+                conj.append(expr(lo + 1, j - 1))
+            else:
+                conj.append(_leaf(toks[lo:j]))
+            if sep != "AND":
+                disj.append(_node("and", conj))
+                conj = []
+            if sep is None:
+                return _node("or", disj)
+            lo = j + 1
+
+    return expr(0, len(toks))
 
 
-def _split_conjuncts(pred: str) -> list[str] | None:
-    """Top-level AND conjuncts; None if a top-level OR splits the predicate
-    (callers that need pure conjuncts — bucket projection — stay sound by
-    projecting nothing; file pruning itself handles OR via _expr_can_match)."""
-    masked = _mask_between(pred)
-    if len(_split_top(masked, "OR")) > 1:
-        return None
-    return [
-        p.replace(_BETWEEN_AND, "AND")
-        for p in _split_top(masked, "AND")
-    ]
+def _node(op: str, kids: list):
+    if len(kids) == 1:
+        return kids[0]
+    flat = []
+    for k in kids:
+        flat.extend(k[1] if isinstance(k, tuple) and k[0] == op else (k,))
+    return op, flat
+
+
+def _literal(toks, i: int):
+    """((kind, value), next index) for the literal at ``toks[i]``, or
+    (None, i). Kinds: int, float, str, date, timestamp (value: the inner
+    string) and null."""
+    k, v = toks[i]
+    if k in ("int", "float") or (k == "str" and v is not None):
+        return (k, v), i + 1
+    if k == "kw" and v == "NULL":
+        return ("null", None), i + 1
+    if (
+        k == "id"
+        and v.upper() in ("DATE", "TIMESTAMP")
+        and i + 1 < len(toks)
+        and toks[i + 1][0] == "str"
+        and toks[i + 1][1] is not None
+    ):
+        return (v.lower(), toks[i + 1][1]), i + 2
+    return None, i
+
+
+def _leaf(run: list) -> "_Leaf":
+    """The leaf one run of tokens spells, or the opaque leaf."""
+    n = len(run)
+    if n < 3 or run[0][0] != "id":
+        return _OPAQUE
+    col, (k, v) = run[0][1], run[1]
+    if k == "op" and v in _CMP_OPS:
+        lit, i = _literal(run, 2)
+        if lit is not None and i == n:
+            return _Leaf(col, "cmp", v, (lit,))
+    elif k != "kw":
+        pass
+    elif v == "IS":
+        if run[2:] == [("kw", "NULL")]:
+            return _Leaf(col, "null", neg=False)
+        if run[2:] == [("kw", "NOT"), ("kw", "NULL")]:
+            return _Leaf(col, "null", neg=True)
+    elif v == "BETWEEN":
+        lo, i = _literal(run, 2)
+        if lo is not None and i < n and run[i] == ("kw", "AND"):
+            hi, j = _literal(run, i + 1) if i + 1 < n else (None, i)
+            if hi is not None and j == n:
+                return _Leaf(col, "between", lits=(lo, hi))
+    elif v == "IN" and run[2][0] == "(" and run[-1][0] == ")":
+        lits, i = [], 3
+        while i < n - 1:
+            lit, i = _literal(run, i)
+            if lit is None:
+                return _OPAQUE
+            lits.append(lit)
+            if run[i][0] == ",":
+                i += 1
+            elif i != n - 1:
+                return _OPAQUE
+        if lits and run[n - 2][0] != ",":
+            return _Leaf(col, "in", lits=tuple(lits))
+    return _OPAQUE
 
 
 def _bounds_for(entry: ManifestEntry, col: str) -> tuple[Any, Any] | None:
@@ -233,106 +291,11 @@ def _bounds_for(entry: ManifestEntry, col: str) -> tuple[Any, Any] | None:
     return lo, hi
 
 
-def _null_count_for(entry: ManifestEntry, col: str) -> int | None:
-    return (entry.null_counts or {}).get(col)
-
-
 def _provably_all_null(entry: ManifestEntry, col: str) -> bool:
     """True when stats prove every value of ``col`` in this file is NULL —
     no comparison/IN/BETWEEN conjunct on it can then be satisfied."""
-    nc = _null_count_for(entry, col)
+    nc = (entry.null_counts or {}).get(col)
     return nc is not None and nc >= entry.record_count
-
-
-def _conjunct_can_match(entry: ManifestEntry, conjunct: str) -> bool:
-    """False only when the conjunct is PROVABLY unsatisfiable on this file."""
-    m = _NULL_RE.match(conjunct)
-    if m:
-        nc = _null_count_for(entry, m.group("col"))
-        if nc is None:
-            return True  # unknown null stats → keep
-        if m.group("neg"):
-            return nc < entry.record_count  # IS NOT NULL needs a non-null row
-        return nc > 0  # IS NULL needs at least one null
-
-    m = _IN_RE.match(conjunct)
-    if m:
-        if _provably_all_null(entry, m.group("col")):
-            return False
-        items = _split_in_items(m.group("items"))
-        bounds = _bounds_for(entry, m.group("col"))
-        if items is None or bounds is None:
-            return True
-        lo, hi = bounds
-        for item in items:
-            lit = _parse_literal(item)
-            if lit is None:
-                return True  # non-literal member → can't prune soundly
-            coerced = _coerce(lit, lo, hi)
-            if coerced is None:
-                return True
-            c_lit, c_lo, c_hi = coerced
-            if c_lo <= c_lit <= c_hi:
-                return True
-        return False  # every member provably outside [min, max]
-
-    m = _BETWEEN_RE.match(conjunct)
-    if m:
-        if _provably_all_null(entry, m.group("col")):
-            return False
-        lo_lit, hi_lit = _parse_literal(m.group("lo")), _parse_literal(m.group("hi"))
-        bounds = _bounds_for(entry, m.group("col"))
-        if bounds is None or lo_lit is None or hi_lit is None:
-            return True
-        lo, hi = bounds
-        c_lo = _coerce(lo_lit, lo, hi)
-        c_hi = _coerce(hi_lit, lo, hi)
-        if c_lo is None or c_hi is None:
-            return True
-        lo_lit, lo, hi = c_lo
-        hi_lit = c_hi[0]
-        return not (hi < lo_lit or lo > hi_lit)
-
-    m = _CMP_RE.match(conjunct)
-    if not m:
-        return True
-    if _provably_all_null(entry, m.group("col")):
-        return False
-    lit = _parse_literal(m.group("lit"))
-    bounds = _bounds_for(entry, m.group("col"))
-    if lit is None or bounds is None:
-        return True
-    coerced = _coerce(lit, *bounds)
-    if coerced is None:
-        return True
-    lit, lo, hi = coerced
-    op = m.group("op")
-    if op == "=":
-        return lo <= lit <= hi
-    if op == "<":
-        return lo < lit
-    if op == "<=":
-        return lo <= lit
-    if op == ">":
-        return hi > lit
-    if op == ">=":
-        return hi >= lit
-    return True
-
-
-def _expr_can_match(entry: ManifestEntry, masked: str) -> bool:
-    """Recursive AND/OR evaluation over a BETWEEN-masked predicate. SQL
-    precedence (AND tighter than OR) falls out of splitting OR first.
-    False only when the whole tree is provably unsatisfiable on this file."""
-    expr = _strip_parens(masked)
-    or_parts = _split_top(expr, "OR")
-    if len(or_parts) > 1:
-        return any(_expr_can_match(entry, p) for p in or_parts)
-    and_parts = _split_top(expr, "AND")
-    if len(and_parts) > 1:
-        return all(_expr_can_match(entry, p) for p in and_parts)
-    # leaf (expr is paren-stripped, so one part can't hide another level)
-    return _conjunct_can_match(entry, expr.replace(_BETWEEN_AND, "AND"))
 
 
 # ------------------------------------------------- compiled / vectorized
@@ -347,10 +310,10 @@ def _epoch_us(d: dt.datetime) -> int:
 
 
 def _lit_kind(v) -> str | None:
-    """Classification shared by the CMP and BETWEEN vector leaves — ONE
-    source of truth for the exactness rules (review catch: the 2^53 rule
-    lived in three places). None = only the scalar evaluator may handle
-    it; 'big' = numeric but not float64-exact (scalar fallback)."""
+    """Classification shared by literals and bounds — ONE source of truth
+    for the exactness rules (review catch: the 2^53 rule lived in three
+    places). None = only the scalar evaluator may handle it; 'big' =
+    numeric but not float64-exact (scalar fallback)."""
     if isinstance(v, bool):
         return None
     if isinstance(v, (int, float)):
@@ -358,7 +321,7 @@ def _lit_kind(v) -> str | None:
             return "big"
         return "num"
     if isinstance(v, str):
-        # numpy fixed-width unicode strips trailing NULs, so a literal
+        # numpy fixed-width unicode strips trailing NULs, so a value
         # containing one can't ride the arrays (review catch)
         if "\x00" in v:
             return None
@@ -366,10 +329,9 @@ def _lit_kind(v) -> str | None:
     return None
 
 
-def _np_cmp(op: str, lo, hi, lit):
-    """Vectorized bounds test for one comparison op (arrays lo/hi against
-    a scalar literal) — the same [min, max] satisfiability rules as the
-    scalar tail of ``_conjunct_can_match``."""
+def _bounds_cmp(op: str, lo, hi, lit):
+    """Whether [lo, hi] may hold a value ``op lit``: over scalars for
+    ``_Leaf.can_match``, over numpy bound arrays for ``_Leaf.mask``."""
     if op == "=":
         return (lo <= lit) & (lit <= hi)
     if op == "<":
@@ -382,343 +344,240 @@ def _np_cmp(op: str, lo, hi, lit):
 
 
 class _Leaf:
-    """One conjunct, parsed ONCE. Comparisons ``col <op> literal``
-    evaluate vectorized over numpy bound arrays — the manifest-pruning
-    hot path at millions of entries: numeric literals against float64
-    bound arrays, string/temporal literals against per-column epoch and
-    unicode arrays with the EXACT ``_coerce`` semantics (dt-parseable
-    literal: compare as datetimes where BOTH bounds parse, keep
-    otherwise; plain string literal: lexicographic where both bounds are
-    non-temporal strings, keep otherwise). Every other shape falls back
-    to the scalar evaluator per entry, so the compiled path can never
-    diverge from ``_conjunct_can_match`` (round-7 verdict item 5)."""
+    """One leaf of a parsed predicate: ``shape`` is "cmp" (``col op
+    lits[0]``), "between" (``lits`` = lower, upper), "in" (``lits`` the
+    members), "null" (IS NULL, or IS NOT NULL when ``neg``), or None for
+    the opaque leaf. ``lits`` are (kind, value) pairs from ``_literal``.
 
-    __slots__ = (
-        "conjunct",
-        "col",
-        "op",
-        "lit",
-        "kind",
-        "lit_epoch",
-        "lit2",
-        "neg",
-    )
+    ``can_match`` is the scalar reference. ``mask`` evaluates the same
+    rules vectorized over numpy bound arrays — the manifest-pruning hot
+    path at millions of entries — with the EXACT ``_coerce`` semantics:
+    numbers against float64 bounds, a dt-parseable literal against
+    epoch-µs bounds where BOTH bounds parse, a plain string against
+    unicode bounds where neither bound is temporal; any other entry
+    keeps. ``kind`` ("num", "dt", "str", "null", or "keep" for a BETWEEN
+    whose mixed literal kinds keep every entry) picks the arrays; None
+    sends every entry through ``can_match``, as do the entries outside
+    float64 or fixed-width exactness, so the two can never diverge."""
 
-    def __init__(self, masked_leaf: str):
-        self.conjunct = masked_leaf.replace(_BETWEEN_AND, "AND")
-        self.col = self.op = self.lit = self.kind = self.lit_epoch = None
-        self.lit2 = self.neg = None
-        m = _NULL_RE.match(self.conjunct)
-        if m:
-            self.col = m.group("col")
+    __slots__ = ("col", "shape", "op", "lits", "neg", "kind", "test")
+
+    def __init__(self, col=None, shape=None, op=None, lits=(), neg=False):
+        self.col, self.shape, self.op, self.lits, self.neg = col, shape, op, lits, neg
+        vals = [v for _, v in lits]
+        kinds = {_lit_kind(v) for v in vals}
+        self.kind = None
+        if shape == "null":
             self.kind = "null"
-            self.neg = bool(m.group("neg"))
-            return
-        m = _IN_RE.match(self.conjunct)
-        if m:
-            items = _split_in_items(m.group("items"))
-            if items is not None:
-                lits = [_parse_literal(x) for x in items]
-                # vectorize only the all-numeric IN list; any member the
-                # scalar would keep-all on (non-literal, string, bigint)
-                # routes the leaf to the scalar evaluator
-                if all(_lit_kind(v) == "num" for v in lits):
-                    self.col, self.kind, self.lit = (
-                        m.group("col"),
-                        "in_num",
-                        lits,
-                    )
-            return
-        m = _BETWEEN_RE.match(self.conjunct)
-        if m:
-            self._init_between(
-                m.group("col"),
-                _parse_literal(m.group("lo")),
-                _parse_literal(m.group("hi")),
-            )
-            return
-        m = _CMP_RE.match(self.conjunct)
-        if not m:
-            return
-        lit = _parse_literal(m.group("lit"))
-        # exactness rules live in _lit_kind: 'big' ints (not float64-
-        # exact: epoch-nanos, snowflake ids) and NUL-bearing strings take
-        # the scalar leaf instead of the arrays (review catches)
-        k = _lit_kind(lit)
-        if k in ("num", "dt", "str"):
-            self.col, self.op, self.lit = m.group("col"), m.group("op"), lit
-            self.kind = k
-            if k == "dt":
-                self.lit_epoch = _epoch_us(_to_dt(lit))
+        elif None in kinds or "big" in kinds or shape is None:
+            pass  # NULL, NUL-bearing or past-2^53 literals: scalar only
+        elif len(kinds) == 1 and (shape != "in" or kinds == {"num"}):
+            # strings and temporals in an IN list take the scalar path
+            self.kind = kinds.pop()
+        elif shape == "between":
+            self.kind = "keep"  # mixed kinds: _coerce fails on every entry
+        if self.kind == "dt":
+            vals = [_epoch_us(_to_dt(v)) for v in vals]
+        self.test = vals
 
-    def _init_between(self, col, lo_lit, hi_lit) -> None:
-        """Classify a BETWEEN leaf. Mixed literal kinds (e.g. one
-        temporal, one not) make the scalar _coerce pair return None for
-        EVERY entry — constant keep, encoded as kind 'between_keep'
-        (all-null is still False, checked first like the scalar)."""
-        if lo_lit is None or hi_lit is None:
-            return  # non-literal bound → scalar fallback (always keeps)
-        k1, k2 = _lit_kind(lo_lit), _lit_kind(hi_lit)
-        if k1 is None or k2 is None or "big" in (k1, k2):
-            return  # scalar fallback (incl. the exactness rules)
-        self.col = col
-        if k1 == k2 == "num":
-            self.kind = "between_num"
-            self.lit, self.lit2 = lo_lit, hi_lit
-        elif k1 == k2 == "dt":
-            self.kind = "between_dt"
-            self.lit = _epoch_us(_to_dt(lo_lit))
-            self.lit2 = _epoch_us(_to_dt(hi_lit))
-        elif k1 == k2 == "str":
-            self.kind = "between_str"
-            self.lit, self.lit2 = lo_lit, hi_lit
-        else:
-            self.kind = "between_keep"  # mixed kinds: scalar keeps all
+    def can_match(self, entry: ManifestEntry) -> bool:
+        """False only when the leaf is PROVABLY unsatisfiable on this
+        file."""
+        shape, col = self.shape, self.col
+        if shape is None:
+            return True
+        if shape == "null":
+            nc = (entry.null_counts or {}).get(col)
+            if nc is None:
+                return True  # unknown null stats → keep
+            if self.neg:
+                return nc < entry.record_count  # IS NOT NULL needs a non-null row
+            return nc > 0  # IS NULL needs at least one null
+        if _provably_all_null(entry, col):
+            return False
+        bounds = _bounds_for(entry, col)
+        if bounds is None:
+            return True
+        # a NULL literal, or one not soundly comparable with the bounds,
+        # keeps the file
+        coerced = [None if v is None else _coerce(v, *bounds) for _, v in self.lits]
+        if shape == "in":
+            # kept unless every member is provably outside [min, max]
+            return any(c is None or c[1] <= c[0] <= c[2] for c in coerced)
+        if None in coerced:
+            return True
+        if shape == "between":
+            (lo_lit, lo, hi), (hi_lit, _, _) = coerced
+            return not (hi < lo_lit or lo > hi_lit)
+        lit, lo, hi = coerced[0]
+        return bool(_bounds_cmp(self.op, lo, hi, lit))
 
-    def mask(self, entries, cache):
+    def mask(self, entries, arrays):
+        """``can_match`` over ``entries``; ``arrays(col, mode)`` gives the
+        per-entry stats arrays (_bound_arrays)."""
         import numpy as np
 
-        if self.col is None:
+        if self.kind is None:
             return np.fromiter(
-                (_conjunct_can_match(e, self.conjunct) for e in entries),
-                dtype=bool,
-                count=len(entries),
+                (self.can_match(e) for e in entries), dtype=bool, count=len(entries)
             )
         out = np.ones(len(entries), dtype=bool)
         if self.kind == "null":
             # IS [NOT] NULL from the null-count stats; unknown nc → keep
-            # (same rule as the scalar branch, no all-null interplay);
-            # counts past 2^53 fall back to the scalar exact compare
-            nc_known, nc, rc, nc_big = cache(self.col, "nullcnt")
+            # (same rule as the scalar branch, no all-null interplay)
+            known, nc, rc, fallback = arrays(self.col, "nullcnt")
             if self.neg:  # IS NOT NULL needs a non-null row
-                out[nc_known] = nc[nc_known] < rc[nc_known]
+                out[known] = nc[known] < rc[known]
             else:  # IS NULL needs at least one null
-                out[nc_known] = nc[nc_known] > 0
-            for i in np.flatnonzero(nc_big):
-                out[i] = _conjunct_can_match(entries[i], self.conjunct)
-            return out
-        if self.kind == "num":
-            lo, hi, ok, allnull, bigint = cache(self.col, "num")
-            out[allnull] = False  # provably all-NULL: nothing compares
-            idx = ok & ~allnull
-            out[idx] = _np_cmp(self.op, lo[idx], hi[idx], self.lit)
-            # int bounds beyond 2^53 can't ride the float64 arrays
-            # exactly; those few entries go through the scalar leaf so
-            # the candidate set stays IDENTICAL to the scalar evaluator's
-            for i in np.flatnonzero(bigint & ~allnull):
-                out[i] = _conjunct_can_match(entries[i], self.conjunct)
-            return out
-        if self.kind == "in_num":
-            lo, hi, ok, allnull, bigint = cache(self.col, "num")
-            out[allnull] = False
-            idx = ok & ~allnull
-            lo_i, hi_i = lo[idx], hi[idx]  # hoist the fancy-index copies
-            hit = np.zeros(len(lo_i), dtype=bool)
-            for v in self.lit:  # a few members: one vector pass each
-                hit |= (lo_i <= v) & (v <= hi_i)
-            out[idx] = hit
-            for i in np.flatnonzero(bigint & ~allnull):
-                out[i] = _conjunct_can_match(entries[i], self.conjunct)
-            return out
-        if self.kind == "between_keep":
-            out[cache(self.col, "allnull")] = False  # all-null still prunes
-            return out
-        if self.kind == "between_num":
-            lo, hi, ok, allnull, bigint = cache(self.col, "num")
-            out[allnull] = False
-            idx = ok & ~allnull
-            out[idx] = ~((hi[idx] < self.lit) | (lo[idx] > self.lit2))
-            for i in np.flatnonzero(bigint & ~allnull):
-                out[i] = _conjunct_can_match(entries[i], self.conjunct)
-            return out
-        if self.kind in ("dt", "between_dt"):
-            # _coerce: compare as datetimes only where BOTH bounds parse
-            # (exact int64 epoch-µs — float seconds lose µs past ~2242,
-            # review catch); a dt literal vs anything else keeps the file
-            dt_lo, dt_hi, dt_ok, allnull = cache(self.col, "dt")
-            out[allnull] = False
-            idx = dt_ok & ~allnull
-            if self.kind == "dt":
-                out[idx] = _np_cmp(
-                    self.op, dt_lo[idx], dt_hi[idx], self.lit_epoch
-                )
-            else:
-                out[idx] = ~((dt_hi[idx] < self.lit) | (dt_lo[idx] > self.lit2))
-            return out
-        # plain string literal: lexicographic only where both bounds are
-        # strings and NEITHER side is temporal (one-sided temporal → no
-        # sound ordering → keep); bounds with NUL bytes can't ride the
-        # fixed-width arrays (trailing NULs strip — review catch) and go
-        # through the scalar leaf
-        slo, shi, s_ok, any_dt, s_nul, allnull = cache(self.col, "str")
-        out[allnull] = False
-        idx = s_ok & ~any_dt & ~allnull & ~s_nul
-        if self.kind == "between_str":
-            out[idx] = ~((shi[idx] < self.lit) | (slo[idx] > self.lit2))
+                out[known] = nc[known] > 0
         else:
-            out[idx] = _np_cmp(self.op, slo[idx], shi[idx], self.lit)
-        for i in np.flatnonzero(s_nul & ~allnull):
-            out[i] = _conjunct_can_match(entries[i], self.conjunct)
+            allnull = arrays(self.col, "allnull")
+            out[allnull] = False  # provably all-NULL: nothing compares
+            if self.kind == "keep":
+                return out
+            lo, hi, ok, fallback = arrays(self.col, self.kind)
+            idx = ok & ~allnull
+            lo, hi, test = lo[idx], hi[idx], self.test
+            if self.shape == "cmp":
+                out[idx] = _bounds_cmp(self.op, lo, hi, test[0])
+            elif self.shape == "between":
+                out[idx] = ~((hi < test[0]) | (lo > test[1]))
+            else:  # IN: a few members, one vector pass each
+                hit = np.zeros(len(lo), dtype=bool)
+                for v in test:
+                    hit |= (lo <= v) & (v <= hi)
+                out[idx] = hit
+            fallback = fallback & ~allnull
+        for i in np.flatnonzero(fallback):
+            out[i] = self.can_match(entries[i])
         return out
 
 
-class _CompiledPredicate:
-    """Predicate parsed once into an AND/OR tree of _Leaf nodes; ``mask``
-    evaluates it over a whole entry list with one numpy pass per leaf
-    (the scalar path re-tokenized the predicate for EVERY entry)."""
+def _bound_arrays(entries: list[ManifestEntry], col: str, mode: str):
+    """``col``'s per-entry stats as numpy arrays for _Leaf.mask. Modes:
+    "allnull" (the provably-all-NULL mask); "nullcnt" (known, null count,
+    record count, fallback); "num" / "dt" / "str" (lo, hi, ok, fallback):
+    the bounds as float64, epoch-µs int64 or fixed-width unicode, ``ok``
+    where they ride those arrays exactly and ``fallback`` where only the
+    scalar evaluator may answer — ints and counts past 2^53, which
+    float64 rounds, and NUL-bearing strings, which numpy strips."""
+    import numpy as np
 
-    def __init__(self, masked: str):
-        self.root = self._build(masked)
+    n = len(entries)
+    if mode == "allnull":
+        return np.fromiter(
+            (_provably_all_null(e, col) for e in entries), dtype=bool, count=n
+        )
+    ok = np.zeros(n, dtype=bool)
+    fallback = np.zeros(n, dtype=bool)
+    if mode == "nullcnt":
+        nc, rc = np.zeros(n), np.zeros(n)
+        for i, e in enumerate(entries):
+            v = (e.null_counts or {}).get(col)
+            # bool is accepted like the scalar branch (True > 0)
+            if isinstance(v, (int, float)):
+                if (isinstance(v, int) and abs(v) >= 2**53) or e.record_count >= 2**53:
+                    fallback[i] = True
+                else:
+                    ok[i], nc[i], rc[i] = True, v, e.record_count
+        return ok, nc, rc, fallback
+    lo = [""] * n if mode == "str" else np.zeros(n, dtype=float if mode == "num" else np.int64)
+    hi = list(lo) if mode == "str" else lo.copy()
+    for i, e in enumerate(entries):
+        l_ = (e.min_values or {}).get(col)
+        h_ = (e.max_values or {}).get(col)
+        if mode == "num":
+            kl, kh = _lit_kind(l_), _lit_kind(h_)
+            if kl == kh == "num":
+                lo[i], hi[i], ok[i] = l_, h_, True
+            elif kl in ("num", "big") and kh in ("num", "big"):
+                fallback[i] = True
+        elif isinstance(l_, str) and isinstance(h_, str):
+            dl, dh = _to_dt(l_), _to_dt(h_)
+            if mode == "dt":
+                if dl is not None and dh is not None:
+                    lo[i], hi[i], ok[i] = _epoch_us(dl), _epoch_us(dh), True
+            elif "\x00" in l_ or "\x00" in h_:
+                fallback[i] = True
+            elif dl is None and dh is None:
+                lo[i], hi[i], ok[i] = l_, h_, True
+    if mode == "str":
+        # fixed-width unicode arrays: C-level lexicographic comparison,
+        # same code-point order as Python str
+        lo, hi = np.array(lo, dtype=str), np.array(hi, dtype=str)
+    return lo, hi, ok, fallback
 
-    def _build(self, masked: str):
-        expr = _strip_parens(masked)
-        or_parts = _split_top(expr, "OR")
-        if len(or_parts) > 1:
-            return ("or", [self._build(p) for p in or_parts])
-        and_parts = _split_top(expr, "AND")
-        if len(and_parts) > 1:
-            return ("and", [self._build(p) for p in and_parts])
-        return ("leaf", _Leaf(expr))
 
-    def mask(self, entries):
+class _Predicate:
+    """A predicate text parsed once into its AND/OR tree of _Leaf nodes
+    (``root``), read by every consumer: ``can_match`` (scalar, per
+    entry), ``mask`` (one numpy pass per leaf over a whole entry list),
+    ``conjuncts`` (bucket projection) and ``row_columns``: the columns
+    row_filter reads, or None when it declines the predicate."""
+
+    __slots__ = ("root", "leaves", "row_columns")
+
+    def __init__(self, text: str):
+        try:
+            self.root = _parse(text)
+        except (_Opaque, ValueError):  # ValueError: int() past its digit limit
+            self.root = _OPAQUE
+
+        def walk(node) -> list[_Leaf]:
+            if isinstance(node, _Leaf):
+                return [node]
+            return [x for k in node[1] for x in walk(k)]
+
+        self.leaves = walk(self.root)
+        self.row_columns = (
+            frozenset(x.col for x in self.leaves)
+            if all(map(_row_leaf, self.leaves))
+            else None
+        )
+
+    def conjuncts(self) -> list[_Leaf]:
+        """The leaves ANDed at the top of the tree."""
+        root = self.root
+        kids = root[1] if isinstance(root, tuple) and root[0] == "and" else [root]
+        return [k for k in kids if isinstance(k, _Leaf)]
+
+    def can_match(self, entry: ManifestEntry) -> bool:
+        def ev(node) -> bool:
+            if isinstance(node, _Leaf):
+                return node.can_match(entry)
+            return (any if node[0] == "or" else all)(ev(k) for k in node[1])
+
+        return ev(self.root)
+
+    def mask(self, entries: list[ManifestEntry]):
         import numpy as np
 
-        n = len(entries)
-        bound_cache: dict[tuple[str, str], tuple] = {}
+        memo: dict[tuple[str, str], Any] = {}
 
-        def _allnull(col: str):
-            got = bound_cache.get((col, "null"))
-            if got is not None:
-                return got
-            allnull = np.zeros(n, dtype=bool)
-            for i, e in enumerate(entries):
-                nc = (e.null_counts or {}).get(col)
-                # same expression as _provably_all_null (bool nc included)
-                allnull[i] = nc is not None and nc >= e.record_count
-            bound_cache[(col, "null")] = allnull
-            return allnull
-
-        def cache(col: str, mode: str):
-            got = bound_cache.get((col, mode))
-            if got is not None:
-                return got
-            if mode == "allnull":
-                return _allnull(col)
-            if mode == "nullcnt":
-                nc_known = np.zeros(n, dtype=bool)
-                nc = np.zeros(n)
-                rc = np.zeros(n)
-                nc_big = np.zeros(n, dtype=bool)
-                for i, e in enumerate(entries):
-                    v = (e.null_counts or {}).get(col)
-                    # bool is accepted like the scalar branch (True > 0)
-                    if isinstance(v, (int, float)):
-                        # counts past 2^53 aren't float64-exact — route
-                        # to the scalar compare like the value bounds
-                        if (isinstance(v, int) and abs(v) >= 2**53) or (
-                            e.record_count >= 2**53
-                        ):
-                            nc_big[i] = True
-                        else:
-                            nc_known[i], nc[i], rc[i] = (
-                                True,
-                                v,
-                                e.record_count,
-                            )
-                got = (nc_known, nc, rc, nc_big)
-                bound_cache[(col, mode)] = got
-                return got
-            allnull = _allnull(col)
-            num = (int, float)
-            if mode == "num":
-                lo = np.full(n, np.nan)
-                hi = np.full(n, np.nan)
-                ok = np.zeros(n, dtype=bool)
-                bigint = np.zeros(n, dtype=bool)
-                for i, e in enumerate(entries):
-                    l_ = (e.min_values or {}).get(col)
-                    h_ = (e.max_values or {}).get(col)
-                    if (
-                        isinstance(l_, num)
-                        and isinstance(h_, num)
-                        and not isinstance(l_, bool)
-                        and not isinstance(h_, bool)
-                    ):
-                        # int bounds beyond 2^53 don't survive the
-                        # float64 cast exactly (epoch-nanos, snowflake
-                        # ids) — flag them for per-entry scalar
-                        # evaluation instead (review catch: a strict
-                        # </> on the rounded value wrongly pruned)
-                        if (isinstance(l_, int) and abs(l_) >= 2**53) or (
-                            isinstance(h_, int) and abs(h_) >= 2**53
-                        ):
-                            bigint[i] = True
-                        else:
-                            lo[i], hi[i], ok[i] = l_, h_, True
-                got = (lo, hi, ok, allnull, bigint)
-            elif mode == "dt":  # temporal leaves: epoch arrays only
-                dt_lo = np.zeros(n, dtype=np.int64)
-                dt_hi = np.zeros(n, dtype=np.int64)
-                dt_ok = np.zeros(n, dtype=bool)
-                for i, e in enumerate(entries):
-                    l_ = (e.min_values or {}).get(col)
-                    h_ = (e.max_values or {}).get(col)
-                    if isinstance(l_, str) and isinstance(h_, str):
-                        dl, dh = _to_dt(l_), _to_dt(h_)
-                        if dl is not None and dh is not None:
-                            dt_lo[i] = _epoch_us(dl)
-                            dt_hi[i] = _epoch_us(dh)
-                            dt_ok[i] = True
-                got = (dt_lo, dt_hi, dt_ok, allnull)
-            else:  # mode == "str": plain-string leaves
-                s_lo = [""] * n
-                s_hi = [""] * n
-                s_ok = np.zeros(n, dtype=bool)
-                any_dt = np.zeros(n, dtype=bool)
-                s_nul = np.zeros(n, dtype=bool)
-                for i, e in enumerate(entries):
-                    l_ = (e.min_values or {}).get(col)
-                    h_ = (e.max_values or {}).get(col)
-                    if isinstance(l_, str) and isinstance(h_, str):
-                        s_ok[i] = True
-                        if "\x00" in l_ or "\x00" in h_:
-                            s_nul[i] = True  # scalar fallback rows
-                            continue
-                        s_lo[i], s_hi[i] = l_, h_
-                        if _to_dt(l_) is not None or _to_dt(h_) is not None:
-                            any_dt[i] = True
-                # fixed-width unicode arrays: C-level lexicographic
-                # comparison, same code-point order as Python str
-                got = (
-                    np.array(s_lo, dtype=str),
-                    np.array(s_hi, dtype=str),
-                    s_ok,
-                    any_dt,
-                    s_nul,
-                    allnull,
-                )
-            bound_cache[(col, mode)] = got
-            return got
+        def arrays(col: str, mode: str):
+            if (col, mode) not in memo:
+                memo[col, mode] = _bound_arrays(entries, col, mode)
+            return memo[col, mode]
 
         def ev(node):
-            kind, payload = node
-            if kind == "leaf":
-                return payload.mask(entries, cache)
-            masks = [ev(c) for c in payload]
-            if kind == "or":
-                return np.logical_or.reduce(masks)
-            return np.logical_and.reduce(masks)
+            if isinstance(node, _Leaf):
+                return node.mask(entries, arrays)
+            reduce = np.logical_or if node[0] == "or" else np.logical_and
+            return reduce.reduce([ev(k) for k in node[1]])
 
         return ev(self.root)
 
 
+_OPAQUE = _Leaf()
+
+
 @functools.lru_cache(maxsize=256)
-def _compiled(masked: str) -> _CompiledPredicate:
+def _compiled(predicate: str) -> _Predicate:
     """Parse once per distinct predicate: scoped_manifest calls
     candidate_files once per delta/shard header with the same predicate,
-    and a scan calls it again for the per-file pass — the tree and its
-    leaf regex classification are shared across all of them."""
-    return _CompiledPredicate(masked)
+    a scan calls it again for the per-file pass, and the row filter and
+    bucket projection read the same tree."""
+    return _Predicate(predicate)
 
 
 def _bucket_can_match(
@@ -922,7 +781,6 @@ def candidate_files(
     whose stats are keyed by the old physical name."""
     if not predicate or not isinstance(predicate, str):
         return list(entries)
-    masked = _mask_between(predicate)
     bucket_checks: list[tuple[str, list[int]]] = []
     if partition_fields:
         from demo_iceberg_permanent_delete_spark.lake.transforms import (
@@ -931,11 +789,11 @@ def candidate_files(
 
         bucket_checks = bucket_conjuncts(partition_fields, predicate)
     views = [_stats_view(e, aliases) for e in entries] if aliases else entries
-    # compiled evaluation: the predicate is parsed ONCE (LRU across calls)
-    # and numeric comparisons run as numpy passes over columnar bound
-    # arrays; non-numeric leaves evaluate per entry through the same
-    # scalar code as before (identical candidate sets by construction)
-    keep = _compiled(masked).mask(views)
+    # the predicate is parsed ONCE (LRU across calls) and its leaves run
+    # as numpy passes over columnar bound arrays; leaves outside their
+    # exactness evaluate per entry through the scalar reference
+    # (identical candidate sets by construction)
+    keep = _compiled(predicate).mask(views)
     out = []
     for i, e in enumerate(entries):
         if keep[i] and all(
@@ -953,16 +811,6 @@ _NOT_COLUMNS = frozenset(
     current_user user session_user current_catalog current_database
     current_schema""".split()
 )
-_IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-# a lone quoted string without escapes: Spark reads a backslash as an
-# escape and concatenates adjacent literals ('it''s' is 'its')
-_ROW_STR_RE = re.compile(r"^'([^'\\]*)'$")
-_ROW_INT_RE = re.compile(r"^-?\d+$")
-# an AND/OR with no operand on one side, which Spark refuses to parse
-# but _split_top would silently drop
-_DANGLING_RE = re.compile(
-    r"(?:^|\(|\b(?:AND|OR))\s*(?:AND|OR)\b|\b(?:AND|OR)\s*(?:\)|$)", re.I
-)
 _ROW_CMP = {
     "=": "equal",
     "<": "less",
@@ -972,82 +820,30 @@ _ROW_CMP = {
 }
 
 
-def _row_literal(text: str) -> tuple[str, Any] | None:
-    """('int', v), ('str', v), ('null', None), or None for any other
-    literal form (typed, float, escaped, hex, signed with a space)."""
-    text = text.strip()
-    if _ROW_INT_RE.match(text):
-        return "int", int(text)
-    m = _ROW_STR_RE.match(text)
-    if m:
-        return "str", m.group(1)
-    if text.upper() == "NULL":
-        return "null", None
-    return None
-
-
-def _row_leaf(leaf: str):
-    """One parsed leaf: ('cmp', col, op, lit) / ('between', col, lo, hi) /
-    ('in', col, lits) / ('null', col, negated), or None."""
-    m = _NULL_RE.match(leaf)
-    if m:
-        return "null", m.group("col"), bool(m.group("neg"))
-    m = _IN_RE.match(leaf)
-    if m:
-        items = _split_in_items(m.group("items"))
-        lits = [_row_literal(i) for i in items] if items is not None else [None]
-        if any(v is None for v in lits):
-            return None
-        return "in", m.group("col"), lits
-    m = _BETWEEN_RE.match(leaf)
-    if m:
-        lo, hi = _row_literal(m.group("lo")), _row_literal(m.group("hi"))
-        if lo is None or hi is None or "null" in (lo[0], hi[0]):
-            return None
-        return "between", m.group("col"), lo, hi
-    m = _CMP_RE.match(leaf)
-    if m:
-        lit = _row_literal(m.group("lit"))
-        if lit is None or lit[0] == "null":
-            return None
-        return "cmp", m.group("col"), m.group("op"), lit
-    return None
-
-
-def _row_tree(masked: str):
-    expr = _strip_parens(masked)
-    for op in ("OR", "AND"):
-        parts = _split_top(expr, op)
-        if len(parts) > 1:
-            kids = [_row_tree(p) for p in parts]
-            return None if None in kids else (op, kids)
-    leaf = _row_leaf(expr.replace(_BETWEEN_AND, "AND"))
-    if leaf is None or not _IDENT_RE.match(leaf[1]) or leaf[1].lower() in _NOT_COLUMNS:
-        return None
-    return leaf
-
-
-@functools.lru_cache(maxsize=256)
-def _row_filter_tree(predicate: str):
-    """The predicate's AND/OR tree of row_filter leaves, parsed once per
-    distinct predicate, or None when any part is outside its grammar."""
-    if _DANGLING_RE.search(re.sub(r"'[^']*'", "''", predicate)):
-        return None
-    return _row_tree(_mask_between(predicate))
-
-
-def _leaf_columns(node) -> set[str]:
-    if node[0] in ("OR", "AND"):
-        return set().union(*(_leaf_columns(k) for k in node[1]))
-    return {node[1]}
+def _row_leaf(leaf: _Leaf) -> bool:
+    """Whether row_filter translates ``leaf``: not opaque, its column a
+    plain ASCII name Spark resolves as a column, and each literal an
+    integer, a string spelled without ``''`` (so holding no quote), or
+    NULL in an IN list."""
+    col = leaf.col
+    return (
+        leaf.shape is not None
+        and col.isascii()
+        and col.lower() not in _NOT_COLUMNS
+        and all(
+            k == "int"
+            or (k == "str" and "'" not in v)
+            or (k == "null" and leaf.shape == "in")
+            for k, v in leaf.lits
+        )
+    )
 
 
 def row_filter_columns(predicate: str) -> frozenset[str] | None:
     """The columns row_filter reads for ``predicate``, or None when its
     grammar declines the predicate (column types are checked later, by
     row_filter against the table)."""
-    tree = _row_filter_tree(predicate)
-    return None if tree is None else frozenset(_leaf_columns(tree))
+    return _compiled(predicate).row_columns
 
 
 def row_filter(predicate: str, table):
@@ -1072,8 +868,8 @@ def row_filter(predicate: str, table):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tree = _row_filter_tree(predicate)
-    if tree is None:
+    parsed = _compiled(predicate)
+    if parsed.row_columns is None:
         return None
     schema = table.schema
     lower = [n.lower() for n in schema.names]
@@ -1101,36 +897,36 @@ def row_filter(predicate: str, table):
         return pa.scalar(v, typ)
 
     def ev(node):
-        if node[0] in ("OR", "AND"):
+        if not isinstance(node, _Leaf):
             masks = [ev(k) for k in node[1]]
             if any(m is None for m in masks):
                 return None
-            combine = pc.or_kleene if node[0] == "OR" else pc.and_kleene
+            combine = pc.or_kleene if node[0] == "or" else pc.and_kleene
             return functools.reduce(combine, masks)
-        col = column(node[1])
+        col = column(node.col)
         if col is None:
             return None
-        if node[0] == "null":
-            return pc.is_valid(col) if node[2] else pc.is_null(col)
+        if node.shape == "null":
+            return pc.is_valid(col) if node.neg else pc.is_null(col)
         typ = col.type
-        if node[0] == "cmp":
-            lit = scalar(node[3], typ)
-            return None if lit is None else getattr(pc, _ROW_CMP[node[2]])(col, lit)
-        if node[0] == "between":
-            lo, hi = scalar(node[2], typ), scalar(node[3], typ)
+        if node.shape == "cmp":
+            lit = scalar(node.lits[0], typ)
+            return None if lit is None else getattr(pc, _ROW_CMP[node.op])(col, lit)
+        if node.shape == "between":
+            lo, hi = (scalar(lit, typ) for lit in node.lits)
             if lo is None or hi is None:
                 return None
             return pc.and_kleene(pc.greater_equal(col, lo), pc.less_equal(col, hi))
         # IN: TRUE on a match; otherwise NULL when the value or a list
         # member is NULL, else FALSE
-        vals = [scalar(lit, typ) for lit in node[2] if lit[0] != "null"]
+        vals = [scalar(lit, typ) for lit in node.lits if lit[0] != "null"]
         if kind(typ) is None or any(v is None for v in vals):
             return None
         hit = pc.is_in(col, value_set=pa.array([v.as_py() for v in vals], typ))
         null = pa.scalar(None, pa.bool_())
         hit = pc.if_else(pc.is_valid(col), hit, null)
-        if len(vals) < len(node[2]):
+        if len(vals) < len(node.lits):
             hit = pc.if_else(hit, pa.scalar(True), null)
         return hit
 
-    return ev(tree)
+    return ev(parsed.root)

@@ -116,7 +116,9 @@ def plan_scan(
     (the purge's file groups, a commit's added or removed files); the
     predicate still prunes them. ``snap`` None reads them as written:
     no delete applies. ``schema`` (the declared StructType) is needed
-    for ``pushed`` only.
+    for ``pushed`` and for the collation rule: a predicate that reads a
+    string column Spark does not compare as plain bytes (collated, char,
+    varchar) prunes nothing, as min/max bounds order the bytes.
 
     The partition spec parse is lenient: an unknown legacy transform must
     not fail a read that the unpruned read serves, it just doesn't
@@ -126,11 +128,13 @@ def plan_scan(
         parse_partition_by,
     )
 
-    pushed = (
-        _pushed_columns(predicate, schema)
-        if predicate is not None and schema is not None
-        else None
-    )
+    pushed = None
+    if predicate is not None and schema is not None:
+        cols = {x.col for x in pruning._compiled(predicate).leaves if x.col}
+        if _byte_strings(schema, cols):
+            pushed = _pushed_columns(predicate, schema)
+        else:
+            predicate = None
     part_fields = (
         parse_partition_by(meta.partition_by, lenient=True) if predicate else None
     )
@@ -224,12 +228,26 @@ def _initial_defaults(meta, entry: ManifestEntry) -> tuple[tuple[str, Any], ...]
     return tuple(out)
 
 
+def _byte_strings(schema, cols) -> bool:
+    """Whether every string column of ``schema`` named in ``cols`` (as
+    Spark resolves names, ignoring case) compares as plain bytes: a
+    collated, char or varchar string does not."""
+    from pyspark.sql import types as T
+
+    lower = {c.lower() for c in cols}
+    return not any(
+        isinstance(f.dataType, (T.StringType, T.CharType, T.VarcharType))
+        and f.dataType != T.StringType()
+        for f in schema.fields
+        if f.name.lower() in lower
+    )
+
+
 def _pushed_columns(predicate: str, schema) -> frozenset[str] | None:
     """The columns ``predicate`` reads when pruning.row_filter translates
     it for ``schema``'s declared types, checked on an empty table of
-    those types before anything is read; else None. Collated, char and
-    varchar strings decline: Spark does not compare them as plain
-    bytes."""
+    those types before anything is read; else None. The caller has
+    checked that its strings compare as plain bytes (_byte_strings)."""
     import pyarrow as pa
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -243,12 +261,6 @@ def _pushed_columns(predicate: str, schema) -> frozenset[str] | None:
     if cols is None:
         return None
     fields = [f for f in schema.fields if f.name in cols]
-    if any(
-        isinstance(f.dataType, (T.StringType, T.CharType, T.VarcharType))
-        and f.dataType != T.StringType()
-        for f in fields
-    ):
-        return None
     try:
         typed = to_arrow_schema(T.StructType(fields)).empty_table()
     except (pa.ArrowException, TypeError, ValueError):

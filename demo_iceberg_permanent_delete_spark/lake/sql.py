@@ -62,7 +62,6 @@ from pyspark.sql import types as T
 
 from demo_iceberg_permanent_delete_spark.lake.catalog import Catalog
 from demo_iceberg_permanent_delete_spark.lake.pruning import (
-    _IDENT_RE,
     _NOT_COLUMNS,
     row_filter_columns,
 )
@@ -1848,7 +1847,7 @@ class LakeEngine:
             pushed is None
             or len({c.lower() for c in cols}) != len(cols)
             or any(
-                not _IDENT_RE.match(c)
+                not (c.isascii() and c.isidentifier())
                 or c.lower() in self._NOT_SELECT_COLUMNS
                 or c not in names
                 or lower.count(c.lower()) != 1

@@ -277,44 +277,27 @@ def bucket_conjuncts(
     """Project equality/IN literals on bucketed source columns into bucket
     space: ``[(part_column, [allowed bucket values])]``. Only provably-safe
     projections are returned (literal `col = lit` / `col IN (lits)` at the
-    top conjunct level); anything else contributes nothing."""
-    from demo_iceberg_permanent_delete_spark.lake.pruning import (
-        _parse_literal,
-        _split_conjuncts,
-        _split_in_items,
-    )
+    top conjunct level of the parsed predicate, pruning._compiled, with
+    integer or string literals); anything else contributes nothing. A
+    DATE/TIMESTAMP literal never projects: a bucket source is integral or
+    string, so Spark compares it through a cast ('2024-6-5' matches DATE
+    '2024-06-05')."""
+    from demo_iceberg_permanent_delete_spark.lake.pruning import _compiled
 
     buckets = {f.source: f for f in fields if f.transform == "bucket"}
     if not buckets:
         return []
-    conjuncts = _split_conjuncts(predicate)
-    if not conjuncts:
-        return []
     out: list[tuple[str, list[int]]] = []
-    for conj in conjuncts:
-        m = re.match(r"^\s*(?P<col>\w+)\s*=\s*(?P<lit>.+?)\s*$", conj)
-        items: list[str] | None = None
-        if m and m.group("col") in buckets:
-            items = [m.group("lit")]
-        else:
-            m = re.match(
-                r"^\s*(?P<col>\w+)\s+IN\s*\((?P<items>[^()]*)\)\s*$", conj, re.I
-            )
-            if m and m.group("col") in buckets:
-                items = _split_in_items(m.group("items"))
-        if not m or items is None:
+    for leaf in _compiled(predicate).conjuncts():
+        fld = buckets.get(leaf.col)
+        if (
+            fld is None
+            or not (leaf.shape == "in" or (leaf.shape == "cmp" and leaf.op == "="))
+            or any(k not in ("int", "str") for k, _ in leaf.lits)
+        ):
             continue
-        fld = buckets[m.group("col")]
-        vals: list[int] = []
-        ok = True
-        for item in items:
-            lit = _parse_literal(item)
-            if lit is None or isinstance(lit, float):
-                ok = False  # non-literal / float member → no sound projection
-                break
-            vals.append(bucket_of(lit, fld.arg))
-        if ok and vals:
-            out.append((fld.part_column, sorted(set(vals))))
+        vals = {bucket_of(v, fld.arg) for _, v in leaf.lits}
+        out.append((fld.part_column, sorted(vals)))
     return out
 
 

@@ -195,8 +195,7 @@ def test_vectorized_candidate_files_equals_scalar_property():
 
     from demo_iceberg_permanent_delete_spark.lake.metadata import ManifestEntry
     from demo_iceberg_permanent_delete_spark.lake.pruning import (
-        _expr_can_match,
-        _mask_between,
+        _compiled,
         candidate_files,
     )
 
@@ -271,6 +270,11 @@ def test_vectorized_candidate_files_equals_scalar_property():
                 "v = DATE '2024-06-15'",
                 "v < TIMESTAMP '2024-06-10 12:00:00'",
                 "other = 5",
+                # opaque leaves: kept by both evaluators
+                "NOT v = 1",
+                "abs(v) = 1",
+                "v = 1 + 1",
+                "v = 'a\\nb'",
             ]
         ),
     )
@@ -288,8 +292,8 @@ def test_vectorized_candidate_files_equals_scalar_property():
     def run(stats, pred):
         entries = [entry(i, s) for i, s in enumerate(stats)]
         got = {e.file_path for e in candidate_files(entries, pred)}
-        masked = _mask_between(pred)
-        want = {e.file_path for e in entries if _expr_can_match(e, masked)}
+        parsed = _compiled(pred)
+        want = {e.file_path for e in entries if parsed.can_match(e)}
         assert got == want, (pred, got ^ want)
 
     run()
